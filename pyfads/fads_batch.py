@@ -22,8 +22,6 @@ Two modes:
 
 from __future__ import annotations
 
-from typing import Iterable
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
@@ -35,238 +33,52 @@ from pyfads.schema import fads_output_schema
 __all__ = ["fads_generalize", "fads_generalize_partitioned", "run_fads_pandas"]
 
 
-def _assemble(pdf: pd.DataFrame, batches: Iterable[ReleasedBatch], cfg: FADSConfig) -> pd.DataFrame:
-    """Build the output frame: passthrough cols by released row position,
-    plus <qid>_lo/<qid>_hi columns."""
-    row_ids: list[int] = []
-    los: list[np.ndarray] = []
-    his: list[np.ndarray] = []
-    for b in batches:
-        row_ids.extend(b.row_ids)
-        los.extend(b.lo)
-        his.extend(b.hi)
-    idx = np.asarray(row_ids, dtype=np.int64)
-    lo_m = np.vstack(los) if los else np.empty((0, len(cfg.qid_cols)))
-    hi_m = np.vstack(his) if his else np.empty((0, len(cfg.qid_cols)))
-
-    out = {}
-    for col in pdf.columns:
-        if col in cfg.qid_cols:
-            continue
-        out[col] = pdf[col].to_numpy()[idx]
-    for j, q in enumerate(cfg.qid_cols):
-        out[f"{q}_lo"] = lo_m[:, j]
-        out[f"{q}_hi"] = hi_m[:, j]
-    # column order must match fads_output_schema: input order with each QID
-    # expanded in place
-    cols = []
-    for col in pdf.columns:
-        if col in cfg.qid_cols:
-            cols += [f"{col}_lo", f"{col}_hi"]
-        else:
-            cols.append(col)
-    return pd.DataFrame(out)[cols]
-
-
-def run_fads_pandas(
-    pdf: pd.DataFrame, cfg: FADSConfig, engine: str = "fast"
-) -> pd.DataFrame:
-    """Run the full FADS loop + flush over one pandas partition (one group).
-
-    ``engine='fast'`` (default) is the batch-specialized inner loop
-    (:func:`_process_batch`): identical semantics and bit-identical output
-    to the incremental :class:`pyfads.fads_core.FADSState` (``engine=
-    'state'``, which remains the streaming core), ~3x faster on large
-    partitions because global bounds are prefix-accumulated once and the
-    buffer is gathered by index instead of re-stacked per release.  The two
-    engines are pinned equal by ``tests/test_fads_batch.py`` and both are
-    checked against the independent pure-Python oracle.
-    """
-    pdf = pdf.sort_values([cfg.arrival_col, cfg.pid_col], kind="mergesort").reset_index(
-        drop=True
-    )
+def _frame_inputs(pdf: pd.DataFrame, cfg: FADSConfig):
+    """An arrival-sorted frame -> the engine inputs (qids, arrivals, pids,
+    legacy values); legacy values only in ``legacy_distance`` mode."""
     qids = pdf[list(cfg.qid_cols)].to_numpy(dtype=np.float64)
     arrivals = pdf[cfg.arrival_col].to_numpy(dtype=np.int64)
     pids = pdf[cfg.pid_col].to_numpy()
     legacy = None
     if cfg.legacy_distance:
-        lcols = list(cfg.legacy_distance_cols or cfg.qid_cols)
-        legacy = pdf[lcols].to_numpy(dtype=np.float64)
-    if engine == "fast":
-        released, tail = _process_batch(
-            np.arange(len(pdf)), qids, arrivals, pids, legacy, cfg
-        )
-    else:
-        state = FADSState(cfg)
-        released = state.process(
-            np.arange(len(pdf)), qids, arrivals, pids=pids, legacy_vals=legacy
-        )
-        tail = state.flush()
-    return _assemble(pdf, (released, tail), cfg)
+        legacy = pdf[list(cfg.legacy_distance_cols or cfg.qid_cols)].to_numpy(dtype=np.float64)
+    return qids, arrivals, pids, legacy
 
 
-def _process_batch(row_ids, qids, arrivals, pids, legacy_vals, cfg: FADSConfig):
-    """Batch-specialized FADS inner loop — the same per-row semantics as
-    ``FADSState.process`` + ``flush`` (G1-G12, G14; see pyfads/fads_core.py
-    for the reference file:line map), restructured for throughput:
+def _out_cols(input_cols, cfg: FADSConfig) -> list[str]:
+    """Output column order (as in fads_output_schema): input order with
+    each QID expanded in place into <col>_lo, <col>_hi."""
+    cols: list[str] = []
+    for c in input_cols:
+        cols += [f"{c}_lo", f"{c}_hi"] if c in cfg.qid_cols else [c]
+    return cols
 
-    - global min/max bounds (G2) are ``np.minimum/maximum.accumulate`` over
-      the whole partition up front — O(1) lookup per row instead of two
-      numpy calls per row;
-    - the buffer holds row *indices*; per release the QID block is one
-      fancy-index gather instead of ``np.stack`` over a deque of tuples;
-    - guarded divisions use ``np.divide(..., where=..., out=zeros)`` —
-      bit-identical results to the ``np.where`` forms in fads_core without
-      an ``np.errstate`` context switch per release;
-    - clusters live in parallel lists with a head pointer for TTL expiry
-      (creation times are nondecreasing), and fits/infoLoss/argmin run
-      vectorized over the live slice (first minimum == first-created wins,
-      matching the strict-< walk).
 
-    Every float op keeps the exact operation order of fads_core (division
-    by the range, mean over dims), so released intervals are bit-identical
-    — pinned by the engine-equivalence and golden-oracle tests.
-    """
-    n, d = qids.shape
-    B = cfg.buffer_rows
-    k1 = cfg.k - 1
-    reuse = cfg.reuse_ms
-    if legacy_vals is None:
-        legacy_vals = qids
-    glo_acc = np.minimum.accumulate(qids, axis=0) if n else qids
-    ghi_acc = np.maximum.accumulate(qids, axis=0) if n else qids
+def _assemble(
+    frame: pd.DataFrame, pos: np.ndarray, released: ReleasedBatch, cfg: FADSConfig, input_cols
+) -> pd.DataFrame:
+    """The output frame: passthrough ``input_cols`` of ``frame`` gathered at
+    the released rows' positions ``pos``, plus the released intervals as
+    <qid>_lo/<qid>_hi columns."""
+    out = {c: frame[c].to_numpy()[pos] for c in input_cols if c not in cfg.qid_cols}
+    for j, q in enumerate(cfg.qid_cols):
+        out[f"{q}_lo"] = released.lo[:, j]
+        out[f"{q}_hi"] = released.hi[:, j]
+    return pd.DataFrame(out, columns=_out_cols(input_cols, cfg))
 
-    buf: list[int] = []  # row indices, arrival order (G1)
-    cl_lo: list[np.ndarray] = []  # clusters in creation order (G3)
-    cl_hi: list[np.ndarray] = []
-    cl_created: list[int] = []
-    cl_head = 0
-    released = ReleasedBatch()
-    tail = ReleasedBatch()
-    glo = ghi = None  # current global bounds (views into the accumulates)
 
-    def best_fitting(q):
-        """G7+G8+G9 over the live clusters, vectorized; returns index into
-        cl_lo/cl_hi or -1."""
-        m = len(cl_lo) - cl_head
-        if m == 0:
-            return -1
-        los = np.asarray(cl_lo[cl_head:])
-        his = np.asarray(cl_hi[cl_head:])
-        fits = np.all(q > los, axis=1) & np.all(q < his, axis=1)
-        if not fits.any():
-            return -1
-        grange = ghi - glo
-        nz = grange > 0
-        diffs = his - los
-        ils = np.divide(diffs, grange, out=np.zeros_like(diffs), where=nz).mean(axis=1)
-        ils[~fits] = np.inf
-        return cl_head + int(np.argmin(ils))  # first min == first-created
-
-    def info_loss(lo, hi):
-        grange = ghi - glo
-        nz = grange > 0
-        diff = hi - lo
-        return float(
-            np.divide(diff, grange, out=np.zeros_like(diff), where=nz).mean()
-        )
-
-    def release_oldest(out: ReleasedBatch, now: int) -> None:
-        pivot = buf.pop(0)
-        q = qids[pivot]
-        if len(buf) < k1:
-            ci = best_fitting(q)
-            out.row_ids.append(row_ids[pivot])
-            if ci >= 0:
-                out.lo.append(cl_lo[ci])
-                out.hi.append(cl_hi[ci])
-            else:  # G11 suppress: snapshot of the current global bounds
-                out.lo.append(glo.copy())
-                out.hi.append(ghi.copy())
-            return
-
-        bidx = np.asarray(buf, dtype=np.int64)
-        buf_q = qids[bidx]
-        if cfg.legacy_distance:
-            # shipped-bug parity: (abs(delta)/hi)-lo, no zero guard
-            l_buf = legacy_vals[bidx]
-            lq = legacy_vals[pivot]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                per_dim = np.abs(l_buf - lq) / ghi - glo
-            dists = per_dim.mean(axis=1)
-        else:
-            grange = ghi - glo
-            nz = grange > 0
-            ad = np.abs(buf_q - q)
-            dists = np.divide(ad, grange, out=np.zeros_like(ad), where=nz).mean(axis=1)
-        if cfg.distinct_pids:
-            bpids = pids[bidx]
-            chosen: list[int] = []
-            seen: set = set()
-            for j in np.argsort(dists, kind="stable"):
-                pid = bpids[j]
-                if pid in seen:
-                    continue
-                seen.add(pid)
-                chosen.append(int(j))
-                if len(chosen) == k1:
-                    break
-            if len(chosen) < k1:
-                ci = best_fitting(q)
-                out.row_ids.append(row_ids[pivot])
-                if ci >= 0:
-                    out.lo.append(cl_lo[ci])
-                    out.hi.append(cl_hi[ci])
-                else:
-                    out.lo.append(glo.copy())
-                    out.hi.append(ghi.copy())
-                return
-            order = np.asarray(chosen)
-        else:
-            order = np.argsort(dists, kind="stable")[:k1]
-
-        nb_q = buf_q[order]
-        knn_lo = nb_q.min(axis=0)
-        knn_hi = nb_q.max(axis=0)
-
-        ci = best_fitting(q)
-        if ci >= 0 and info_loss(cl_lo[ci], cl_hi[ci]) < info_loss(knn_lo, knn_hi):
-            out.row_ids.append(row_ids[pivot])
-            out.lo.append(cl_lo[ci])
-            out.hi.append(cl_hi[ci])
-            return
-
-        nb_set = {int(j) for j in order}
-        kept: list[int] = []
-        for pos, ri in enumerate(buf):
-            if pos in nb_set:
-                out.row_ids.append(row_ids[ri])
-                out.lo.append(knn_lo)
-                out.hi.append(knn_hi)
-            else:
-                kept.append(ri)
-        buf[:] = kept
-        out.row_ids.append(row_ids[pivot])
-        out.lo.append(knn_lo)
-        out.hi.append(knn_hi)
-        cl_lo.append(knn_lo)
-        cl_hi.append(knn_hi)
-        cl_created.append(now)
-
-    now = 0
-    for i in range(n):
-        now = int(arrivals[i])
-        buf.append(i)
-        glo = glo_acc[i]
-        ghi = ghi_acc[i]
-        while cl_head < len(cl_created) and cl_created[cl_head] + reuse < now:
-            cl_head += 1
-        if len(buf) > B:
-            release_oldest(released, now)
-    # G14 end-of-stream flush: bounds frozen at the last row, no expiry
-    while buf:
-        release_oldest(tail, now)
-    return released, tail
+def run_fads_pandas(pdf: pd.DataFrame, cfg: FADSConfig) -> pd.DataFrame:
+    """Run the full FADS loop + flush over one pandas partition (one group):
+    one :class:`pyfads.fads_core.FADSState` ``process`` over the
+    arrival-sorted rows, then its ``flush``."""
+    pdf = pdf.sort_values([cfg.arrival_col, cfg.pid_col], kind="mergesort").reset_index(
+        drop=True
+    )
+    qids, arrivals, pids, legacy = _frame_inputs(pdf, cfg)
+    state = FADSState(cfg)
+    released = state.process(np.arange(len(pdf)), qids, arrivals, pids, legacy)
+    released = ReleasedBatch(*map(np.concatenate, zip(released, state.flush())))
+    return _assemble(pdf, released.row_ids, released, cfg, pdf.columns)
 
 
 def _check_cols(df: DataFrame, cfg: FADSConfig) -> None:

@@ -20,16 +20,31 @@ fits / infoLoss) with the paper-intended fixes recorded in SURVEY.md §2.5:
    ties break by creation order, first wins (the reference's PriorityQueue
    iteration order is an implementation detail).
 
-The per-release work is vectorized with numpy over the (tiny, <=
-``buffer_rows``) buffer, so the Python-level loop is O(n) with small
-constants — this is the hot path of the batch ``applyInPandas`` wrapper and
-of the streaming state handle.
+One :class:`FADSState` runs every FADS path: ``run_fads_pandas`` (batch,
+one ``process`` + ``flush`` per group) and the three streaming drivers (one
+``process`` per micro-batch, state carried between calls).  Each call is
+vectorized around the sequential per-row decision:
+
+- global min/max bounds (G2) are prefix-accumulated once per call — an
+  O(1) lookup per row;
+- the buffer is a list of row *positions*; per release the QID block is
+  one fancy-index gather;
+- clusters live in parallel lists with a head pointer for TTL expiry
+  (creation times are nondecreasing), and fits/infoLoss/argmin run
+  vectorized over the live slice (first minimum == first-created wins);
+- releases record a cluster index or a bounds-snapshot index, so the
+  released intervals are one gather at the end of the call.
+
+Between calls the state is small and plain: ``glo``/``ghi``, the <=
+``buffer_rows`` carried rows as ``(row_id, q, arrival, pid, legacy_q)``
+tuples, the live clusters and ``last_arrival``.  Feeding rows in any number
+of chunks releases exactly what one call releases.
 """
 
 from __future__ import annotations
 
-from collections import deque
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import numpy as np
 
@@ -39,21 +54,31 @@ __all__ = ["FADSState", "ReleasedBatch"]
 
 
 @dataclass
-class _Cluster:
-    """Axis-aligned QID bounding box + creation time (Cluster.java:14-15)."""
+class _Clusters:
+    """Live clusters in creation order (G3): axis-aligned QID bounding boxes
+    + creation time (Cluster.java:14-15), as parallel lists."""
 
-    lo: np.ndarray  # shape (d,)
-    hi: np.ndarray  # shape (d,)
-    created: int  # logical arrival clock at creation
-
-
-@dataclass
-class ReleasedBatch:
-    """Released rows: original row ids + the interval assigned to each."""
-
-    row_ids: list = field(default_factory=list)
-    lo: list = field(default_factory=list)  # list of (d,) arrays
+    lo: list = field(default_factory=list)  # (d,) arrays
     hi: list = field(default_factory=list)
+    created: list = field(default_factory=list)  # logical arrival clock
+
+    def __len__(self) -> int:
+        return len(self.created)
+
+
+class ReleasedBatch(NamedTuple):
+    """Released rows: row ids (n,) + the interval bounds of each, (n, d)."""
+
+    row_ids: np.ndarray
+    lo: np.ndarray
+    hi: np.ndarray
+
+
+def _carried(carried: tuple, new: np.ndarray) -> np.ndarray:
+    """One buffer column of the carried rows in front of the new rows'."""
+    if not carried:
+        return new
+    return np.concatenate([np.asarray(carried), new]) if len(new) else np.asarray(carried)
 
 
 class FADSState:
@@ -69,146 +94,11 @@ class FADSState:
         self.d = len(cfg.qid_cols)
         self.glo = np.full(self.d, np.inf)
         self.ghi = np.full(self.d, -np.inf)
-        # buffer of (row_id, qid (d,), arrival) in arrival order (G1)
-        self.buffer: deque = deque()
-        # live clusters in creation order (creation times are nondecreasing
-        # on the logical clock, so a deque pops expiry in order) (G3)
-        self.clusters: deque[_Cluster] = deque()
+        # carried rows (row_id, qid (d,), arrival, pid, legacy (d,)) in
+        # arrival order (G1), at most buffer_rows of them
+        self.buffer: list[tuple] = []
+        self.clusters = _Clusters()
         self.last_arrival: int = 0
-
-    # -- primitives -------------------------------------------------------
-
-    def _update_bounds(self, q: np.ndarray) -> None:
-        """G2 running global min/max (Generalizer.java:107-115)."""
-        np.minimum(self.glo, q, out=self.glo)
-        np.maximum(self.ghi, q, out=self.ghi)
-
-    def _expire_clusters(self, now: int) -> None:
-        """G3 TTL expiry (Generalizer.java:117-120)."""
-        reuse = self.cfg.reuse_ms
-        while self.clusters and self.clusters[0].created + reuse < now:
-            self.clusters.popleft()
-
-    def _info_loss(self, lo: np.ndarray, hi: np.ndarray) -> float:
-        """G8 (Cluster.java:79-85) with the zero-global-range guard."""
-        grange = self.ghi - self.glo
-        with np.errstate(invalid="ignore", divide="ignore"):
-            terms = np.where(grange > 0, (hi - lo) / grange, 0.0)
-        return float(terms.mean())
-
-    def _best_fitting_cluster(self, q: np.ndarray) -> _Cluster | None:
-        """G9 argmin infoLoss among strictly-fitting clusters
-        (Generalizer.java:230-243; fits: Cluster.java:55-62, strict)."""
-        best = None
-        best_il = np.inf
-        for c in self.clusters:
-            if np.all(q > c.lo) and np.all(q < c.hi):
-                il = self._info_loss(c.lo, c.hi)
-                if il < best_il:  # strict < : first-created wins ties
-                    best, best_il = c, il
-        return best
-
-    # -- release decision (G12, Generalizer.java:136-189) ------------------
-
-    def _release_without_cluster(self, out: ReleasedBatch, row_id, q) -> None:
-        """Reuse the best fitting old cluster, else suppress (the shared
-        fallback of Generalizer.java:140-149 and :177-188)."""
-        c = self._best_fitting_cluster(q)
-        if c is not None:
-            out.row_ids.append(row_id)
-            out.lo.append(c.lo)
-            out.hi.append(c.hi)
-        else:
-            # G11 suppress with a *snapshot* of the global bounds
-            out.row_ids.append(row_id)
-            out.lo.append(self.glo.copy())
-            out.hi.append(self.ghi.copy())
-
-    def _release_oldest(self, out: ReleasedBatch, now: int) -> None:
-        row_id, q, _arr, _pid, lq = self.buffer.popleft()
-        k1 = self.cfg.k - 1
-        if len(self.buffer) < k1:
-            # cannot form a new cluster: reuse best old cluster or suppress
-            self._release_without_cluster(out, row_id, q)
-            return
-
-        buf_q = np.stack([b[1] for b in self.buffer])  # (B, d)
-        if self.cfg.legacy_distance:
-            # shipped-bug parity (Generalizer.java:356): (abs(delta)/hi)-lo
-            # over the raw legacy fields, no zero guard; NaN/Inf flow
-            # through the stable argsort (NaN ordered last)
-            l_buf = np.stack([b[4] for b in self.buffer])
-            with np.errstate(invalid="ignore", divide="ignore"):
-                per_dim = np.abs(l_buf - lq) / self.ghi - self.glo
-            dists = per_dim.mean(axis=1)
-        else:
-            # G5 intended: k-1 nearest by mean over dims of abs(delta)/(ghi-glo)
-            grange = self.ghi - self.glo
-            with np.errstate(invalid="ignore", divide="ignore"):
-                per_dim = np.where(grange > 0, np.abs(buf_q - q) / grange, 0.0)
-            dists = per_dim.mean(axis=1)
-        if self.cfg.distinct_pids:
-            # Intended PID-uniqueness filter (Generalizer.java:205-216, the
-            # commented-out check): walk the stable distance order, greedily
-            # taking the nearest neighbour whose PID is not already among the
-            # chosen neighbours.  The pivot's own PID is NOT pre-excluded
-            # (the reference's uniqueKeys map starts empty).  If fewer than
-            # k-1 unique-PID neighbours exist, knn() returns null and the
-            # caller reuses an old cluster / suppresses; the buffer is
-            # untouched (Generalizer.java:177-188).
-            buf = list(self.buffer)
-            chosen: list[int] = []
-            seen: set = set()
-            for j in np.argsort(dists, kind="stable"):
-                pid = buf[j][3]
-                if pid in seen:
-                    continue
-                seen.add(pid)
-                chosen.append(int(j))
-                if len(chosen) == k1:
-                    break
-            if len(chosen) < k1:
-                self._release_without_cluster(out, row_id, q)
-                return
-            order = np.asarray(chosen)
-        else:
-            order = np.argsort(dists, kind="stable")[:k1]
-
-        # G6: cluster box over the k-1 *neighbours only* (the pivot is
-        # generalized with the neighbours' box even if it lies outside —
-        # shipped reference behavior, Generalizer.java:155,173)
-        nb_q = buf_q[order]
-        knn_lo = nb_q.min(axis=0)
-        knn_hi = nb_q.max(axis=0)
-
-        old = self._best_fitting_cluster(q)
-        if old is not None and self._info_loss(old.lo, old.hi) < self._info_loss(
-            knn_lo, knn_hi
-        ):
-            # reuse old cluster; neighbours stay buffered (Generalizer.java:162-165)
-            out.row_ids.append(row_id)
-            out.lo.append(old.lo)
-            out.hi.append(old.hi)
-            return
-
-        # release pivot + neighbours with the new cluster, cache it
-        # (Generalizer.java:166-176)
-        nb_set = set(order.tolist())
-        kept = deque()
-        for i, item in enumerate(self.buffer):
-            if i in nb_set:
-                out.row_ids.append(item[0])
-                out.lo.append(knn_lo)
-                out.hi.append(knn_hi)
-            else:
-                kept.append(item)
-        self.buffer = kept
-        out.row_ids.append(row_id)
-        out.lo.append(knn_lo)
-        out.hi.append(knn_hi)
-        self.clusters.append(_Cluster(knn_lo, knn_hi, now))
-
-    # -- public API --------------------------------------------------------
 
     def process(
         self, row_ids, qids: np.ndarray, arrivals, pids=None, legacy_vals=None
@@ -225,29 +115,181 @@ class FADSState:
         ``legacy_distance`` mode measures distances on; defaults to the
         QID vectors.
         """
-        out = ReleasedBatch()
-        B = self.cfg.buffer_rows
-        if pids is None:
-            pids = row_ids
-        qids = np.asarray(qids, dtype=np.float64)
-        if legacy_vals is None:
-            legacy_vals = qids
-        else:
-            legacy_vals = np.asarray(legacy_vals, dtype=np.float64)
-        for rid, q, arr, pid, lq in zip(row_ids, qids, arrivals, pids, legacy_vals):
-            arr = int(arr)
-            self.last_arrival = arr
-            self.buffer.append((rid, q, arr, pid, lq))
-            self._update_bounds(q)
-            self._expire_clusters(arr)
-            if len(self.buffer) > B:
-                self._release_oldest(out, arr)
-        return out
+        row_ids = np.asarray(row_ids)
+        qids = np.asarray(qids, dtype=np.float64).reshape(len(row_ids), self.d)
+        legacy = qids if legacy_vals is None else np.asarray(legacy_vals, dtype=np.float64)
+        pids = row_ids if pids is None else np.asarray(pids)
+        return self._run(row_ids, qids, np.asarray(arrivals, dtype=np.int64), pids, legacy, False)
 
     def flush(self) -> ReleasedBatch:
         """End-of-stream drain (reference close(), Generalizer.java:59-74)."""
-        out = ReleasedBatch()
+        none, q = np.empty(0, dtype=np.int64), np.empty((0, self.d))
+        return self._run(none, q, none, none, q, True)
+
+    def _run(self, row_ids, qids, arrivals, pids, legacy, drain: bool) -> ReleasedBatch:
+        cfg = self.cfg
+        B, k1, reuse = cfg.buffer_rows, cfg.k - 1, cfg.reuse_ms
+        n = len(qids)
+        # G2 running global bounds: row t = after the first t new rows
+        glo_acc = np.minimum.accumulate(np.vstack([self.glo, qids]), axis=0)
+        ghi_acc = np.maximum.accumulate(np.vstack([self.ghi, qids]), axis=0)
+        # row positions index the carried rows followed by the new ones
+        c = len(self.buffer)
+        cr, cq, ca, cp, cl = zip(*self.buffer) if c else ((),) * 5
+        row_ids, qids, arrivals = _carried(cr, row_ids), _carried(cq, qids), _carried(ca, arrivals)
+        pids, legacy = _carried(cp, pids), _carried(cl, legacy)
+
+        cl_lo, cl_hi, cl_created = self.clusters.lo, self.clusters.hi, self.clusters.created
+        head = 0  # first live cluster
+        buf = list(range(c))  # buffered row positions, arrival order (G1)
+        rel_pos: list[int] = []
+        # per released row: a cluster index, or -1 - t for a suppression
+        # snapshot of bounds row t
+        rel_box: list[int] = []
+        t = 0
+        glo, ghi = glo_acc[0], ghi_acc[0]
+
+        def best_fitting(q):
+            """G7+G8+G9 over the live clusters, vectorized: the index of the
+            fitting cluster with least infoLoss (Generalizer.java:230-243;
+            fits: Cluster.java:55-62, strict), or -1."""
+            if head == len(cl_lo):
+                return -1
+            los = np.asarray(cl_lo[head:])
+            his = np.asarray(cl_hi[head:])
+            fits = np.all(q > los, axis=1) & np.all(q < his, axis=1)
+            if not fits.any():
+                return -1
+            grange = ghi - glo
+            diffs = his - los
+            ils = np.divide(diffs, grange, out=np.zeros_like(diffs), where=grange > 0).mean(axis=1)
+            ils[~fits] = np.inf
+            return head + int(np.argmin(ils))  # first min == first-created
+
+        def info_loss(lo, hi):
+            """G8 (Cluster.java:79-85) with the zero-global-range guard."""
+            grange = ghi - glo
+            diff = hi - lo
+            return float(np.divide(diff, grange, out=np.zeros_like(diff), where=grange > 0).mean())
+
+        def release_without_cluster(pivot, q):
+            """Reuse the best fitting old cluster, else suppress with a
+            snapshot of the global bounds (G11) — the shared fallback of
+            Generalizer.java:140-149 and :177-188."""
+            ci = best_fitting(q)
+            rel_pos.append(pivot)
+            rel_box.append(ci if ci >= 0 else -1 - t)
+
+        def release_oldest(now: int) -> None:
+            """G12 release decision (Generalizer.java:136-189)."""
+            pivot = buf.pop(0)
+            q = qids[pivot]
+            if len(buf) < k1:
+                # cannot form a new cluster: reuse best old cluster or suppress
+                release_without_cluster(pivot, q)
+                return
+
+            bidx = np.asarray(buf, dtype=np.int64)
+            buf_q = qids[bidx]
+            if cfg.legacy_distance:
+                # shipped-bug parity (Generalizer.java:356): (abs(delta)/hi)-lo
+                # over the raw legacy fields, no zero guard; NaN/Inf flow
+                # through the stable argsort (NaN ordered last)
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    per_dim = np.abs(legacy[bidx] - legacy[pivot]) / ghi - glo
+                dists = per_dim.mean(axis=1)
+            else:
+                # G5 intended: k-1 nearest by mean over dims of abs(delta)/(ghi-glo)
+                grange = ghi - glo
+                ad = np.abs(buf_q - q)
+                dists = np.divide(ad, grange, out=np.zeros_like(ad), where=grange > 0).mean(axis=1)
+            if cfg.distinct_pids:
+                # Intended PID-uniqueness filter (Generalizer.java:205-216, the
+                # commented-out check): walk the stable distance order, greedily
+                # taking the nearest neighbour whose PID is not already among
+                # the chosen neighbours.  The pivot's own PID is NOT
+                # pre-excluded (the reference's uniqueKeys map starts empty).
+                # If fewer than k-1 unique-PID neighbours exist, knn() returns
+                # null and the caller reuses an old cluster / suppresses; the
+                # buffer is untouched (Generalizer.java:177-188).
+                bpids = pids[bidx]
+                chosen: list[int] = []
+                seen: set = set()
+                for j in np.argsort(dists, kind="stable"):
+                    pid = bpids[j]
+                    if pid in seen:
+                        continue
+                    seen.add(pid)
+                    chosen.append(int(j))
+                    if len(chosen) == k1:
+                        break
+                if len(chosen) < k1:
+                    release_without_cluster(pivot, q)
+                    return
+                order = np.asarray(chosen)
+            else:
+                order = np.argsort(dists, kind="stable")[:k1]
+
+            # G6: cluster box over the k-1 *neighbours only* (the pivot is
+            # generalized with the neighbours' box even if it lies outside —
+            # shipped reference behavior, Generalizer.java:155,173)
+            nb_q = buf_q[order]
+            knn_lo = nb_q.min(axis=0)
+            knn_hi = nb_q.max(axis=0)
+
+            ci = best_fitting(q)
+            if ci >= 0 and info_loss(cl_lo[ci], cl_hi[ci]) < info_loss(knn_lo, knn_hi):
+                # reuse old cluster; neighbours stay buffered (Generalizer.java:162-165)
+                rel_pos.append(pivot)
+                rel_box.append(ci)
+                return
+
+            # release pivot + neighbours with the new cluster, cache it
+            # (Generalizer.java:166-176)
+            ci = len(cl_lo)
+            nb_set = {int(j) for j in order}
+            kept: list[int] = []
+            for p, ri in enumerate(buf):
+                if p in nb_set:
+                    rel_pos.append(ri)
+                    rel_box.append(ci)
+                else:
+                    kept.append(ri)
+            buf[:] = kept
+            rel_pos.append(pivot)
+            rel_box.append(ci)
+            cl_lo.append(knn_lo)
+            cl_hi.append(knn_hi)
+            cl_created.append(now)
+
         now = self.last_arrival
-        while self.buffer:
-            self._release_oldest(out, now)
+        arr = arrivals.tolist()
+        for t in range(1, n + 1):
+            i = c + t - 1
+            now = arr[i]
+            buf.append(i)
+            glo, ghi = glo_acc[t], ghi_acc[t]
+            # G3 TTL expiry (Generalizer.java:117-120)
+            while head < len(cl_created) and cl_created[head] + reuse < now:
+                head += 1
+            if len(buf) > B:
+                release_oldest(now)
+        if drain:
+            # G14 end-of-stream flush: bounds frozen at the last row, no expiry
+            while buf:
+                release_oldest(now)
+
+        # gather the released intervals: cluster boxes, then bounds snapshots
+        m, d = len(cl_lo), self.d
+        box = np.asarray(rel_box, dtype=np.int64)
+        idx = np.where(box >= 0, box, m - 1 - box)
+        lo_tab = np.concatenate([np.asarray(cl_lo, dtype=np.float64).reshape(m, d), glo_acc])
+        hi_tab = np.concatenate([np.asarray(cl_hi, dtype=np.float64).reshape(m, d), ghi_acc])
+        out = ReleasedBatch(row_ids[np.asarray(rel_pos, dtype=np.int64)], lo_tab[idx], hi_tab[idx])
+
+        # write back: bounds, the kept rows, the live clusters
+        self.glo, self.ghi = glo_acc[-1].copy(), ghi_acc[-1].copy()
+        self.last_arrival = now
+        self.buffer = list(zip(row_ids[buf], qids[buf], arrivals[buf], pids[buf], legacy[buf]))
+        del cl_lo[:head], cl_hi[:head], cl_created[:head]
         return out

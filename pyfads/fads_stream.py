@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from pyfads.config import FADSConfig
+from pyfads.fads_batch import _assemble, _check_cols, _frame_inputs, _out_cols
 from pyfads.fads_core import FADSState
 from pyfads.schema import fads_output_schema
 
@@ -157,7 +158,8 @@ def encode_state(fads: FADSState, pending: pd.DataFrame | None) -> bytes:
             for rid, q, arr, pid, lq in fads.buffer
         ],
         "clusters": [
-            (c.lo.tolist(), c.hi.tolist(), int(c.created)) for c in fads.clusters
+            (lo.tolist(), hi.tolist(), int(created))
+            for lo, hi, created in zip(fads.clusters.lo, fads.clusters.hi, fads.clusters.created)
         ],
         "last_arrival": int(fads.last_arrival),
         "pending": pend,
@@ -168,8 +170,6 @@ def encode_state(fads: FADSState, pending: pd.DataFrame | None) -> bytes:
 def decode_state(blob: bytes, cfg: FADSConfig) -> tuple[FADSState, pd.DataFrame | None]:
     """Versioned blob -> live state.  ``cfg`` comes from the (current) query
     wiring, never from the checkpoint — config is code, state is data."""
-    from pyfads.fads_core import _Cluster
-
     doc = pickle.loads(blob)
     v = doc.get("v") if isinstance(doc, dict) else None
     if v != STATE_CODEC_VERSION:
@@ -186,9 +186,9 @@ def decode_state(blob: bytes, cfg: FADSConfig) -> tuple[FADSState, pd.DataFrame 
             (rid, np.asarray(q, dtype=np.float64), arr, pid, np.asarray(lq, dtype=np.float64))
         )
     for lo, hi, created in doc["clusters"]:
-        fads.clusters.append(
-            _Cluster(np.asarray(lo, dtype=np.float64), np.asarray(hi, dtype=np.float64), created)
-        )
+        fads.clusters.lo.append(np.asarray(lo, dtype=np.float64))
+        fads.clusters.hi.append(np.asarray(hi, dtype=np.float64))
+        fads.clusters.created.append(created)
     fads.last_arrival = doc["last_arrival"]
     pend = doc["pending"]
     if pend is None:
@@ -215,42 +215,24 @@ def _check_pid_unique(pending: pd.DataFrame, cfg: FADSConfig) -> None:
         )
 
 
-def _release_to_pdf(
-    released, pending: pd.DataFrame, cfg: FADSConfig, out_cols: list[str]
-) -> tuple[pd.DataFrame, pd.DataFrame]:
+def _release(
+    released, pending: pd.DataFrame | None, cfg: FADSConfig, input_cols: list[str]
+) -> tuple[pd.DataFrame, pd.DataFrame | None]:
     """Materialize a ReleasedBatch against the pending-row store.
 
     Returns (output frame, remaining pending rows).  ``released.row_ids``
     are ``cfg.pid_col`` values (globally unique), so releases may resolve
     rows buffered many micro-batches ago.
     """
-    if not released.row_ids:
-        return pd.DataFrame(columns=out_cols), pending
-    hit = pending.loc[released.row_ids]
-    out = {}
-    for col in pending.columns:
-        if col not in cfg.qid_cols:
-            out[col] = hit[col].to_numpy()
-    lo_m = np.vstack(released.lo)
-    hi_m = np.vstack(released.hi)
-    for j, q in enumerate(cfg.qid_cols):
-        out[f"{q}_lo"] = lo_m[:, j]
-        out[f"{q}_hi"] = hi_m[:, j]
-    remaining = pending.drop(index=released.row_ids)
-    return pd.DataFrame(out)[out_cols], remaining
+    if not len(released.row_ids):
+        return pd.DataFrame(columns=_out_cols(input_cols, cfg)), pending
+    pos = pending.index.get_indexer(released.row_ids)
+    keep = np.ones(len(pending), dtype=bool)
+    keep[pos] = False
+    return _assemble(pending, pos, released, cfg, input_cols), pending[keep]
 
 
-def _out_cols(input_cols: list[str], cfg: FADSConfig) -> list[str]:
-    cols: list[str] = []
-    for c in input_cols:
-        if c in cfg.qid_cols:
-            cols += [f"{c}_lo", f"{c}_hi"]
-        else:
-            cols.append(c)
-    return cols
-
-
-def _ingest_batch(fads, pending, pdf, cfg, out_cols):
+def _ingest_batch(fads, pending, pdf, cfg, input_cols):
     """The ordering-contract-critical ingest sequence, shared by every
     streaming driver (G1): restore arrival order within the batch via a
     stable (arrival, pid) mergesort, key the pending store by pid, enforce
@@ -261,25 +243,21 @@ def _ingest_batch(fads, pending, pdf, cfg, out_cols):
     pdf.index = pdf[cfg.pid_col]
     pending = pdf if pending is None else pd.concat([pending, pdf])
     _check_pid_unique(pending, cfg)
-    released = fads.process(
-        pdf[cfg.pid_col].to_numpy(),
-        pdf[list(cfg.qid_cols)].to_numpy(dtype=np.float64),
-        pdf[cfg.arrival_col].to_numpy(dtype=np.int64),
-    )
-    return _release_to_pdf(released, pending, cfg, out_cols)
+    qids, arrivals, pids, legacy = _frame_inputs(pdf, cfg)
+    released = fads.process(pids, qids, arrivals, legacy_vals=legacy)
+    return _release(released, pending, cfg, input_cols)
 
 
 def make_stream_handler(cfg: FADSConfig, input_cols: list[str], flush_after_ms: int):
     """The applyInPandasWithState handler (exposed for direct unit testing
     with a fake GroupState)."""
-    out_cols = _out_cols(input_cols, cfg)
 
     def handle(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
             # G14: idle timeout == end-of-stream flush (reference close())
             if state.exists:
                 fads, pending = decode_state(state.get[0], cfg)
-                out, _ = _release_to_pdf(fads.flush(), pending, cfg, out_cols)
+                out, _ = _release(fads.flush(), pending, cfg, input_cols)
                 state.remove()
                 if len(out):
                     yield out
@@ -296,7 +274,7 @@ def make_stream_handler(cfg: FADSConfig, input_cols: list[str], flush_after_ms: 
         chunks = [p for p in pdf_iter if len(p)]
         if chunks:
             out, pending = _ingest_batch(
-                fads, pending, pd.concat(chunks, ignore_index=True), cfg, out_cols
+                fads, pending, pd.concat(chunks, ignore_index=True), cfg, input_cols
             )
             if len(out):
                 yield out
@@ -321,6 +299,7 @@ def fads_generalize_stream(
     group goes idle for ``flush_after_ms`` of processing time → buffer is
     drained and state dropped (G14).
     """
+    _check_cols(df, cfg)
     if not HAS_APPLY_IN_PANDAS_WITH_STATE:  # pragma: no cover
         raise NotImplementedError(
             "applyInPandasWithState unavailable; use ForeachBatchFADS"
@@ -354,7 +333,7 @@ class FADSStatefulProcessor(StatefulProcessor):
 
     def __init__(self, cfg: FADSConfig, input_cols: list[str], flush_after_ms: int):
         self.cfg = cfg
-        self.out_cols = _out_cols(input_cols, cfg)
+        self.input_cols = input_cols
         self.flush_after_ms = flush_after_ms
 
     def init(self, handle) -> None:
@@ -373,7 +352,7 @@ class FADSStatefulProcessor(StatefulProcessor):
         chunks = [p for p in rows if len(p)]
         if chunks:
             out, pending = _ingest_batch(
-                fads, pending, pd.concat(chunks, ignore_index=True), cfg, self.out_cols
+                fads, pending, pd.concat(chunks, ignore_index=True), cfg, self.input_cols
             )
             if len(out):
                 yield out
@@ -390,7 +369,7 @@ class FADSStatefulProcessor(StatefulProcessor):
         blob = self.state.get()
         if blob is not None:
             fads, pending = decode_state(blob[0], self.cfg)
-            out, _ = _release_to_pdf(fads.flush(), pending, self.cfg, self.out_cols)
+            out, _ = _release(fads.flush(), pending, self.cfg, self.input_cols)
             self.state.clear()
             if len(out):
                 yield out
@@ -413,6 +392,7 @@ def fads_generalize_stream_tws(
         spark.conf.set("spark.sql.streaming.stateStore.providerClass",
                        ROCKSDB_PROVIDER)
     """
+    _check_cols(df, cfg)
     if not HAS_TRANSFORM_WITH_STATE:  # pragma: no cover
         raise NotImplementedError(
             "transformWithStateInPandas unavailable; use fads_generalize_stream"
@@ -462,7 +442,7 @@ class ForeachBatchFADS:
         self.fads = FADSState(cfg)
         self.pending: pd.DataFrame | None = None
         self.outputs: list[pd.DataFrame] = []
-        self._out_cols: list[str] | None = None
+        self._input_cols: list[str] = []
         self._last_batch_id: int | None = None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -473,12 +453,11 @@ class ForeachBatchFADS:
         # idempotency idiom is to skip already-seen ids (r11 advice)
         if self._last_batch_id is not None and batch_id <= self._last_batch_id:
             return
-        if self._out_cols is None:
-            self._out_cols = _out_cols(batch_df.columns, cfg)
+        self._input_cols = self._input_cols or batch_df.columns
         pdf = batch_df.toPandas()
         if len(pdf):
             out, self.pending = _ingest_batch(
-                self.fads, self.pending, pdf, cfg, self._out_cols
+                self.fads, self.pending, pdf, cfg, self._input_cols
             )
             if len(out):
                 self.outputs.append(out)
@@ -490,7 +469,7 @@ class ForeachBatchFADS:
 
     def flush(self) -> pd.DataFrame:
         """G14 end-of-stream drain (reference close(), Generalizer.java:59-74)."""
-        out, self.pending = _release_to_pdf(
-            self.fads.flush(), self.pending, self.cfg, self._out_cols or []
+        out, self.pending = _release(
+            self.fads.flush(), self.pending, self.cfg, self._input_cols
         )
         return out

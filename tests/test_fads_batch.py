@@ -8,7 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyfads import FADSConfig, fads_generalize, fads_generalize_partitioned
-from pyfads.fads_batch import run_fads_pandas
+from pyfads.fads_batch import _assemble, _frame_inputs, run_fads_pandas
+from pyfads.fads_core import FADSState, ReleasedBatch
+from pyfads.fads_stream import fads_generalize_stream
 from pyfads.oracle import fads_oracle
 
 from tests.conftest import SF_DIR
@@ -297,10 +299,9 @@ def test_partitioned_hot_key_salting(spark):
 # -- legacy (shipped-bug-parity) distance mode ------------------------------
 
 
-def test_legacy_distance_core_matches_oracle():
-    """Dual-implementation agreement with the shipped (abs/hi)-lo distance,
-    including distinct legacy columns standing in for the reference's raw
-    fields 0..d-1."""
+def legacy_pdf() -> pd.DataFrame:
+    """Rows with raw0/raw1 columns standing in for the reference's raw
+    fields 0..d-1 of the legacy distance."""
     rng = np.random.default_rng(5)
     n = 300
     pdf = pd.DataFrame(
@@ -314,6 +315,15 @@ def test_legacy_distance_core_matches_oracle():
         }
     )
     pdf["arrival_ms"] = pdf["ts_millis"].astype(np.int64)
+    return pdf
+
+
+def test_legacy_distance_core_matches_oracle():
+    """Dual-implementation agreement with the shipped (abs/hi)-lo distance,
+    including distinct legacy columns standing in for the reference's raw
+    fields 0..d-1."""
+    pdf = legacy_pdf()
+    n = len(pdf)
     for lcols in (None, ("raw0", "raw1")):
         cfg = FADSConfig(
             k=4, buffer_rows=10, reuse_ms=100_000,
@@ -364,10 +374,11 @@ def test_legacy_distance_cols_validation():
     [{}, {"distinct_pids": True}, {"legacy_distance": True}],
     ids=["intended", "distinct_pids", "legacy_distance"],
 )
-def test_fast_engine_bit_identical_to_state(spark, kw):
-    """The batch-specialized inner loop (engine='fast', the default) emits
-    byte-for-byte the same frame as the incremental streaming core
-    (engine='state') in every distance/filter mode."""
+def test_chunked_process_bit_identical_to_one_shot(spark, kw):
+    """Resumability contract of the one FADS engine: feeding the rows to
+    ``FADSState.process`` in several chunks, then ``flush``, emits
+    byte-for-byte the frame of one ``process`` + ``flush`` over all rows
+    (``run_fads_pandas``), in every distance/filter mode."""
     pdf = _events_pdf(spark)
     cfg = FADSConfig(
         k=5,
@@ -378,12 +389,45 @@ def test_fast_engine_bit_identical_to_state(spark, kw):
         arrival_col="arrival_ms",
         **kw,
     )
-    fast = run_fads_pandas(pdf, cfg, engine="fast")
-    state = run_fads_pandas(pdf, cfg, engine="state")
-    cols = list(fast.columns)
-    assert cols == list(state.columns)
-    pd.testing.assert_frame_equal(
-        fast.sort_values(cols).reset_index(drop=True),
-        state.sort_values(cols).reset_index(drop=True),
-        check_exact=True,
+    one_shot = run_fads_pandas(pdf, cfg)
+    pdf = pdf.sort_values(["arrival_ms", "event_id"], kind="mergesort").reset_index(drop=True)
+    qids, arrivals, pids, legacy = _frame_inputs(pdf, cfg)
+    for n_chunks in (2, 7, 61):
+        state = FADSState(cfg)
+        parts = [
+            state.process(
+                idx, qids[idx], arrivals[idx], pids[idx], None if legacy is None else legacy[idx]
+            )
+            for idx in np.array_split(np.arange(len(pdf)), n_chunks)
+        ]
+        released = ReleasedBatch(*map(np.concatenate, zip(*parts, state.flush())))
+        chunked = _assemble(pdf, released.row_ids, released, cfg, pdf.columns)
+        pd.testing.assert_frame_equal(one_shot, chunked, check_exact=True)
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        fads_generalize,
+        lambda df, cfg: fads_generalize_partitioned(df, cfg, "event_type"),
+        fads_generalize_stream,
+    ],
+    ids=["fads_generalize", "fads_generalize_partitioned", "fads_generalize_stream"],
+)
+def test_missing_input_column_fails_at_build(spark, build, tmp_path):
+    """A missing QID, pid, arrival or legacy-distance column is a ValueError
+    when the query is built, not a Python-worker failure mid-query."""
+    path = str(tmp_path / "events")
+    _events_df(spark).write.parquet(path)
+    df = spark.read.parquet(path)
+    if build is fads_generalize_stream:
+        df = spark.readStream.schema(df.schema).parquet(path)
+    for missing in ("value", "event_id", "arrival_ms"):
+        with pytest.raises(ValueError, match=missing):
+            build(df.drop(missing), CFG)
+    legacy = FADSConfig(
+        **{**CFG.__dict__, "legacy_distance": True,
+           "legacy_distance_cols": ("user_id", "value", "raw_ts")}
     )
+    with pytest.raises(ValueError, match="raw_ts"):
+        build(df, legacy)

@@ -28,6 +28,7 @@ from pyfads.fads_stream import (
     make_stream_handler,
 )
 from pyfads.io import events_with_arrival
+from tests.test_fads_batch import legacy_pdf
 
 SF_DIR = "/root/testdata/sf0.001"
 N_CHUNKS = 3
@@ -202,24 +203,38 @@ class FakeState:
         pass
 
 
-def test_timeout_flush_drains_buffer(events_pdf):
+@pytest.mark.parametrize("mode", ["intended", "legacy_distance_cols"])
+def test_timeout_flush_drains_buffer(events_pdf, mode):
     """G14: the idle-timeout path emits exactly the buffered tail with the
-    same intervals the batch flush assigns."""
-    cfg = _cfg()
+    same intervals the batch flush assigns — also when the legacy distance
+    reads columns other than the QIDs."""
+    if mode == "intended":
+        cfg, pdf = _cfg(), events_pdf
+    else:
+        cfg = FADSConfig(
+            k=4, buffer_rows=10, reuse_ms=100_000,
+            qid_cols=("user_id", "value"),
+            pid_col="event_id", arrival_col="arrival_ms",
+            legacy_distance=True, legacy_distance_cols=("raw0", "raw1"),
+        )
+        pdf = legacy_pdf()
 
-    handler = make_stream_handler(cfg, list(events_pdf.columns), 1000)
+    handler = make_stream_handler(cfg, list(pdf.columns), 1000)
     st = FakeState()
-    released = list(handler((1,), iter([events_pdf]), st))
+    released = list(handler((1,), iter([pdf]), st))
     assert st.exists  # buffer carried in state
 
     st.hasTimedOut = True
     flushed = list(handler((1,), iter([]), st))
     assert st.removed
     tail = pd.concat(flushed)
-    assert len(tail) == cfg.buffer_rows
+    if mode == "intended":
+        assert len(tail) == cfg.buffer_rows
+    else:  # the last release may have taken k rows out of a full buffer
+        assert 0 < len(tail) <= cfg.buffer_rows
 
     # batch run == stream releases + stream flush, row for row
-    batch = run_fads_pandas(events_pdf, cfg)
+    batch = run_fads_pandas(pdf, cfg)
     stream_all = pd.concat([*released, tail])
     b = batch.sort_values("event_id").reset_index(drop=True)
     s = stream_all[b.columns].sort_values("event_id").reset_index(drop=True)
