@@ -29,21 +29,25 @@ vectorized around the sequential per-row decision:
   O(1) lookup per row;
 - the buffer is a list of row *positions*; per release the QID block is
   one fancy-index gather;
-- clusters live in parallel lists with a head pointer for TTL expiry
-  (creation times are nondecreasing), and fits/infoLoss/argmin run
-  vectorized over the live slice (first minimum == first-created wins);
+- clusters live in one preallocated array table per call — ``(cap, d)``
+  lo / hi / width blocks, ``cap`` = carried clusters + rows // k + 1, since
+  each new cluster consumes k buffered rows — appended by row assignment,
+  with a head pointer for TTL expiry (creation times are nondecreasing);
+  fits/infoLoss/argmin run vectorized over the live ``[head:m]`` view
+  (first minimum == first-created wins);
 - releases record a cluster index or a bounds-snapshot index, so the
   released intervals are one gather at the end of the call.
 
 Between calls the state is small and plain: ``glo``/``ghi``, the <=
 ``buffer_rows`` carried rows as ``(row_id, q, arrival, pid, legacy_q)``
-tuples, the live clusters and ``last_arrival``.  Feeding rows in any number
-of chunks releases exactly what one call releases.
+tuples, the live clusters as ``(m, d)`` lo/hi arrays + ``(m,)`` creation
+times, and ``last_arrival``.  Feeding rows in any number of chunks
+releases exactly what one call releases.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import NamedTuple
 
 import numpy as np
@@ -56,11 +60,15 @@ __all__ = ["FADSState", "ReleasedBatch"]
 @dataclass
 class _Clusters:
     """Live clusters in creation order (G3): axis-aligned QID bounding boxes
-    + creation time (Cluster.java:14-15), as parallel lists."""
+    + creation time (Cluster.java:14-15), one row per cluster."""
 
-    lo: list = field(default_factory=list)  # (d,) arrays
-    hi: list = field(default_factory=list)
-    created: list = field(default_factory=list)  # logical arrival clock
+    lo: np.ndarray  # (m, d)
+    hi: np.ndarray  # (m, d)
+    created: np.ndarray  # (m,) int64, logical arrival clock
+
+    @classmethod
+    def empty(cls, d: int) -> _Clusters:
+        return cls(np.empty((0, d)), np.empty((0, d)), np.empty(0, dtype=np.int64))
 
     def __len__(self) -> int:
         return len(self.created)
@@ -97,7 +105,7 @@ class FADSState:
         # carried rows (row_id, qid (d,), arrival, pid, legacy (d,)) in
         # arrival order (G1), at most buffer_rows of them
         self.buffer: list[tuple] = []
-        self.clusters = _Clusters()
+        self.clusters = _Clusters.empty(self.d)
         self.last_arrival: int = 0
 
     def process(
@@ -139,7 +147,15 @@ class FADSState:
         row_ids, qids, arrivals = _carried(cr, row_ids), _carried(cq, qids), _carried(ca, arrivals)
         pids, legacy = _carried(cp, pids), _carried(cl, legacy)
 
-        cl_lo, cl_hi, cl_created = self.clusters.lo, self.clusters.hi, self.clusters.created
+        # the cluster table: carried clusters, then room for every cluster
+        # this call can create (each consumes k buffered rows); the width
+        # hi - lo is stored once per cluster
+        m = len(self.clusters)
+        cap = m + (c + n) // cfg.k + 1
+        cl_lo, cl_hi, cl_wid = (np.empty((cap, self.d)) for _ in range(3))
+        cl_lo[:m], cl_hi[:m] = self.clusters.lo, self.clusters.hi
+        cl_wid[:m] = cl_hi[:m] - cl_lo[:m]
+        born = self.clusters.created.tolist()  # plain ints for the TTL test
         head = 0  # first live cluster
         buf = list(range(c))  # buffered row positions, arrival order (G1)
         rel_pos: list[int] = []
@@ -153,23 +169,21 @@ class FADSState:
             """G7+G8+G9 over the live clusters, vectorized: the index of the
             fitting cluster with least infoLoss (Generalizer.java:230-243;
             fits: Cluster.java:55-62, strict), or -1."""
-            if head == len(cl_lo):
+            if head == m:
                 return -1
-            los = np.asarray(cl_lo[head:])
-            his = np.asarray(cl_hi[head:])
-            fits = np.all(q > los, axis=1) & np.all(q < his, axis=1)
+            fits = np.all(q > cl_lo[head:m], axis=1) & np.all(q < cl_hi[head:m], axis=1)
             if not fits.any():
                 return -1
             grange = ghi - glo
-            diffs = his - los
+            diffs = cl_wid[head:m]
             ils = np.divide(diffs, grange, out=np.zeros_like(diffs), where=grange > 0).mean(axis=1)
             ils[~fits] = np.inf
             return head + int(np.argmin(ils))  # first min == first-created
 
-        def info_loss(lo, hi):
-            """G8 (Cluster.java:79-85) with the zero-global-range guard."""
+        def info_loss(diff):
+            """G8 (Cluster.java:79-85) of a box of width ``diff``, with the
+            zero-global-range guard."""
             grange = ghi - glo
-            diff = hi - lo
             return float(np.divide(diff, grange, out=np.zeros_like(diff), where=grange > 0).mean())
 
         def release_without_cluster(pivot, q):
@@ -182,6 +196,7 @@ class FADSState:
 
         def release_oldest(now: int) -> None:
             """G12 release decision (Generalizer.java:136-189)."""
+            nonlocal m
             pivot = buf.pop(0)
             q = qids[pivot]
             if len(buf) < k1:
@@ -236,9 +251,10 @@ class FADSState:
             nb_q = buf_q[order]
             knn_lo = nb_q.min(axis=0)
             knn_hi = nb_q.max(axis=0)
+            knn_wid = knn_hi - knn_lo
 
             ci = best_fitting(q)
-            if ci >= 0 and info_loss(cl_lo[ci], cl_hi[ci]) < info_loss(knn_lo, knn_hi):
+            if ci >= 0 and info_loss(cl_wid[ci]) < info_loss(knn_wid):
                 # reuse old cluster; neighbours stay buffered (Generalizer.java:162-165)
                 rel_pos.append(pivot)
                 rel_box.append(ci)
@@ -246,7 +262,7 @@ class FADSState:
 
             # release pivot + neighbours with the new cluster, cache it
             # (Generalizer.java:166-176)
-            ci = len(cl_lo)
+            ci = m
             nb_set = {int(j) for j in order}
             kept: list[int] = []
             for p, ri in enumerate(buf):
@@ -258,9 +274,9 @@ class FADSState:
             buf[:] = kept
             rel_pos.append(pivot)
             rel_box.append(ci)
-            cl_lo.append(knn_lo)
-            cl_hi.append(knn_hi)
-            cl_created.append(now)
+            cl_lo[m], cl_hi[m], cl_wid[m] = knn_lo, knn_hi, knn_wid
+            born.append(now)
+            m += 1
 
         now = self.last_arrival
         arr = arrivals.tolist()
@@ -270,7 +286,7 @@ class FADSState:
             buf.append(i)
             glo, ghi = glo_acc[t], ghi_acc[t]
             # G3 TTL expiry (Generalizer.java:117-120)
-            while head < len(cl_created) and cl_created[head] + reuse < now:
+            while head < m and born[head] + reuse < now:
                 head += 1
             if len(buf) > B:
                 release_oldest(now)
@@ -280,16 +296,18 @@ class FADSState:
                 release_oldest(now)
 
         # gather the released intervals: cluster boxes, then bounds snapshots
-        m, d = len(cl_lo), self.d
         box = np.asarray(rel_box, dtype=np.int64)
         idx = np.where(box >= 0, box, m - 1 - box)
-        lo_tab = np.concatenate([np.asarray(cl_lo, dtype=np.float64).reshape(m, d), glo_acc])
-        hi_tab = np.concatenate([np.asarray(cl_hi, dtype=np.float64).reshape(m, d), ghi_acc])
+        lo_tab = np.concatenate([cl_lo[:m], glo_acc])
+        hi_tab = np.concatenate([cl_hi[:m], ghi_acc])
         out = ReleasedBatch(row_ids[np.asarray(rel_pos, dtype=np.int64)], lo_tab[idx], hi_tab[idx])
 
-        # write back: bounds, the kept rows, the live clusters
+        # write back: bounds, the kept rows, the live clusters (copied out of
+        # the call's table, so the table's spare capacity is freed)
         self.glo, self.ghi = glo_acc[-1].copy(), ghi_acc[-1].copy()
         self.last_arrival = now
         self.buffer = list(zip(row_ids[buf], qids[buf], arrivals[buf], pids[buf], legacy[buf]))
-        del cl_lo[:head], cl_hi[:head], cl_created[:head]
+        self.clusters = _Clusters(
+            cl_lo[head:m].copy(), cl_hi[head:m].copy(), np.array(born[head:], dtype=np.int64)
+        )
         return out

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from pyfads.config import FADSConfig
 from pyfads.fads_batch import _assemble, _check_cols, _frame_inputs, _out_cols
-from pyfads.fads_core import FADSState
+from pyfads.fads_core import FADSState, _Clusters
 from pyfads.schema import fads_output_schema
 
 try:  # Spark >= 3.4
@@ -149,6 +149,7 @@ def encode_state(fads: FADSState, pending: pd.DataFrame | None) -> bytes:
             "data": {c: _encode_col(pending[c]) for c in pending.columns},
             "index_col": pending.index.name,
         }
+    cl = fads.clusters
     doc = {
         "v": STATE_CODEC_VERSION,
         "glo": fads.glo.tolist(),
@@ -157,10 +158,7 @@ def encode_state(fads: FADSState, pending: pd.DataFrame | None) -> bytes:
             (_py(rid), [float(x) for x in q], int(arr), _py(pid), [float(x) for x in lq])
             for rid, q, arr, pid, lq in fads.buffer
         ],
-        "clusters": [
-            (lo.tolist(), hi.tolist(), int(created))
-            for lo, hi, created in zip(fads.clusters.lo, fads.clusters.hi, fads.clusters.created)
-        ],
+        "clusters": list(zip(cl.lo.tolist(), cl.hi.tolist(), cl.created.tolist())),
         "last_arrival": int(fads.last_arrival),
         "pending": pend,
     }
@@ -185,10 +183,13 @@ def decode_state(blob: bytes, cfg: FADSConfig) -> tuple[FADSState, pd.DataFrame 
         fads.buffer.append(
             (rid, np.asarray(q, dtype=np.float64), arr, pid, np.asarray(lq, dtype=np.float64))
         )
-    for lo, hi, created in doc["clusters"]:
-        fads.clusters.lo.append(np.asarray(lo, dtype=np.float64))
-        fads.clusters.hi.append(np.asarray(hi, dtype=np.float64))
-        fads.clusters.created.append(created)
+    if doc["clusters"]:
+        lo, hi, created = zip(*doc["clusters"])
+        fads.clusters = _Clusters(
+            np.asarray(lo, dtype=np.float64),
+            np.asarray(hi, dtype=np.float64),
+            np.asarray(created, dtype=np.int64),
+        )
     fads.last_arrival = doc["last_arrival"]
     pend = doc["pending"]
     if pend is None:

@@ -510,7 +510,7 @@ def taxi_job_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 next_fallback = 0.0
                 while _time.time() < deadline:
                     lp = q.lastProgress
-                    bid = lp["batchId"] if lp else -1
+                    bid = lp.get("batchId", -1) if lp else -1
                     now = _time.time()
                     if bid != seen_bid or now >= next_fallback:
                         seen_bid = bid
@@ -537,13 +537,13 @@ def taxi_job_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # entry's 11.6 s was this fixed tax).  A batchId advance
                 # means the batch in flight at decision time has committed.
                 lp = q.lastProgress
-                start_bid = lp["batchId"] if lp else -1
+                start_bid = lp.get("batchId", -1) if lp else -1
                 settle = _time.time() + 5
                 while _time.time() < settle:
                     if not q.status.get("isTriggerActive"):
                         break
                     lp = q.lastProgress
-                    if lp and lp["batchId"] > start_bid:
+                    if lp and lp.get("batchId", -1) > start_bid:
                         break
                     _time.sleep(0.05)
             finally:

@@ -955,6 +955,10 @@ def _flat_structs_sql(n_cents: int, dim: int) -> str:
     20-43 s when 32 tasks pay concurrent codegen + python-worker setup —
     the r12 dedup_semantic_docs 48 s regression), while this expression
     is map-only JVM codegen with no Python boundary at all (guide §4)."""
+    if n_cents < 1:
+        # sequence(0, -1) counts DOWN to [0, -1]: negative slice offsets,
+        # not an empty array
+        raise ValueError("_flat_structs_sql: empty codebook (n_cents < 1)")
     dot = (
         f"aggregate(zip_with(`__v`, slice(`__cb`, __j * {dim} + 1, {dim}), "
         "(__x, __y) -> CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE)), "

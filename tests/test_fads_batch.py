@@ -405,6 +405,63 @@ def test_chunked_process_bit_identical_to_one_shot(spark, kw):
         pd.testing.assert_frame_equal(one_shot, chunked, check_exact=True)
 
 
+def test_busy_cluster_table_matches_oracle():
+    """At the reference job's own arrival density (1,000 rows/s, 60 s
+    reuse) no cluster expires within 4k rows, so every release searches a
+    table of up to ~400 live clusters.  One-shot and 7-chunk runs both
+    equal the oracle exactly, and the run takes every kind of release
+    decision: new cluster, reuse, suppression."""
+    rng = np.random.default_rng(5)
+    n = 4000
+    arrival = np.floor(np.cumsum(rng.exponential(1.0, n))).astype(np.int64)
+    pdf = pd.DataFrame(
+        {
+            "event_id": np.arange(n),
+            "user_id": rng.integers(0, 1500, n).astype(float),
+            "value": rng.exponential(50.0, n).round(2),
+            "ts_millis": arrival.astype(float),
+            "arrival_ms": arrival,
+        }
+    )
+    cfg = FADSConfig()
+    qids, arrivals, pids, _ = _frame_inputs(pdf, cfg)
+    expected = fads_oracle(list(zip(range(n), map(tuple, qids.tolist()), arrivals.tolist())), cfg)
+    exp_lo = np.array([expected[i][0] for i in range(n)])
+    exp_hi = np.array([expected[i][1] for i in range(n)])
+
+    # suppressed rows carry a snapshot of the running global bounds; a new
+    # cluster releases exactly k rows with its box, so rows beyond k per
+    # box are reuses
+    snaps = set(
+        zip(
+            map(tuple, np.minimum.accumulate(qids).tolist()),
+            map(tuple, np.maximum.accumulate(qids).tolist()),
+        )
+    )
+    boxes = [box for box in expected.values() if box not in snaps]
+    n_new = len(set(boxes))
+    assert len(boxes) < n  # suppression
+    assert n_new > 300  # new clusters, all still live
+    assert len(boxes) > cfg.k * n_new  # reuse
+
+    one_shot = run_fads_pandas(pdf, cfg).sort_values("event_id")
+    lo_cols = [f"{q}_lo" for q in cfg.qid_cols]
+    hi_cols = [f"{q}_hi" for q in cfg.qid_cols]
+    np.testing.assert_array_equal(one_shot[lo_cols].to_numpy(), exp_lo)
+    np.testing.assert_array_equal(one_shot[hi_cols].to_numpy(), exp_hi)
+
+    state = FADSState(cfg)
+    parts = [
+        state.process(idx, qids[idx], arrivals[idx], pids[idx])
+        for idx in np.array_split(np.arange(n), 7)
+    ]
+    chunked = ReleasedBatch(*map(np.concatenate, zip(*parts, state.flush())))
+    order = np.argsort(chunked.row_ids)
+    assert np.array_equal(chunked.row_ids[order], np.arange(n))
+    np.testing.assert_array_equal(chunked.lo[order], exp_lo)
+    np.testing.assert_array_equal(chunked.hi[order], exp_hi)
+
+
 @pytest.mark.parametrize(
     "build",
     [

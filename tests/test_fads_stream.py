@@ -8,6 +8,7 @@ foreachBatch fallback produce the flush tail too."""
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import pickle
 
@@ -271,7 +272,8 @@ def test_stream_state_codec_roundtrip(events_pdf):
     so a code upgrade mid-stream cannot break checkpointed state)."""
     import pickletools
 
-    cfg = _cfg()
+    # a reuse TTL longer than the rows span keeps every cluster live
+    cfg = dataclasses.replace(_cfg(), reuse_ms=10**12)
     st = FADSState(cfg)
     st.process(
         events_pdf[cfg.pid_col].to_numpy()[:100],
@@ -297,8 +299,14 @@ def test_stream_state_codec_roundtrip(events_pdf):
     for (r1, q1, a1, p1, l1), (r2, q2, a2, p2, l2) in zip(st.buffer, st2.buffer):
         assert (r1, a1, p1) == (r2, a2, p2)
         assert np.array_equal(q1, q2) and np.array_equal(l1, l2)
-    assert len(st2.clusters) == len(st.clusters)
+    assert len(st.clusters) > 0
+    for field in ("lo", "hi", "created"):
+        a, b = getattr(st.clusters, field), getattr(st2.clusters, field)
+        assert a.dtype == b.dtype and a.shape == b.shape and np.array_equal(a, b), field
     pd.testing.assert_frame_equal(pending, pending2)
+    # an empty cluster table decodes to a (0, d) table
+    empty, _ = decode_state(encode_state(FADSState(cfg), None), cfg)
+    assert empty.clusters.lo.shape == empty.clusters.hi.shape == (0, len(cfg.qid_cols))
 
 
 # A v1 state blob frozen at the codec's introduction: cfg (k=3, buffer=5,

@@ -2497,6 +2497,11 @@ def test_flat_assignment_parity_above_inplan_limit(spark):
     assert probe_flat_m == probe_udf_m
 
 
+def test_flat_structs_sql_rejects_empty_codebook():
+    with pytest.raises(ValueError, match="empty codebook"):
+        S._flat_structs_sql(0, 8)
+
+
 def test_flat_assignment_tie_breaks_to_lowest_cell(spark):
     """Exact ties (duplicated centroids) must break to the LOWEST cell on
     the flat-literal path too: array_max over (dp, -cell) structs picks
