@@ -16,25 +16,14 @@ from pyfads import FADSConfig, fads_generalize
 from pyfads.io import events_with_arrival
 
 
-def _fads_cfg() -> FADSConfig:
-    # reference job wiring: k=10, buffer=30 rows, reuse TTL=60s
-    # (TransactionGeneralizationJob.java:66-71)
-    return FADSConfig(
-        k=10,
-        buffer_rows=30,
-        reuse_ms=60_000,
-        qid_cols=("user_id", "value", "ts_millis"),
-        pid_col="event_id",
-        arrival_col="arrival_ms",
-    )
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the full reference pipeline shape on sf0.001 events —
     source → arrival enrichment → batch FADS generalization
     (Generalizer.java:98-189 semantics; SURVEY.md §7.2 slice 0)."""
     df = events_with_arrival(spark, "/root/testdata/sf0.001")
-    return fads_generalize(df, _fads_cfg())
+    # FADSConfig() is the reference job wiring: k=10, buffer=30 rows,
+    # reuse TTL=60s (TransactionGeneralizationJob.java:66-71)
+    return fads_generalize(df, FADSConfig())
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

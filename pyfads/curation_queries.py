@@ -265,41 +265,23 @@ def prototypicality_prune_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # proves (inner time-interval joins emit matches as both sides arrive, so
 # the streamed result equals the batch join value-for-value).
 # --------------------------------------------------------------------------
-_SSJ_CHUNKS: dict[tuple, tuple] = {}
-
-
-def _events_ts_chunks(spark: SparkSession, sf_dir: str) -> tuple:
-    """Three TS-quantile-contiguous parquet chunks of the events table —
+def _events_ts_source(spark: SparkSession, sf_dir: str) -> tuple:
+    """The events table as three ts-quantile-contiguous micro-batches —
     the shared source for every events-driven streaming entry that needs
     a watermark-safe micro-batch sequence (interval_join_streamed,
-    session_window_streamed).  Splitting on the ts VALUE guarantees chunk
+    session_window_streamed).  Cutting on the ts VALUE guarantees chunk
     boundaries are ts-monotone no matter how event_ids were assigned
-    (ADVICE r10).  Returns (chunk_dir, schema); cached per fixture
-    fingerprint."""
+    (ADVICE r10).  Returns (stream_df, row count)."""
     from pyfads.io import epoch_ms
-    from pyfads.llm_queries import _chunk_key, _scratch_dir
+    from pyfads.streamrun import _chunk_key, chunked_source
 
-    key = _chunk_key(sf_dir, "events")
-    if key not in _SSJ_CHUNKS:
-        ev = read_table(spark, sf_dir, "events")
-        d = _scratch_dir("pyfads_ssj_")
-        ms = ev.withColumn("_ms", epoch_ms(ev, "ts"))
-        qs = ms.approxQuantile("_ms", [0.34, 0.67], 0.001)
-        lo, hi = int(qs[0]), int(qs[1])
-        base = ms.orderBy("_ms", "event_id")
-        base.filter(F.col("_ms") <= lo).drop("_ms").coalesce(1).write.parquet(
-            d + "/c0.parquet"
-        )
-        base.filter((F.col("_ms") > lo) & (F.col("_ms") <= hi)).drop(
-            "_ms"
-        ).coalesce(1).write.parquet(d + "/c1.parquet")
-        base.filter(F.col("_ms") > hi).drop("_ms").coalesce(1).write.parquet(
-            d + "/c2.parquet"
-        )
-        # schema + row count memoized with the chunks (row count sizes the
-        # stream's state partitions; re-counting per rep was a scan job)
-        _SSJ_CHUNKS[key] = (d, ev.schema, ev.count())
-    return _SSJ_CHUNKS[key]
+    return chunked_source(
+        spark,
+        lambda: read_table(spark, sf_dir, "events"),
+        lambda ev: epoch_ms(ev, "ts"),
+        3,
+        (_chunk_key(sf_dir, "events"), "ts"),
+    )
 
 
 @query(
@@ -326,15 +308,10 @@ def interval_join_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     diverge on fixtures whose ids interleave across the full ts range).
     See :func:`pyfads.windows.interval_join`."""
     from pyfads.io import epoch_ms
+    from pyfads.streamrun import run_to_completion
     from pyfads.windows import interval_join
 
-    d, schema, n_rows = _events_ts_chunks(spark, sf_dir)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
-    )
+    src, n_rows = _events_ts_source(spark, sf_dir)
 
     def side(df, etype, idname, tsname):
         return df.filter(F.col("event_type") == etype).select(
@@ -361,10 +338,7 @@ def interval_join_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .outputMode("append")
             .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        run_to_completion(q)
     out = spark.table(name)
     return out.select(
         "user_id",
@@ -381,7 +355,19 @@ def interval_join_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distinct content-hash SET (which row of a duplicate group a micro-batch
 # keeps is engine-internal, the SET of survivors' texts is not).
 # --------------------------------------------------------------------------
-_SDEDUP_CHUNKS: dict[tuple, tuple] = {}
+def _docs_text_source(spark: SparkSession, sf_dir: str) -> tuple:
+    """documents (doc_id, text) as two doc_id-ordered micro-batches — one
+    chunk set shared by dedup_exact_streamed and pack_nextfit_streamed.
+    Returns (stream_df, row count)."""
+    from pyfads.streamrun import _chunk_key, chunked_source
+
+    return chunked_source(
+        spark,
+        lambda: read_table(spark, sf_dir, "documents").select("doc_id", "text"),
+        "doc_id",
+        2,
+        (_chunk_key(sf_dir, "documents"), "doc_id,text"),
+    )
 
 
 @query(
@@ -393,31 +379,12 @@ def dedup_exact_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct text on the whole stream (state = 16-byte content hashes) —
     the value oracle is the distinct-text set, which micro-batch
     boundaries cannot change.  See :func:`pyfads.dedup.exact_dedup_stream`."""
-    from pyfads.llm_queries import _chunk_key, _scratch_dir
+    from pyfads.io import stream_shuffle_scope
+    from pyfads.streamrun import run_to_completion
 
-    key = _chunk_key(sf_dir, "documents")
-    if key not in _SDEDUP_CHUNKS:
-        docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-        d = _scratch_dir("pyfads_sdedup_")
-        mid = docs.agg(F.expr("percentile_approx(doc_id, 0.5)")).collect()[0][0]
-        docs.filter(F.col("doc_id") <= mid).coalesce(1).write.parquet(
-            d + "/c0.parquet"
-        )
-        docs.filter(F.col("doc_id") > mid).coalesce(1).write.parquet(
-            d + "/c1.parquet"
-        )
-        _SDEDUP_CHUNKS[key] = (d, docs.count())
-    chunk_dir, n_rows = _SDEDUP_CHUNKS[key]
-    src = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(chunk_dir)
-    )
+    src, n_rows = _docs_text_source(spark, sf_dir)
     deduped = D.exact_dedup_stream(src.filter(F.col("text").isNotNull()))
     name = "dedup_exact_streamed_sink"
-    from pyfads.io import stream_shuffle_scope
-
     # dropDuplicates state = one 16-byte hash per distinct doc — volume-
     # sized state partitions (pyfads.io.stream_state_partitions)
     with stream_shuffle_scope(spark, n_rows=n_rows):
@@ -427,10 +394,7 @@ def dedup_exact_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .outputMode("append")
             .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        run_to_completion(q)
     return spark.table(name).select(F.md5("text").alias("text_md5"))
 
 

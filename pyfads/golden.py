@@ -36,7 +36,12 @@ import os
 
 import numpy as np
 
+from pyfads.config import FADSConfig
 from pyfads.similarity import SEM_MAX_CELL
+
+# the scale-out FADS entries' config (batch, hot-key and streamed forms),
+# shared with their golden so both sides run the same parameters
+FADS_PARTITIONED_CFG = FADSConfig(k=5, buffer_rows=15)
 
 GOLDEN_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".golden_cache")
 
@@ -113,8 +118,6 @@ def _write_golden(path: str, released: dict) -> None:
 
 
 def _fads_golden_sql(name: str, partitioned: bool, max_group_rows: int | None = None) -> str:
-    from pyfads.config import FADSConfig
-
     sf_dir = oracle_sf_dir()
     tag = os.path.basename(sf_dir.rstrip("/"))
     if max_group_rows is not None:
@@ -122,7 +125,7 @@ def _fads_golden_sql(name: str, partitioned: bool, max_group_rows: int | None = 
     path = os.path.join(GOLDEN_DIR, f"{name}.{tag}.parquet")
     rows = _events_rows(sf_dir)
     if partitioned:
-        cfg = FADSConfig(k=5, buffer_rows=15, reuse_ms=60_000)
+        cfg = FADS_PARTITIONED_CFG
         released: dict = {}
         groups = sorted({r[4] for r in rows})
         for g in groups:
@@ -136,8 +139,7 @@ def _fads_golden_sql(name: str, partitioned: bool, max_group_rows: int | None = 
                 for i in range(0, len(grows), max_group_rows):
                     released.update(_run_golden(grows[i : i + max_group_rows], cfg))
     else:
-        cfg = FADSConfig(k=10, buffer_rows=30, reuse_ms=60_000)
-        released = _run_golden(rows, cfg)
+        released = _run_golden(rows, FADSConfig())
     _write_golden(path, released)
     return f"""
 SELECT g.event_id, g.user_id_lo, g.user_id_hi, g.value_lo, g.value_hi,
@@ -173,14 +175,9 @@ def _fads_mode_golden_cached(name: str, sf_dir: str, legacy: bool, distinct: boo
     (Generalizer.java:205-216).  Same flagship config otherwise; the
     expected table comes from the independent pure-Python oracle run in
     the matching mode."""
-    from pyfads.config import FADSConfig
-
     tag = os.path.basename(sf_dir.rstrip("/"))
     path = os.path.join(GOLDEN_DIR, f"{name}.{tag}.parquet")
     cfg = FADSConfig(
-        k=10,
-        buffer_rows=30,
-        reuse_ms=60_000,
         pid_col="user_id" if distinct else "event_id",
         legacy_distance=legacy,
         distinct_pids=distinct,
@@ -280,12 +277,11 @@ def _taxi_job_golden_cached(sf_dir: str, fingerprint: tuple = ()) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pyfads.config import FADSConfig
     from pyfads.oracle import fads_oracle
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     path = os.path.join(GOLDEN_DIR, f"taxi_job_composed.{tag}.parquet")
-    cfg = FADSConfig(k=10, buffer_rows=30, reuse_ms=60_000)
+    cfg = FADSConfig()
     rows = taxi_fixture_lines(sf_dir)
     orows = [
         (rid, (float(rid), float(taxi), float((sec + dur) * 1000)), sec * 1000)

@@ -27,37 +27,9 @@ from pyfads import similarity as S
 from pyfads import text as X
 from pyfads.io import read_table, spread
 from pyfads.queries import query
+from pyfads.streamrun import _chunk_key, _scratch_dir, chunked_source, run_to_completion
 
 DIM = 64  # embeddings fixture dimension (TESTDATA.md)
-
-
-def _scratch_dir(prefix: str) -> str:
-    """Process-lifetime scratch dir for the serve-many store fixtures
-    (codebook / signature / semantic stores, streaming chunk sources):
-    mkdtemp plus an atexit rmtree, so repeated bench/test processes do
-    not leak one directory per sf_dir per process (ADVICE r9)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
-
-
-def _chunk_key(sf_dir: str, table: str) -> tuple:
-    """Cache key for streamed-chunk / derived-store scratch dirs:
-    (sf_dir, table, fixture mtime, size).  Regenerating the fixture
-    in-place changes the key, so derived data is rebuilt instead of
-    silently serving stale rows (ADVICE r10)."""
-    import os
-
-    p = os.path.join(sf_dir, table + ".parquet")
-    try:
-        st = os.stat(p)
-        return (sf_dir, table, int(st.st_mtime_ns), st.st_size)
-    except OSError:
-        return (sf_dir, table)
 
 
 # Deterministic-training memo (r11 verdict item 5): codebook training
@@ -1072,9 +1044,6 @@ def dedup_semantic_served_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEMGATE_CHUNKS: dict[tuple, str] = {}
-
-
 @query(
     "semantic_gate_streamed",
     oracle=lambda: G.semantic_gate_stream_oracle(),
@@ -1089,23 +1058,12 @@ def semantic_gate_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL value oracle (the incremental twin filtered to is_new), not the
     weaker rows-only streaming check."""
     cents, corpus = _semstore(spark, sf_dir)
-    _sgkey = _chunk_key(sf_dir, "embeddings")
-    if _sgkey not in _SEMGATE_CHUNKS:
-        d = _scratch_dir("pyfads_semgate_")
-        embs = _embs(spark, sf_dir).select("vec_id", "embedding")
-        batch = _plant_gate_batch(embs)
-        batch.filter(F.col("vec_id") < 15_000_000).coalesce(1).write.parquet(
-            d + "/c0.parquet"
-        )
-        batch.filter(F.col("vec_id") >= 15_000_000).coalesce(1).write.parquet(
-            d + "/c1.parquet"
-        )
-        _SEMGATE_CHUNKS[_sgkey] = d
-    src = (
-        spark.readStream.schema("vec_id bigint, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(_SEMGATE_CHUNKS[_sgkey])
+    src, _n = chunked_source(
+        spark,
+        lambda: _plant_gate_batch(_embs(spark, sf_dir).select("vec_id", "embedding")),
+        "vec_id",
+        2,
+        (_chunk_key(sf_dir, "embeddings"), "gate_batch"),
     )
     gated = S.semantic_gate_stream(src, cents, corpus, DIM, threshold=0.9)
     # one fixed sink name: each run replaces the previous registration, so
@@ -1118,10 +1076,7 @@ def semantic_gate_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .outputMode("append")
         .start()
     )
-    try:
-        q.processAllAvailable()  # stateless gate: terminates
-    finally:
-        q.stop()
+    run_to_completion(q)  # stateless gate: terminates
     return spark.table(name)
 
 
@@ -4066,7 +4021,6 @@ def domain_policy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _URL_GATE_PRED = "doc_id % 10 = 7"
-_URLGATE_CHUNKS: dict[tuple, str] = {}
 
 _URL_GATE_SQL = f"""
 WITH {_URL_BASE_CTE},
@@ -4092,23 +4046,12 @@ def url_gate_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = W.url_canonicalize(W.with_synth_urls(docs))
     pred = F.expr(_URL_GATE_PRED)
     corpus = c.filter(~pred).select("canonical_url")
-    _ugkey = _chunk_key(sf_dir, "documents")
-    if _ugkey not in _URLGATE_CHUNKS:
-        d = _scratch_dir("pyfads_urlgate_")
-        batch = docs.filter(pred)
-        mid = batch.agg(F.expr("percentile_approx(doc_id, 0.5)")).collect()[0][0]
-        batch.filter(F.col("doc_id") <= mid).coalesce(1).write.parquet(
-            d + "/c0.parquet"
-        )
-        batch.filter(F.col("doc_id") > mid).coalesce(1).write.parquet(
-            d + "/c1.parquet"
-        )
-        _URLGATE_CHUNKS[_ugkey] = d
-    src = (
-        spark.readStream.schema("doc_id bigint, source string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(_URLGATE_CHUNKS[_ugkey])
+    src, _n = chunked_source(
+        spark,
+        lambda: docs.filter(pred),
+        "doc_id",
+        2,
+        (_chunk_key(sf_dir, "documents"), "url_gate"),
     )
     gated = W.url_gate_stream(W.url_canonicalize(W.with_synth_urls(src)), corpus)
     name = "url_gate_streamed_sink"
@@ -4118,10 +4061,7 @@ def url_gate_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .outputMode("append")
         .start()
     )
-    try:
-        q.processAllAvailable()  # stateless gate: terminates
-    finally:
-        q.stop()
+    run_to_completion(q)  # stateless gate: terminates
     return spark.table(name)
 
 

@@ -214,9 +214,6 @@ def split_summary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PACKSTREAM_CHUNKS: dict[tuple, str] = {}
-
-
 @query("pack_nextfit_streamed", oracle=_PACK_NEXTFIT_SQL)
 def pack_nextfit_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING next-fit packing (pyfads.packing.pack_nextfit_stream),
@@ -227,26 +224,13 @@ def pack_nextfit_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is checked against the SAME recursive-CTE oracle as the
     batch operator, so state carry-over is value-verified, not just
     smoke-tested."""
-    from pyfads.llm_queries import _chunk_key, _scratch_dir
+    from pyfads.curation_queries import _docs_text_source
+    from pyfads.io import stream_shuffle_scope
+    from pyfads.streamrun import run_to_completion
 
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    _pskey = _chunk_key(sf_dir, "documents")
-    if _pskey not in _PACKSTREAM_CHUNKS:
-        d = _scratch_dir("pyfads_packstream_")
-        mid = docs.agg(F.expr("percentile_approx(doc_id, 0.5)")).collect()[0][0]
-        docs.filter(F.col("doc_id") <= mid).coalesce(1).write.parquet(d + "/c0.parquet")
-        docs.filter(F.col("doc_id") > mid).coalesce(1).write.parquet(d + "/c1.parquet")
-        _PACKSTREAM_CHUNKS[_pskey] = d
-    src = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(_PACKSTREAM_CHUNKS[_pskey])
-    )
+    src, _n = _docs_text_source(spark, sf_dir)
     packed = P.pack_nextfit_stream(src, _CAP, _SHARDS)
     name = "pack_nextfit_streamed_sink"
-    from pyfads.io import stream_shuffle_scope
-
     # state keys = the _SHARDS open bins — partitions beyond that hold no
     # state and pay per-batch store I/O (pyfads.io.stream_state_partitions)
     with stream_shuffle_scope(spark, n_keys=_SHARDS):
@@ -256,10 +240,7 @@ def pack_nextfit_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .outputMode("append")
             .start()
         )
-        try:
-            q.processAllAvailable()  # NoTimeout state: terminates
-        finally:
-            q.stop()
+        run_to_completion(q)  # NoTimeout state: terminates
     return spark.table(name)
 
 

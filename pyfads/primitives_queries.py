@@ -441,13 +441,5 @@ def fads_utility_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyfads import FADSConfig, fads_generalize
     from pyfads.io import events_with_arrival
 
-    cfg = FADSConfig(
-        k=10,
-        buffer_rows=30,
-        reuse_ms=60_000,
-        qid_cols=("user_id", "value", "ts_millis"),
-        pid_col="event_id",
-        arrival_col="arrival_ms",
-    )
-    released = fads_generalize(events_with_arrival(spark, sf_dir), cfg)
+    released = fads_generalize(events_with_arrival(spark, sf_dir), FADSConfig())
     return P.utility_report(released)

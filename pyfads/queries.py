@@ -83,33 +83,17 @@ def fads_generalize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyfads import FADSConfig, fads_generalize
     from pyfads.io import events_with_arrival
 
-    cfg = FADSConfig(
-        k=10,
-        buffer_rows=30,
-        reuse_ms=60_000,
-        qid_cols=("user_id", "value", "ts_millis"),
-        pid_col="event_id",
-        arrival_col="arrival_ms",
-    )
-    return fads_generalize(events_with_arrival(spark, sf_dir), cfg)
+    return fads_generalize(events_with_arrival(spark, sf_dir), FADSConfig())
 
 
 @query("fads_partitioned_events", oracle=_golden.fads_partitioned_events_oracle)
 def fads_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-out FADS (SURVEY.md §2.5.9): independent per-event_type groups."""
-    from pyfads import FADSConfig, fads_generalize_partitioned
+    from pyfads import fads_generalize_partitioned
     from pyfads.io import events_with_arrival
 
-    cfg = FADSConfig(
-        k=5,
-        buffer_rows=15,
-        reuse_ms=60_000,
-        qid_cols=("user_id", "value", "ts_millis"),
-        pid_col="event_id",
-        arrival_col="arrival_ms",
-    )
     return fads_generalize_partitioned(
-        events_with_arrival(spark, sf_dir), cfg, "event_type"
+        events_with_arrival(spark, sf_dir), _golden.FADS_PARTITIONED_CFG, "event_type"
     )
 
 
@@ -120,19 +104,14 @@ def fads_hotkey_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fads_batch.fads_generalize_partitioned max_group_rows), so one skewed
     key cannot produce an unbounded straggler task.  The golden oracle
     re-derives the same run-splitting independently."""
-    from pyfads import FADSConfig, fads_generalize_partitioned
+    from pyfads import fads_generalize_partitioned
     from pyfads.io import events_with_arrival
 
-    cfg = FADSConfig(
-        k=5,
-        buffer_rows=15,
-        reuse_ms=60_000,
-        qid_cols=("user_id", "value", "ts_millis"),
-        pid_col="event_id",
-        arrival_col="arrival_ms",
-    )
     return fads_generalize_partitioned(
-        events_with_arrival(spark, sf_dir), cfg, "event_type", max_group_rows=120
+        events_with_arrival(spark, sf_dir),
+        _golden.FADS_PARTITIONED_CFG,
+        "event_type",
+        max_group_rows=120,
     )
 
 
@@ -147,15 +126,7 @@ def fads_legacy_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyfads import FADSConfig, fads_generalize
     from pyfads.io import events_with_arrival
 
-    cfg = FADSConfig(
-        k=10,
-        buffer_rows=30,
-        reuse_ms=60_000,
-        qid_cols=("user_id", "value", "ts_millis"),
-        pid_col="event_id",
-        arrival_col="arrival_ms",
-        legacy_distance=True,
-    )
+    cfg = FADSConfig(legacy_distance=True)
     return fads_generalize(events_with_arrival(spark, sf_dir), cfg)
 
 
@@ -176,57 +147,23 @@ def fads_distinct_pids_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyfads import FADSConfig, fads_generalize
     from pyfads.io import events_with_arrival
 
-    cfg = FADSConfig(
-        k=10,
-        buffer_rows=30,
-        reuse_ms=60_000,
-        qid_cols=("user_id", "value", "ts_millis"),
-        pid_col="user_id",
-        arrival_col="arrival_ms",
-        distinct_pids=True,
-    )
+    cfg = FADSConfig(pid_col="user_id", distinct_pids=True)
     return fads_generalize(events_with_arrival(spark, sf_dir), cfg)
 
 
-_FADS_STREAM_CHUNKS: dict[tuple, tuple] = {}
-
-
-def _fads_stream_chunks(spark: SparkSession, sf_dir: str) -> tuple:
-    """Three arrival-contiguous parquet chunks of events_with_arrival,
-    mtimes ascending so the file stream ingests them in arrival order.
-    Chunks split on arrival_ms VALUE boundaries, so rows with equal
-    arrivals never straddle a chunk (the per-batch stable (arrival, pid)
-    mergesort then reproduces the batch order globally).  Returns
-    (chunk_dir, input schema, row count); cached per fixture fingerprint."""
-    import os
-
+def _fads_stream_source(spark: SparkSession, sf_dir: str) -> tuple:
+    """events_with_arrival as three arrival-contiguous micro-batches (cut
+    on arrival_ms VALUE boundaries); returns (stream_df, row count)."""
     from pyfads.io import events_with_arrival
-    from pyfads.llm_queries import _chunk_key, _scratch_dir
+    from pyfads.streamrun import _chunk_key, chunked_source
 
-    key = _chunk_key(sf_dir, "events")
-    if key not in _FADS_STREAM_CHUNKS:
-        ev = events_with_arrival(spark, sf_dir)
-        n_events = ev.count()
-        d = _scratch_dir("pyfads_fstream_")
-        qs = ev.approxQuantile("arrival_ms", [0.34, 0.67], 0.001)
-        lo, hi = int(qs[0]), int(qs[1])
-        base = ev.orderBy("arrival_ms", "event_id")
-        parts = [
-            base.filter(F.col("arrival_ms") <= lo),
-            base.filter((F.col("arrival_ms") > lo) & (F.col("arrival_ms") <= hi)),
-            base.filter(F.col("arrival_ms") > hi),
-        ]
-        for i, part in enumerate(parts):
-            p = f"{d}/c{i}.parquet"
-            part.coalesce(1).write.parquet(p)
-            t = 1_700_000_000 + i * 60
-            for f in os.listdir(p):
-                os.utime(os.path.join(p, f), (t, t))
-        # schema + row count memoized WITH the chunks: the count is a pure
-        # function of the fixture, and an un-memoized ev.count() re-paid a
-        # full scan job on every bench rep
-        _FADS_STREAM_CHUNKS[key] = (d, ev.schema, n_events)
-    return _FADS_STREAM_CHUNKS[key]
+    return chunked_source(
+        spark,
+        lambda: events_with_arrival(spark, sf_dir),
+        "arrival_ms",
+        3,
+        (_chunk_key(sf_dir, "events"), "arrival_ms"),
+    )
 
 
 def _run_fads_stream(
@@ -236,21 +173,14 @@ def _run_fads_stream(
     sink_name: str,
     partition_cols: "list[str] | None" = None,
 ) -> DataFrame:
-    """Drive fads_generalize_stream over the chunked events source to
-    completion (poll the memory sink for the full release count — with a
-    ProcessingTimeTimeout armed, processAllAvailable never terminates)."""
-    import time as _time
-
+    """Drive fads_generalize_stream over the chunked events source until
+    the memory sink holds the full release count (the ProcessingTimeTimeout
+    flush releases the buffered tail; the stream itself never ends)."""
     from pyfads.fads_stream import fads_generalize_stream
     from pyfads.io import stream_shuffle_scope
+    from pyfads.streamrun import run_to_completion
 
-    d, schema, n_events = _fads_stream_chunks(spark, sf_dir)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
-    )
+    src, n_events = _fads_stream_source(spark, sf_dir)
     out = fads_generalize_stream(
         src, cfg, partition_cols=partition_cols, flush_after_ms=2_000
     )
@@ -267,23 +197,9 @@ def _run_fads_stream(
             .outputMode("append")
             .start()
         )
-        try:
-            deadline = _time.time() + 240
-            while _time.time() < deadline:
-                if spark.table(sink_name).count() >= n_events:
-                    break
-                if not q.isActive:
-                    # the query DIED (not stalled): surface its own exception
-                    # instead of spinning out the deadline and blaming a stall
-                    # (code-review r12)
-                    exc = q.exception()
-                    raise RuntimeError(
-                        f"{sink_name}: streaming query terminated before "
-                        f"releasing {n_events} rows"
-                    ) from exc
-                _time.sleep(0.15)
-        finally:
-            q.stop()
+        run_to_completion(
+            q, until=lambda: spark.table(sink_name).count() >= n_events
+        )
     got = spark.table(sink_name).count()
     if got < n_events:
         # fail LOUDLY: returning the partial sink table would go red at the
@@ -314,15 +230,7 @@ def fads_stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergesort then reproduces the batch order globally)."""
     from pyfads import FADSConfig
 
-    cfg = FADSConfig(
-        k=10,
-        buffer_rows=30,
-        reuse_ms=60_000,
-        qid_cols=("user_id", "value", "ts_millis"),
-        pid_col="event_id",
-        arrival_col="arrival_ms",
-    )
-    return _run_fads_stream(spark, sf_dir, cfg, "fads_stream_events_sink")
+    return _run_fads_stream(spark, sf_dir, FADSConfig(), "fads_stream_events_sink")
 
 
 @query("fads_stream_partitioned", oracle=_golden.fads_partitioned_events_oracle)
@@ -334,18 +242,12 @@ def fads_stream_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch boundary through the state store independently.  Oracle:
     the SAME golden table as the batch fads_partitioned_events (per-group
     stream==batch parity)."""
-    from pyfads import FADSConfig
-
-    cfg = FADSConfig(
-        k=5,
-        buffer_rows=15,
-        reuse_ms=60_000,
-        qid_cols=("user_id", "value", "ts_millis"),
-        pid_col="event_id",
-        arrival_col="arrival_ms",
-    )
     return _run_fads_stream(
-        spark, sf_dir, cfg, "fads_stream_partitioned_sink", ["event_type"]
+        spark,
+        sf_dir,
+        _golden.FADS_PARTITIONED_CFG,
+        "fads_stream_partitioned_sink",
+        ["event_type"],
     )
 
 
@@ -355,37 +257,20 @@ def fads_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented parallelism-1 ``foreachBatch`` parity fallback
     (pyfads.fads_stream.ForeachBatchFADS — each micro-batch toPandas'd
     into ONE shared sequential state machine, the closest shape to the
-    reference's single Flink operator).  processAllAvailable terminates
-    here (no GroupState timeout), then flush() drains the tail — so the
-    entry is deterministic without polling.  Oracle: the same flagship
-    golden (micro-batch boundaries cannot change a sequential machine's
-    releases when chunks arrive in arrival order)."""
+    reference's single Flink operator).  A foreachBatch query has no
+    GroupState timeout, so it drains without a sink poll; then flush()
+    drains the tail — the entry is deterministic.  Oracle: the same
+    flagship golden (micro-batch boundaries cannot change a sequential
+    machine's releases when chunks arrive in arrival order)."""
     import pandas as pd
 
     from pyfads import FADSConfig
     from pyfads.fads_stream import ForeachBatchFADS
+    from pyfads.streamrun import run_to_completion
 
-    cfg = FADSConfig(
-        k=10,
-        buffer_rows=30,
-        reuse_ms=60_000,
-        qid_cols=("user_id", "value", "ts_millis"),
-        pid_col="event_id",
-        arrival_col="arrival_ms",
-    )
-    d, schema, _n = _fads_stream_chunks(spark, sf_dir)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
-    )
-    fb = ForeachBatchFADS(cfg)
-    q = src.writeStream.foreachBatch(fb).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    src, _n = _fads_stream_source(spark, sf_dir)
+    fb = ForeachBatchFADS(FADSConfig())
+    run_to_completion(src.writeStream.foreachBatch(fb).start())
     out = pd.concat([*fb.outputs, fb.flush()], ignore_index=True)
     return spark.createDataFrame(out)
 
@@ -412,14 +297,13 @@ def taxi_job_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import gzip
     import os
     import tempfile
-    import time as _time
 
     from pyfads import FADSConfig
     from pyfads.fads_stream import fads_generalize_stream
     from pyfads.io import parse_taxi_lines
-    from pyfads.llm_queries import _chunk_key, _scratch_dir
     from pyfads.metrics import ThroughputListener
     from pyfads.schema import fads_output_schema
+    from pyfads.streamrun import _chunk_key, _scratch_dir, run_to_completion
 
     key = _chunk_key(sf_dir, "events")
     # the fixture derivation is a full DuckDB scan + python sort — pay it
@@ -499,55 +383,7 @@ def taxi_job_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
                     return 0
 
             n = len(rows)
-            try:
-                deadline = _time.time() + 240
-                # each _count() is a full parquet read+count JOB competing
-                # with the stream's own micro-batches — run it only when a
-                # new batch has committed (batchId advance), with a 1 s
-                # periodic fallback, instead of every 0.15 s (r12 verdict
-                # #5: the poll cadence was part of the entry's fixed tax)
-                seen_bid = -2
-                next_fallback = 0.0
-                while _time.time() < deadline:
-                    lp = q.lastProgress
-                    bid = lp.get("batchId", -1) if lp else -1
-                    now = _time.time()
-                    if bid != seen_bid or now >= next_fallback:
-                        seen_bid = bid
-                        next_fallback = now + 1.0
-                        if _count() >= n:
-                            break
-                    if not q.isActive:
-                        # died, not stalled: surface the query's own
-                        # exception (code-review r12)
-                        raise RuntimeError(
-                            f"taxi_job_composed: streaming query terminated "
-                            f"before releasing {n} rows"
-                        ) from q.exception()
-                    _time.sleep(0.15)
-                # let any in-flight state-cleanup micro-batch commit before
-                # stopping — stopping mid-commit aborts its state-store
-                # write with a noisy (but harmless: the parquet sink's
-                # metadata log is already committed for every counted row)
-                # error.  Bounded by ONE batch boundary, not a fixed wait:
-                # with the default ProcessingTime(0) trigger the cleanup
-                # batches run back-to-back, so `isTriggerActive` is ~always
-                # true and the old `while isTriggerActive` form burned the
-                # full 5 s cap on every rep (r12 verdict #5 — 5 s of the
-                # entry's 11.6 s was this fixed tax).  A batchId advance
-                # means the batch in flight at decision time has committed.
-                lp = q.lastProgress
-                start_bid = lp.get("batchId", -1) if lp else -1
-                settle = _time.time() + 5
-                while _time.time() < settle:
-                    if not q.status.get("isTriggerActive"):
-                        break
-                    lp = q.lastProgress
-                    if lp and lp.get("batchId", -1) > start_bid:
-                        break
-                    _time.sleep(0.05)
-            finally:
-                q.stop()
+            run_to_completion(q, until=lambda: _count() >= n)
         got = _count()
         if got < n:
             raise TimeoutError(

@@ -16,8 +16,10 @@ Usage:
         [--checkpoint DIR] [--cpus 4]
 
 INPUT_DIR holds nycTaxiRides-format .gz (or plain) CSV files; the query
-drains everything present (availableNow) and exits — run it again to pick
-up new files (state restores from the checkpoint).
+runs until every file present is consumed (three consecutive micro-batches
+read zero input rows, see :func:`input_drained`), settles for one batch
+boundary and exits — run it again to pick up new files (state restores
+from the checkpoint).
 
 ``--pid auto`` (the default) synthesizes a globally unique row key
 ``concat(rideId, '#', eventKind)``: real nycTaxiRides input emits a START
@@ -36,7 +38,6 @@ from __future__ import annotations
 import argparse
 import sys
 import tempfile
-import time
 
 AUTO_PID_COL = "__pid"
 
@@ -57,34 +58,25 @@ def with_auto_pid(parsed):
     )
 
 
-def drain(q, sleep_s: float = 2.0) -> None:
-    """Block until the file source is drained, surfacing query failure.
+def input_drained(q):
+    """``until`` condition for :func:`pyfads.streamrun.run_to_completion`:
+    the file source is drained once three consecutive completed batches
+    read zero input rows.
 
-    With a ProcessingTimeTimeout armed, the query schedules state-cleanup
-    batches forever, so availableNow/processAllAvailable never terminate
-    (see tests/test_fads_stream.py).  Drain detection must watch the INPUT
-    side, not the sink: FADS buffers rows in state, so early micro-batches
-    can release nothing while ingest files are still queued — a sink-count
-    heuristic would stop early.  A file source with all files consumed
-    reports numInputRows == 0 on every subsequent (cleanup) batch, so:
-    drain until three consecutive completed batches read zero input rows.
-
-    If the query dies (e.g. a poison line in strict parse mode — the
-    documented reference-parity kill behavior) no further progress events
-    arrive; re-raise its exception instead of polling forever."""
+    Drain detection must watch the INPUT side, not the sink: FADS buffers
+    rows in state, so early micro-batches can release nothing while ingest
+    files are still queued — a sink-count heuristic would stop early.  With
+    a ProcessingTimeTimeout armed the query keeps scheduling state-cleanup
+    batches after the last file, and each of those reads zero rows."""
     seen: dict[int, int] = {}  # batchId -> numInputRows
-    while True:
-        if not q.isActive:
-            exc = q.exception()
-            if exc is not None:
-                raise exc
-            return  # stopped cleanly from outside
+
+    def until() -> bool:
         for pr in q.recentProgress:
             seen[pr["batchId"]] = int(pr["numInputRows"])
         done = sorted(seen)
-        if len(done) >= 3 and all(seen[b] == 0 for b in done[-3:]):
-            return
-        time.sleep(sleep_s)
+        return len(done) >= 3 and all(seen[b] == 0 for b in done[-3:])
+
+    return until
 
 
 def main(argv: "list[str] | None" = None) -> int:
@@ -108,6 +100,7 @@ def main(argv: "list[str] | None" = None) -> int:
     from pyfads.fads_stream import fads_generalize_stream
     from pyfads.io import parse_taxi_lines
     from pyfads.metrics import ThroughputListener
+    from pyfads.streamrun import run_to_completion
 
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
@@ -153,13 +146,7 @@ def main(argv: "list[str] | None" = None) -> int:
         except Exception:
             return 0
 
-    drain(q)
-    # let any in-flight (state-cleanup) micro-batch finish before stopping —
-    # stopping mid-commit logs a noisy CANNOT_WRITE_STATE_STORE error
-    deadline = time.time() + 30
-    while q.status.get("isTriggerActive") and time.time() < deadline:
-        time.sleep(0.5)
-    q.stop()
+    run_to_completion(q, until=input_drained(q), deadline_s=float("inf"))
     print(
         f"released {_count()} generalized rows -> {args.output_dir} (ckpt: {ckpt})"
     )

@@ -742,17 +742,12 @@ def session_window_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_windows._run_stream_to_memory pattern); the oracle is the SAME
     gaps-and-islands SQL as the batch twin — session contents are
     micro-batch-invariant."""
-    from pyfads.curation_queries import _events_ts_chunks
-    from pyfads.llm_queries import _scratch_dir
+    from pyfads.curation_queries import _events_ts_source
+    from pyfads.streamrun import _scratch_dir, run_to_completion
 
-    d, schema, _n_rows = _events_ts_chunks(spark, sf_dir)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "2 hours")
+    src, _n_rows = _events_ts_source(spark, sf_dir)
+    src = src.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
+        "ts", "2 hours"
     )
     agg = session_agg(
         src,
@@ -779,10 +774,7 @@ def session_window_streamed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(240)
-    finally:
-        q.stop()
+    run_to_completion(q)
     return spark.table(name)
 
 

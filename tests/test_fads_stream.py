@@ -29,6 +29,7 @@ from pyfads.fads_stream import (
     make_stream_handler,
 )
 from pyfads.io import events_with_arrival
+from pyfads.streamrun import run_to_completion
 from tests.test_fads_batch import legacy_pdf
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -117,17 +118,10 @@ def test_stream_releases_match_batch_process(spark, events_pdf, chunk_dir):
         .outputMode("append")
         .start()
     )
-    try:
-        import time as _t
-
-        deadline = _t.time() + 240
-        while _t.time() < deadline:
-            if spark.table("fads_stream_out").count() >= expected_n:
-                break
-            _t.sleep(2)
-        got = spark.table("fads_stream_out").collect()
-    finally:
-        q.stop()
+    run_to_completion(
+        q, until=lambda: spark.table("fads_stream_out").count() >= expected_n
+    )
+    got = spark.table("fads_stream_out").collect()
     expected, _ = _expected_released(events_pdf, cfg)
     assert _rows_to_set(got, cfg) == expected
     # releases strictly precede the flush tail: buffer_rows stay pending
@@ -163,17 +157,10 @@ def test_stream_parity_many_chunks(
         .outputMode("append")
         .start()
     )
-    try:
-        import time as _t
-
-        deadline = _t.time() + 240
-        while _t.time() < deadline:
-            if spark.table("fads_stream_out8").count() >= expected_n:
-                break
-            _t.sleep(2)
-        got = spark.table("fads_stream_out8").collect()
-    finally:
-        q.stop()
+    run_to_completion(
+        q, until=lambda: spark.table("fads_stream_out8").count() >= expected_n
+    )
+    got = spark.table("fads_stream_out8").collect()
     expected, _ = _expected_released(events_pdf, cfg)
     assert _rows_to_set(got, cfg) == expected
     assert len(got) == expected_n
@@ -393,8 +380,6 @@ def test_stream_restart_from_checkpoint(spark, events_pdf, tmp_path_factory):
     idle-timeout flush, and land the whole stream bit-identical to the
     batch run.  (The frozen-blob test proves the codec format; this proves
     the codec through a real state-store round trip across query restarts.)"""
-    import time as _t
-
     cfg = _cfg()
     base = tmp_path_factory.mktemp("restart")
     src_dir, ckpt, out_dir = str(base / "src"), str(base / "ckpt"), str(base / "out")
@@ -428,26 +413,15 @@ def test_stream_restart_from_checkpoint(spark, events_pdf, tmp_path_factory):
             return 0
 
     expected_run1 = len(chunks[0]) + len(chunks[1]) - cfg.buffer_rows
-    q = start_query()
-    try:
-        deadline = _t.time() + 240
-        while _t.time() < deadline and sink_count() < expected_run1:
-            _t.sleep(0.5)
-        assert sink_count() >= expected_run1
-    finally:
-        q.stop()  # mid-stream: buffer + clusters stay only in the checkpoint
+    # stopped mid-stream: buffer + clusters stay only in the checkpoint
+    run_to_completion(start_query(), until=lambda: sink_count() >= expected_run1)
+    assert sink_count() >= expected_run1
 
     # new data arrives while the query is DOWN
     chunks[2].to_parquet(f"{src_dir}/chunk_2.parquet", index=False)
     os.utime(f"{src_dir}/chunk_2.parquet", (1_700_000_300,) * 2)
 
-    q2 = start_query()
-    try:
-        deadline = _t.time() + 240
-        while _t.time() < deadline and sink_count() < len(events_pdf):
-            _t.sleep(2)
-    finally:
-        q2.stop()
+    run_to_completion(start_query(), until=lambda: sink_count() >= len(events_pdf))
 
     got = spark.read.parquet(out_dir).toPandas()
     assert len(got) == len(events_pdf)
@@ -561,17 +535,10 @@ def test_tws_end_to_end(spark, events_pdf, chunk_dir):
             .outputMode("append")
             .start()
         )
-        try:
-            import time as _t
-
-            deadline = _t.time() + 240
-            while _t.time() < deadline:
-                if spark.table("tws_out").count() >= len(events_pdf):
-                    break
-                _t.sleep(2)
-            got = spark.table("tws_out").toPandas()
-        finally:
-            q.stop()
+        run_to_completion(
+            q, until=lambda: spark.table("tws_out").count() >= len(events_pdf)
+        )
+        got = spark.table("tws_out").toPandas()
         batch = run_fads_pandas(events_pdf, cfg)
         b = batch.sort_values("event_id").reset_index(drop=True)
         s = got[b.columns].sort_values("event_id").reset_index(drop=True)
@@ -638,17 +605,12 @@ def test_stream_multibatch_ttl_flush_parity(spark, tmp_path_factory):
         .outputMode("append")
         .start()
     )
-    try:
-        import time as _t
-
-        deadline = _t.time() + 180
-        while _t.time() < deadline:
-            if spark.table("fads_ttl_out").count() >= len(pdf):
-                break
-            _t.sleep(2)
-        got = spark.table("fads_ttl_out").collect()
-    finally:
-        q.stop()
+    run_to_completion(
+        q,
+        until=lambda: spark.table("fads_ttl_out").count() >= len(pdf),
+        deadline_s=180,
+    )
+    got = spark.table("fads_ttl_out").collect()
     assert len(got) == len(pdf), "timeout flush did not drain the buffer"
 
     rows = [
@@ -709,7 +671,6 @@ def _taxi_csv_lines(n: int = 120) -> list[str]:
 
 def test_end_to_end_taxi_job_gz_to_parquet(spark, tmp_path):
     import gzip
-    import time as _t
 
     from pyfads.io import read_taxi_csv
     from pyfads.metrics import ThroughputListener
@@ -761,21 +722,19 @@ def test_end_to_end_taxi_job_gz_to_parquet(spark, tmp_path):
     out_schema = fads_output_schema(enriched.schema, cfg)
     expected_n = len(lines) - cfg.buffer_rows
     try:
-        deadline = _t.time() + 240
-        while _t.time() < deadline:
-            if spark.read.schema(out_schema).parquet(out_dir).count() >= expected_n:
-                break
-            _t.sleep(2)
-        got = spark.read.schema(out_schema).parquet(out_dir).collect()
         # listener progress events are delivered asynchronously — under CPU
         # contention the final micro-batch's event can lag the sink rows, so
-        # drain it BEFORE stop()/removeListener (observed: 80/120 rows
+        # wait for it too BEFORE stop()/removeListener (observed: 80/120 rows
         # counted when stopping immediately)
-        drain = _t.time() + 60
-        while listener.rows_total < len(lines) and _t.time() < drain:
-            _t.sleep(0.5)
+        run_to_completion(
+            q,
+            until=lambda: (
+                spark.read.schema(out_schema).parquet(out_dir).count() >= expected_n
+                and listener.rows_total >= len(lines)
+            ),
+        )
+        got = spark.read.schema(out_schema).parquet(out_dir).collect()
     finally:
-        q.stop()
         spark.streams.removeListener(listener)
 
     # P5: the logger observed the stream's input rows flowing through

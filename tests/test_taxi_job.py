@@ -1,8 +1,9 @@
 """Tests for the taxi_job CLI helpers (ADVICE r6 items):
 
-- ``drain``: the input-side drain loop must surface a failed streaming
-  query (re-raise its exception) instead of polling recentProgress forever,
-  and must return promptly on a clean external stop.
+- drain: the CLI runs ``run_to_completion(q, until=input_drained(q))``,
+  which must surface a failed streaming query (re-raise its exception)
+  instead of polling recentProgress forever, return promptly on a clean
+  external stop, and return once three batches in a row read no input.
 - ``--pid auto``: real nycTaxiRides input carries a START *and* an END
   event per rideId (NYCTaxiRideSource.java emits both halves), so keying
   the pending store on rideId alone violates the uniqueness contract; the
@@ -20,80 +21,63 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyfads.config import FADSConfig
-from pyfads.taxi_job import AUTO_PID_COL, drain, with_auto_pid
+from pyfads.streamrun import run_to_completion
+from pyfads.taxi_job import AUTO_PID_COL, input_drained, with_auto_pid
+from tests.test_streamrun import StubQuery
 
 
 # ---------------------------------------------------------------------------
-# drain() unit tests against a stub StreamingQuery
+# the CLI's drain: run_to_completion(q, until=input_drained(q)) against a
+# stub StreamingQuery
 # ---------------------------------------------------------------------------
 
 
-class _StubQuery:
-    def __init__(self, script):
-        # script: list of (isActive, exception, recentProgress) snapshots;
-        # the last snapshot repeats forever
-        self._script = list(script)
-        self._i = 0
-
-    def _snap(self):
-        return self._script[min(self._i, len(self._script) - 1)]
-
-    @property
-    def isActive(self):
-        active, _, _ = self._snap()
-        return active
-
-    def exception(self):
-        _, exc, _ = self._snap()
-        return exc
-
-    @property
-    def recentProgress(self):
-        _, _, prog = self._snap()
-        self._i += 1  # advance after each poll iteration reads progress
-        return prog
+def _drain(q):
+    run_to_completion(q, until=input_drained(q))
+    assert q.calls == ["stop"]
 
 
 def test_drain_reraises_failed_query():
     boom = RuntimeError("poison line killed the stream")
-    q = _StubQuery(
+    q = StubQuery(
         [
-            (True, None, [{"batchId": 0, "numInputRows": 40}]),
-            (False, boom, []),
+            {"progress": [{"batchId": 0, "numInputRows": 40}]},
+            {"active": False, "exc": boom},
         ]
     )
     with pytest.raises(RuntimeError, match="poison line"):
-        drain(q, sleep_s=0.0)
+        run_to_completion(q, until=input_drained(q))
+    assert q.calls == ["stop"]
 
 
 def test_drain_returns_on_clean_external_stop():
-    q = _StubQuery(
+    q = StubQuery(
         [
-            (True, None, [{"batchId": 0, "numInputRows": 40}]),
-            (False, None, []),
+            {"progress": [{"batchId": 0, "numInputRows": 40}]},
+            {"active": False},
         ]
     )
     t0 = _t.time()
-    drain(q, sleep_s=0.0)
+    _drain(q)
     assert _t.time() - t0 < 5  # returned, did not spin
 
 
 def test_drain_returns_after_three_zero_input_batches():
-    q = _StubQuery(
+    q = StubQuery(
         [
-            (True, None, [{"batchId": 0, "numInputRows": 40}]),
-            (
-                True,
-                None,
-                [
+            {"bid": 0, "progress": [{"batchId": 0, "numInputRows": 40}]},
+            {
+                "bid": 3,
+                "trigger": False,
+                "progress": [
                     {"batchId": 1, "numInputRows": 0},
                     {"batchId": 2, "numInputRows": 0},
                     {"batchId": 3, "numInputRows": 0},
                 ],
-            ),
+            },
         ]
     )
-    drain(q, sleep_s=0.0)
+    _drain(q)
 
 
 # ---------------------------------------------------------------------------
