@@ -56,7 +56,7 @@ LINE_BUDGET = 1700
 
 
 def compact_line(
-    summary: dict, timings: "dict[str, float]", detail_name: str,
+    summary: dict, timings: "dict[str, float]", detail_name: "str | None",
     budget: int = LINE_BUDGET,
 ) -> str:
     """The single stdout JSON line: required schema + the slowest queries
@@ -255,8 +255,15 @@ def main() -> None:
     # Full per-query detail (min + median + rep count) goes to a repo file:
     # the round driver captures only the last ~2000 chars of stdout, and at
     # 97 queries the full dict no longer fits on one parseable line (this is
-    # exactly how BENCH_r04.json ended up with parsed:null).
+    # exactly how BENCH_r04.json ended up with parsed:null).  A subset run
+    # (SPARK_GRAFT_BENCH_ONLY) writes none, so it cannot clobber the
+    # committed full-suite detail; its line says "detail": null.
+    if only:
+        print(compact_line(summary, timings, None))
+        spark.stop()
+        return
     full = dict(summary)
+    full["cpus"] = int(CPUS)
     full["queries"] = timings
     full["queries_median"] = medians
     full["queries_reps"] = rep_counts

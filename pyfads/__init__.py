@@ -13,8 +13,10 @@ re-exported here so `import pyfads` stays cheap):
 - ``pyfads.fads_batch`` / ``pyfads.fads_stream`` / ``pyfads.fads_core`` —
   the FADS generalizer: parity, partitioned, hot-key-salted, streaming.
 - ``pyfads.primitives`` — the Generalizer's relational primitives G1-G11.
-- ``pyfads.io`` — sources/sinks: throttled gz-CSV, rate/csv streams,
+- ``pyfads.io`` — sources/sinks: gz-CSV taxi rides, arrival enrichment,
   parquet, bucketed + range layouts, upsert merge.
+- ``pyfads.streamrun`` — chunked file streams and the one driver that runs
+  a streaming query to completion.
 - ``pyfads.dedup`` — exact / MinHash-LSH / SimHash / n-gram Jaccard /
   prefix-filter-exact dedup, connected components, signature store.
 - ``pyfads.similarity`` — cosine / LSH / IVF / IVF-PQ (+store) / PCA ANN.

@@ -12,16 +12,10 @@ Structured-Streaming-native equivalents here:
   reference's ``close()`` flush (G14, Generalizer.java:59-74).  TTL cluster
   expiry (G3) runs on the logical arrival clock inside the state machine,
   deterministic and replayable, never ``System.currentTimeMillis()``.
-- :func:`fads_generalize_stream_tws` / :class:`FADSStatefulProcessor` —
-  the same operator on Spark 4's ``transformWithStateInPandas``: the codec
-  blob lives in a named RocksDB-backed ``ValueState`` and the G14 flush is
-  a per-key processing-time timer.  The Python runtime needs
-  ``google.protobuf`` (gated; falls back to the variant above).
-- :class:`ForeachBatchFADS` — driver-side fallback per SURVEY.md §7.4.2 for
-  environments without ``applyInPandasWithState``: one shared state machine
-  fed by ``foreachBatch``; ``flush()`` gives the exact end-of-stream drain.
-  Parity/testing tool — the state lives on the driver, so it is NOT the
-  100 TB path; the stateful-operator variants are.
+- :class:`ForeachBatchFADS` — driver-side variant per SURVEY.md §7.4.2:
+  one shared state machine fed by ``foreachBatch``; ``flush()`` gives the
+  exact end-of-stream drain.  Parity tool — the state lives on the driver,
+  so it is NOT the 100 TB path; the stateful operator above is.
 
 Ordering contract (G1): arrival order *within* a micro-batch is restored by
 sorting on ``(arrival_col, pid_col)``; order *across* batches is the
@@ -42,62 +36,20 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from pyfads.config import FADSConfig
 from pyfads.fads_batch import _assemble, _check_cols, _frame_inputs, _out_cols
 from pyfads.fads_core import FADSState, _Clusters
 from pyfads.schema import fads_output_schema
 
-try:  # Spark >= 3.4
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    HAS_APPLY_IN_PANDAS_WITH_STATE = True
-except ImportError:  # pragma: no cover
-    GroupStateTimeout = None
-    HAS_APPLY_IN_PANDAS_WITH_STATE = False
-
-try:  # Spark >= 4.0: the transformWithState stateful-processor API
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = None
-    HAS_TRANSFORM_WITH_STATE = False
-
-# The transformWithState PYTHON RUNTIME (a state-server protocol between the
-# JVM and the Python worker) additionally needs google.protobuf; without it
-# the streaming query crashes at initialization even though the API imports.
-# Same gating discipline as the PIL media decoder: the operator is real and
-# unit-tested, the runtime path activates where the dependency exists.
-import importlib.util as _ilu
-
-HAS_TWS_RUNTIME = HAS_TRANSFORM_WITH_STATE and (
-    _ilu.find_spec("google") is not None
-    and _ilu.find_spec("google.protobuf") is not None
-)
-
 __all__ = [
     "fads_generalize_stream",
-    "fads_generalize_stream_tws",
-    "FADSStatefulProcessor",
     "ForeachBatchFADS",
-    "HAS_APPLY_IN_PANDAS_WITH_STATE",
-    "HAS_TRANSFORM_WITH_STATE",
-    "HAS_TWS_RUNTIME",
-    "ROCKSDB_PROVIDER",
     "STATE_CODEC_VERSION",
     "encode_state",
     "decode_state",
 ]
-
-# transformWithState requires the RocksDB state store (bundled with Spark 4)
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
 
 # GroupState value: one binary blob holding the versioned state codec below.
 _STATE_SCHEMA = "blob binary"
@@ -301,10 +253,6 @@ def fads_generalize_stream(
     drained and state dropped (G14).
     """
     _check_cols(df, cfg)
-    if not HAS_APPLY_IN_PANDAS_WITH_STATE:  # pragma: no cover
-        raise NotImplementedError(
-            "applyInPandasWithState unavailable; use ForeachBatchFADS"
-        )
     if partition_cols:
         src, keys = df, list(partition_cols)
     else:
@@ -319,101 +267,6 @@ def fads_generalize_stream(
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-class FADSStatefulProcessor(StatefulProcessor):
-    """Spark-4-native FADS operator for ``transformWithStateInPandas``.
-
-    Same semantics as :func:`fads_generalize_stream` (the
-    ``applyInPandasWithState`` path), expressed in the newer
-    stateful-processor API: the versioned codec blob lives in a named
-    ``ValueState`` (RocksDB-backed, changelog-checkpointed), and the
-    end-of-stream flush (G14) is a real per-key processing-time timer
-    re-armed on every input batch instead of a GroupState timeout."""
-
-    def __init__(self, cfg: FADSConfig, input_cols: list[str], flush_after_ms: int):
-        self.cfg = cfg
-        self.input_cols = input_cols
-        self.flush_after_ms = flush_after_ms
-
-    def init(self, handle) -> None:
-        self.handle = handle
-        self.state = handle.getValueState("fads", _STATE_SCHEMA)
-
-    def _load(self):
-        blob = self.state.get()
-        if blob is None:
-            return FADSState(self.cfg), None
-        return decode_state(blob[0], self.cfg)
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timerValues):
-        cfg = self.cfg
-        fads, pending = self._load()
-        chunks = [p for p in rows if len(p)]
-        if chunks:
-            out, pending = _ingest_batch(
-                fads, pending, pd.concat(chunks, ignore_index=True), cfg, self.input_cols
-            )
-            if len(out):
-                yield out
-        self.state.update((encode_state(fads, pending),))
-        # re-arm the idle-flush timer: one live timer per key
-        for t in self.handle.listTimers():
-            self.handle.deleteTimer(t)
-        self.handle.registerTimer(
-            timerValues.getCurrentProcessingTimeInMs() + self.flush_after_ms
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        # G14: idle timer == end-of-stream flush (reference close())
-        blob = self.state.get()
-        if blob is not None:
-            fads, pending = decode_state(blob[0], self.cfg)
-            out, _ = _release(fads.flush(), pending, self.cfg, self.input_cols)
-            self.state.clear()
-            if len(out):
-                yield out
-
-    def close(self) -> None:
-        pass
-
-
-def fads_generalize_stream_tws(
-    df: DataFrame,
-    cfg: FADSConfig,
-    partition_cols: list[str] | None = None,
-    flush_after_ms: int = 60_000,
-) -> DataFrame:
-    """Streaming FADS on the Spark 4 ``transformWithStateInPandas`` operator.
-
-    Identical contract to :func:`fads_generalize_stream`; requires the
-    RocksDB state store provider on the session::
-
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-                       ROCKSDB_PROVIDER)
-    """
-    _check_cols(df, cfg)
-    if not HAS_TRANSFORM_WITH_STATE:  # pragma: no cover
-        raise NotImplementedError(
-            "transformWithStateInPandas unavailable; use fads_generalize_stream"
-        )
-    if not HAS_TWS_RUNTIME:
-        raise NotImplementedError(
-            "transformWithState's Python runtime needs google.protobuf, which "
-            "is not installed here; use fads_generalize_stream "
-            "(applyInPandasWithState) — identical semantics, same state codec"
-        )
-    if partition_cols:
-        src, keys = df, list(partition_cols)
-    else:
-        src, keys = df.withColumn("__g", F.lit(1)), ["__g"]
-    proc = FADSStatefulProcessor(cfg, df.columns, flush_after_ms)
-    return src.groupBy(*keys).transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=fads_output_schema(df.schema, cfg),
-        outputMode="append",
-        timeMode="processingTime",
     )
 
 
@@ -433,8 +286,7 @@ class ForeachBatchFADS:
     scales out per key group.
 
     >>> fb = ForeachBatchFADS(cfg)
-    >>> q = stream.writeStream.foreachBatch(fb).start()
-    ... q.processAllAvailable(); q.stop()
+    >>> run_to_completion(stream.writeStream.foreachBatch(fb).start())
     >>> result = pd.concat([*fb.outputs, fb.flush()])
     """
 

@@ -93,8 +93,10 @@ def pagerank(
             [], "doc_id long, degree long, pagerank_scaled long"
         )
     base = (3 * scale) // (20 * n)
-    ranks = deg.select(
-        F.col("u").alias("node"), F.lit(scale // n).cast("long").alias("rank")
+    # seeded from the checkpointed edeg too: the raw `deg` plan would re-run
+    # pair generation; its node set is edeg's distinct u (see above)
+    ranks = edeg.select(F.col("u").alias("node")).distinct().select(
+        "node", F.lit(scale // n).cast("long").alias("rank")
     ).localCheckpoint(eager=False)
     for i in range(iterations):
         contrib = edeg.join(ranks.withColumnRenamed("node", "u"), "u").select(

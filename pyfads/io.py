@@ -6,20 +6,20 @@ map (CSVParser.java:52-86).  Spark-first replacements:
 
 - batch reads: ``spark.read.csv`` (Spark decompresses ``.gz`` natively) /
   ``spark.read.parquet`` — predicate pushdown and column pruning come free.
-- rate control is a *source* concern: Structured Streaming ``rate`` source
-  (``rowsPerSecond``) or file source with ``maxFilesPerTrigger`` — never a
-  busy-wait that burns a core (SURVEY.md §4.2).
+- rate control is a *source* concern: a file source with
+  ``maxFilesPerTrigger`` — never a busy-wait that burns a core
+  (SURVEY.md §4.2).
 - arrival time (P4, TransactionGeneralizationJob.java:58-61): the
   reference attaches ``System.currentTimeMillis()``; we default to a
   *deterministic* arrival clock derived from the data so runs are
-  replayable (SURVEY.md §7.4.5), with a wall-clock variant for live streams.
+  replayable (SURVEY.md §7.4.5).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from pyfads.schema import TAXI_CSV_TOKEN_ORDER, TAXI_RIDE_SCHEMA
+from pyfads.schema import TAXI_CSV_TOKEN_ORDER
 
 __all__ = [
     "read_table",
@@ -29,7 +29,6 @@ __all__ = [
     "parse_taxi_lines",
     "parse_csv_with_pid",
     "with_arrival",
-    "with_wallclock_arrival",
     "write_parquet",
     "write_bucketed",
     "write_range_layout",
@@ -38,8 +37,6 @@ __all__ = [
     "read_orc",
     "write_orc",
     "register_views",
-    "rate_stream",
-    "csv_stream",
     "stream_state_partitions",
     "stream_shuffle_scope",
 ]
@@ -197,8 +194,8 @@ def parse_csv_with_pid(
     ``monotonically_increasing_id`` is partition-dependent; for a
     *deterministic* PID use :func:`with_arrival`-style ``row_number`` over an
     explicit ordering instead.  The reference's rows/s rate limit
-    (CSVParser.java:76-81) is a source concern in Spark — see
-    :func:`rate_stream`.
+    (CSVParser.java:76-81) is a source concern in Spark — a file stream's
+    ``maxFilesPerTrigger`` (:func:`pyfads.streamrun.chunked_source`).
     """
     ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
     out = lines.select(
@@ -233,11 +230,6 @@ def with_arrival(
         return df.withColumn(arrival_col, epoch_ms(df, from_ts_col))
     w = Window.orderBy(*[F.col(c) for c in order_cols])
     return df.withColumn(arrival_col, F.row_number().over(w).cast("long"))
-
-
-def with_wallclock_arrival(df: DataFrame, arrival_col: str = "arrival_ms") -> DataFrame:
-    """P4 — reference-faithful processing-time arrival (non-deterministic)."""
-    return df.withColumn(arrival_col, F.unix_millis(F.current_timestamp()))
 
 
 def write_parquet(
@@ -347,8 +339,7 @@ the 1-key FADS parity stream cost 1.4 s against 32 state stores).  50k
 input rows per partition is a few MB of state — far below the 100 MB-1 GB
 per-partition guidance for batch shuffles (guide §2.2), so the derived
 count errs toward MORE partitions as data grows; at 100 TB the same rule
-yields thousands of partitions.  Env override:
-``SPARK_GRAFT_STREAM_SHUFFLE``."""
+yields thousands of partitions."""
 
 
 def stream_state_partitions(
@@ -361,11 +352,7 @@ def stream_state_partitions(
     :data:`STREAM_ROWS_PER_STATE_PARTITION`, and always by the session's
     core count."""
     import math
-    import os
 
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        return max(1, int(env))
     cores = spark.sparkContext.defaultParallelism
     cap = cores
     if n_keys is not None:
@@ -406,29 +393,6 @@ class stream_shuffle_scope:
 
     def __exit__(self, *exc) -> None:
         self._spark.conf.set("spark.sql.shuffle.partitions", self._old)
-
-
-def rate_stream(spark: SparkSession, rows_per_second: int) -> DataFrame:
-    """P1 (throttle) — Structured Streaming rate source: the idiomatic
-    replacement for the reference's busy-wait pacing
-    (NYCTaxiRideSource.java:143-150)."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-
-
-def csv_stream(
-    spark: SparkSession, directory: str, schema=TAXI_RIDE_SCHEMA, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """P1 (file stream) — stream a directory of CSV files with bounded
-    per-micro-batch intake."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .csv(directory)
-    )
 
 
 # --------------------------------------------------------------------------

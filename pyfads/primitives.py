@@ -139,85 +139,21 @@ def best_fitting_cluster(
     tuple_id_cols: list[str],
     tiebreak_cols: list[str],
     il_col: str = "info_loss",
-    strategy: str = "window",
 ) -> DataFrame:
     """G9 — per tuple, the fitting cluster with minimal infoLoss
     (Generalizer.java:230-243); deterministic tie-break on ``tiebreak_cols``
     (which must make (il, tiebreaks) unique per tuple — in FADS they are
     the cluster key).  Output columns: tuple ids, the remaining tuple
-    columns, then every cluster column — identical for both strategies.
+    columns, then every cluster column.
 
-    Scale: broadcast theta-join (the cluster cache is bounded) feeding
-    either
-    - ``strategy="window"`` (default): per-tuple ``row_number`` + rank=1
-      filter — Spark plans it as WindowGroupLimit, so each map task keeps
-      one candidate per tuple BEFORE the exchange; the residual sort is
-      over <=1 row per tuple per task.  Measured 2x faster than minby at
-      sf0.1 (2.3 s vs 5.0 s).
-    - ``strategy="minby"``: ``groupBy(tuple_id).agg(min_by(payload))`` —
-      also map-side-combined, but pays a wide struct allocation per pair;
-      kept as the cross-checkable alternative plan.
-    - ``strategy="fold"``: collapse the (bounded) cluster cache to ONE
-      collected array row, broadcast it, and resolve the per-row argmin
-      with ``filter`` + ``array_min`` over (il, tiebreaks, payload)
-      structs, pooling duplicate tuple ids with a map-side ``min(struct)``
-      aggregate — the per-pair row never materializes and no window
-      executes.  Struct comparison is field-lexicographic, so the
-      ordering is identical to the window's (il, tiebreaks) sort.
-      Measured parity with "window" at sf0.1 on the 6-cluster fixture
-      (3.5-4 s both: pair fan-out is tiny there, so WindowGroupLimit
-      already prunes well); fold's advantage grows with the number of
-      fitting clusters per tuple, since its exchange stays one row per
-      tuple id no matter the fan-out.
+    Scale: broadcast theta-join (the cluster cache is bounded) feeding a
+    per-tuple ``row_number`` + rank=1 filter — Spark plans it as
+    WindowGroupLimit, so each map task keeps one candidate per tuple BEFORE
+    the exchange; the residual sort is over <=1 row per tuple per task.
     """
     clash = set(tuples.columns) & set(clusters_with_il.columns)
     if clash:
         raise ValueError(f"ambiguous columns between tuples and clusters: {clash}")
-    t_other_all = [c for c in tuples.columns if c not in tuple_id_cols]
-    if strategy == "fold":
-        c_cols = clusters_with_il.columns
-        ordered = [il_col, *tiebreak_cols]
-        rest = [c for c in c_cols if c not in ordered]
-        carr = clusters_with_il.agg(
-            F.collect_list(
-                F.struct(*[F.col(c) for c in ordered], *[F.col(c) for c in rest])
-            ).alias("__cs")
-        )
-
-        def fits(c):
-            cond = None
-            for q in qid_cols:
-                term = (F.col(q) > c[f"{q}_lo"]) & (F.col(q) < c[f"{q}_hi"])
-                cond = term if cond is None else cond & term
-            return cond
-
-        best = F.array_min(F.filter(F.col("__cs"), fits))
-        per_row = (
-            tuples.join(F.broadcast(carr))
-            .withColumn("__best", best)
-            .filter(F.col("__best").isNotNull())
-        )
-        # pool duplicate tuple ids exactly like the window strategy's
-        # partitionBy does: one row per id, global (il, tiebreaks) min
-        # across all of the id's rows.  min over a struct whose leading
-        # fields are the ordering keys == that argmin, map-side-combined
-        # (no window, no per-pair exchange).  Trailing t_other fields make
-        # the duplicate-id pick deterministic (window leaves it tie-broken
-        # arbitrarily there; the documented contract is unique ids).
-        pooled = per_row.groupBy(*tuple_id_cols).agg(
-            F.min(
-                F.struct(
-                    *[F.col(f"__best.{c}").alias(f"__c_{c}") for c in ordered],
-                    *[F.col(f"__best.{c}").alias(f"__c_{c}") for c in rest],
-                    *[F.col(c) for c in t_other_all],
-                )
-            ).alias("__m")
-        )
-        return pooled.select(
-            *tuple_id_cols,
-            *[F.col(f"__m.{c}").alias(c) for c in t_other_all],
-            *[F.col(f"__m.__c_{c}").alias(c) for c in c_cols],
-        )
     pairs = tuples.alias("t").join(
         F.broadcast(clusters_with_il), on=_fits_pred("t", qid_cols), how="inner"
     )
@@ -227,20 +163,6 @@ def best_fitting_cluster(
         *[F.col(f"t.{c}").alias(c) for c in t_other],
         *[F.col(c) for c in clusters_with_il.columns],
     ]
-    if strategy == "minby":
-        ord_ = F.struct(F.col(il_col), *[F.col(c) for c in tiebreak_cols])
-        payload = F.struct(
-            *[F.col(f"t.{c}").alias(c) for c in t_other],
-            *[F.col(c) for c in clusters_with_il.columns],
-        )
-        best = pairs.groupBy(
-            *[F.col(f"t.{c}").alias(c) for c in tuple_id_cols]
-        ).agg(F.min_by(payload, ord_).alias("__best"))
-        return best.select(
-            *tuple_id_cols,
-            *[F.col(f"__best.{c}").alias(c) for c in t_other],
-            *[F.col(f"__best.{c}").alias(c) for c in clusters_with_il.columns],
-        )
     w = Window.partitionBy(*[F.col(f"t.{c}") for c in tuple_id_cols]).orderBy(
         F.col(il_col), *[F.col(c) for c in tiebreak_cols]
     )
@@ -258,82 +180,24 @@ def knn_in_groups(
     qid_cols: list[str],
     bounds: DataFrame,
     k: int,
-    strategy: str = "array",
 ) -> DataFrame:
     """G5 — per-pivot top-k nearest neighbours by the FADS distance:
     mean over QIDs of abs(x-pivot)/(global_hi-global_lo)
     (Generalizer.java:193-227 + :342-365, *intended* formula per
     SURVEY.md §2.5.1-2).  Neighbour search is blocked by ``group_cols`` —
     the relational analogue of the reference's bounded (<=30-row) buffer.
+    Ties break on (distance, neighbour id), so ranking is deterministic.
 
-    Two physical strategies, identical results (ties break on
-    (distance, neighbour id) either way, so ranking is deterministic):
-
-    - ``strategy="array"`` (default): ``collect_list`` the bounded group
-      once, then per-pivot ``transform``/``array_sort``/``slice`` inside
-      whole-stage codegen.  ONE shuffle of the input total, no pair-level
-      window sort — measured ~3x faster than the join plan at sf0.1.
-      Correct because groups are bounded (FADS buffer <= 30 rows); never
-      use it for unbounded groups.
-    - ``strategy="join"``: the textbook self-join + row_number window.
-      Both join sides shuffle on the group key and every pivot x neighbour
-      pair goes through the WindowGroupLimit sort.  Keeps working however
-      large a single group grows (spills instead of building an array).
-    """
-    if strategy == "array":
-        return _knn_in_groups_array(df, group_cols, id_col, qid_cols, bounds, k)
-    gb = F.broadcast(bounds.select(
-        *[F.col(f"{c}_lo").alias(f"__g_{c}_lo") for c in qid_cols],
-        *[F.col(f"{c}_hi").alias(f"__g_{c}_hi") for c in qid_cols],
-    ))
-    pivots = df.select(
-        *group_cols, F.col(id_col).alias("pivot_id"),
-        *[F.col(c).alias(f"__p_{c}") for c in qid_cols],
-    )
-    others = df.select(
-        *group_cols, F.col(id_col).alias("neighbor_id"),
-        *[F.col(c).alias(f"__n_{c}") for c in qid_cols],
-    )
-    pairs = (
-        pivots.join(others, on=group_cols)
-        .filter(F.col("pivot_id") != F.col("neighbor_id"))
-        .join(gb)
-    )
-    terms = [
-        F.when(
-            F.col(f"__g_{c}_hi") > F.col(f"__g_{c}_lo"),
-            F.abs(F.col(f"__n_{c}") - F.col(f"__p_{c}"))
-            / (F.col(f"__g_{c}_hi") - F.col(f"__g_{c}_lo")),
-        ).otherwise(F.lit(0.0))
-        for c in qid_cols
-    ]
-    dist = reduce(lambda a, b: a + b, terms) / F.lit(float(len(qid_cols)))
-    pairs = pairs.withColumn("dist", dist)
-    w = Window.partitionBy(*group_cols, "pivot_id").orderBy("dist", "neighbor_id")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*group_cols, "pivot_id", "neighbor_id", "dist", "rank")
-    )
-
-
-def _knn_in_groups_array(
-    df: DataFrame,
-    group_cols: list[str],
-    id_col: str,
-    qid_cols: list[str],
-    bounds: DataFrame,
-    k: int,
-) -> DataFrame:
-    """Array-op kNN for bounded groups (see :func:`knn_in_groups`).
+    Contract: every ``group_cols`` group is bounded (in FADS, the buffer of
+    <= 30 rows) — the whole group is collected into one array row.
 
     Shape: groupBy(collect_list(struct)) — one hash shuffle with no
     map-side blowup — then explode pivots, compute the neighbour distances
-    with ``transform`` over the <= buffer-size group array, ``array_sort``
-    (struct ordering = (dist, neighbor_id) — exactly the tie-break),
-    ``slice`` the top-k, and ``posexplode`` into ranked rows.  The pair
-    'table' never exists as rows, so there is no second shuffle and no
-    pair-level sort."""
+    with ``transform`` over the group array, ``array_sort`` (struct
+    ordering = (dist, neighbor_id) — exactly the tie-break), ``slice`` the
+    top-k, and ``posexplode`` into ranked rows.  The pair 'table' never
+    exists as rows, so there is no second shuffle and no pair-level sort.
+    """
     gb = F.broadcast(
         bounds.select(
             *[F.col(f"{c}_lo").alias(f"__g_{c}_lo") for c in qid_cols],
@@ -345,8 +209,7 @@ def _knn_in_groups_array(
         df.groupBy(*group_cols).agg(F.collect_list(rows).alias("__rows")).join(gb)
     )
     # pivot on DISTINCT ids: rows sharing an id merge into one ranked
-    # neighbour list (matching the join+window semantics, where the window
-    # partitions on pivot_id and a duplicated id pools its pairs)
+    # neighbour list (a duplicated id pools its pairs)
     pivoted = grouped.select(
         *group_cols, "__rows",
         *[F.col(f"__g_{c}_lo") for c in qid_cols],

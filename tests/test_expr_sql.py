@@ -90,7 +90,7 @@ def test_vec_lit_sql_roundtrip(spark):
     assert list(got) == [float(x) for x in v]
 
 
-def test_stream_state_partitions_policy(spark, monkeypatch):
+def test_stream_state_partitions_policy(spark):
     from pyfads.io import stream_state_partitions
 
     cores = spark.sparkContext.defaultParallelism
@@ -103,9 +103,6 @@ def test_stream_state_partitions_policy(spark, monkeypatch):
     assert stream_state_partitions(spark, n_rows=10**12) == cores
     # unknown shape: session default parallelism
     assert stream_state_partitions(spark) == cores
-    # env override wins
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "7")
-    assert stream_state_partitions(spark, n_keys=1) == 7
 
 
 def test_stream_shuffle_scope_restores(spark):

@@ -195,7 +195,8 @@ class FakeState:
 def test_timeout_flush_drains_buffer(events_pdf, mode):
     """G14: the idle-timeout path emits exactly the buffered tail with the
     same intervals the batch flush assigns — also when the legacy distance
-    reads columns other than the QIDs."""
+    reads columns other than the QIDs.  Neither path ever yields a zero-row
+    frame, even for a batch that releases nothing or an empty batch."""
     if mode == "intended":
         cfg, pdf = _cfg(), events_pdf
     else:
@@ -209,12 +210,18 @@ def test_timeout_flush_drains_buffer(events_pdf, mode):
 
     handler = make_stream_handler(cfg, list(pdf.columns), 1000)
     st = FakeState()
-    released = list(handler((1,), iter([pdf]), st))
+    released = []
+    # too few rows to release, an empty batch, then the rest
+    for part in (pdf.iloc[: cfg.k - 1], pdf.iloc[:0], pdf.iloc[cfg.k - 1 :]):
+        released += list(handler((1,), iter([part]), st))
     assert st.exists  # buffer carried in state
+    assert released and all(len(f) for f in released)
 
     st.hasTimedOut = True
     flushed = list(handler((1,), iter([]), st))
     assert st.removed
+    assert flushed and all(len(f) for f in flushed)
+    assert list(handler((1,), iter([]), st)) == []  # timeout without state
     tail = pd.concat(flushed)
     if mode == "intended":
         assert len(tail) == cfg.buffer_rows
@@ -431,125 +438,6 @@ def test_stream_restart_from_checkpoint(spark, events_pdf, tmp_path_factory):
     pd.testing.assert_frame_equal(b, s, check_dtype=False)
 
 
-# ---------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas variant
-# ---------------------------------------------------------------------------
-
-
-class FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def clear(self):
-        self._v = None
-
-
-class FakeHandle:
-    def __init__(self):
-        self.vs = FakeValueState()
-        self.timers: list[int] = []
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.vs
-
-    def listTimers(self):
-        return list(self.timers)
-
-    def deleteTimer(self, t):
-        self.timers.remove(t)
-
-    def registerTimer(self, ms):
-        self.timers.append(ms)
-
-
-class FakeTimerValues:
-    def __init__(self, now_ms=1_000_000):
-        self._now = now_ms
-
-    def getCurrentProcessingTimeInMs(self):
-        return self._now
-
-
-def test_stateful_processor_parity(events_pdf):
-    """FADSStatefulProcessor (the transformWithStateInPandas operator body)
-    across two input batches + the expired-timer flush equals the batch run
-    row for row, and exactly one flush timer stays armed per key."""
-    from pyfads.fads_stream import FADSStatefulProcessor
-
-    cfg = _cfg()
-    proc = FADSStatefulProcessor(cfg, list(events_pdf.columns), flush_after_ms=1000)
-    handle = FakeHandle()
-    proc.init(handle)
-
-    half = len(events_pdf) // 2
-    tv = FakeTimerValues()
-    out = list(proc.handleInputRows((1,), iter([events_pdf.head(half)]), tv))
-    out += list(proc.handleInputRows((1,), iter([events_pdf.iloc[half:]]), tv))
-    assert handle.timers == [tv.getCurrentProcessingTimeInMs() + 1000]  # re-armed, not stacked
-    out += list(proc.handleExpiredTimer((1,), tv, None))
-    assert handle.vs.get() is None  # state dropped on flush
-
-    batch = run_fads_pandas(events_pdf, cfg)
-    stream_all = pd.concat(out)
-    b = batch.sort_values("event_id").reset_index(drop=True)
-    s = stream_all[b.columns].sort_values("event_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(b, s, check_dtype=False)
-
-
-def test_tws_end_to_end(spark, events_pdf, chunk_dir):
-    """Real transformWithStateInPandas query (RocksDB state store) — runs
-    only where the Python runtime's protobuf dependency exists."""
-    from pyfads.fads_stream import HAS_TWS_RUNTIME, ROCKSDB_PROVIDER, fads_generalize_stream_tws
-
-    cfg = _cfg()
-    if not HAS_TWS_RUNTIME:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            fads_generalize_stream_tws(
-                spark.readStream.schema(spark.createDataFrame(events_pdf.head(1)).schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(chunk_dir),
-                cfg,
-            )
-        pytest.skip("transformWithState runtime needs google.protobuf")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        src = (
-            spark.readStream.schema(spark.createDataFrame(events_pdf.head(1)).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunk_dir)
-        )
-        out = fads_generalize_stream_tws(src, cfg, flush_after_ms=4000)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_out")
-            .outputMode("append")
-            .start()
-        )
-        run_to_completion(
-            q, until=lambda: spark.table("tws_out").count() >= len(events_pdf)
-        )
-        got = spark.table("tws_out").toPandas()
-        batch = run_fads_pandas(events_pdf, cfg)
-        b = batch.sort_values("event_id").reset_index(drop=True)
-        s = got[b.columns].sort_values("event_id").reset_index(drop=True)
-        pd.testing.assert_frame_equal(b, s, check_dtype=False)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_stream_multibatch_ttl_flush_parity(spark, tmp_path_factory):
     """End-to-end multi-micro-batch parity against the pure-Python golden
     oracle, including the REAL ProcessingTimeTimeout flush (not a fake
@@ -703,7 +591,7 @@ def test_end_to_end_taxi_job_gz_to_parquet(spark, tmp_path):
 
     raw = (
         spark.readStream.option("maxFilesPerTrigger", 1).text(str(src_dir))
-    )  # P1: throttling is the source's concern in Spark (rate_stream)
+    )  # P1: throttling is the source's concern in Spark (maxFilesPerTrigger)
     parsed = parse_taxi_lines(raw)  # P2
     enriched = parsed.withColumn(
         "arrival_ms", F.col("startTime")

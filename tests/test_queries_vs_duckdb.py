@@ -49,65 +49,3 @@ def test_query_matches_oracle(spark, duck, name):
 def test_rows_only_queries_run(spark, name):
     df = entry.queries()[name](spark, SF_DIR)
     assert df.count() >= 0
-
-
-def test_knn_strategies_agree(spark):
-    """The array-op kNN (default) and the join+window kNN are alternative
-    physical plans of the same operator — identical output, including on
-    groups with duplicated pivot ids (where same-id pivots pool their
-    neighbour pairs into one ranking)."""
-    import pandas as pd
-
-    import pyfads.primitives as P
-    from pyfads.primitives_queries import QIDS, _li
-
-    li = _li(spark, SF_DIR)
-    gb = P.global_bounds(li, QIDS)
-    cols = ["l_orderkey", "pivot_id", "rank", "neighbor_id", "dist"]
-    a = (
-        P.knn_in_groups(li, ["l_orderkey"], "l_linenumber", QIDS, gb, k=3,
-                        strategy="array")
-        .toPandas()[cols].sort_values(cols).reset_index(drop=True)
-    )
-    j = (
-        P.knn_in_groups(li, ["l_orderkey"], "l_linenumber", QIDS, gb, k=3,
-                        strategy="join")
-        .toPandas()[cols].sort_values(cols).reset_index(drop=True)
-    )
-    a["rank"] = a["rank"].astype("int64")
-    j["rank"] = j["rank"].astype("int64")
-    pd.testing.assert_frame_equal(a, j)
-
-
-def test_best_cluster_strategies_agree(spark):
-    """window (default) and min_by G9 are alternative physical plans of the
-    same argmin — identical rows."""
-    import pandas as pd
-
-    import pyfads.primitives as P
-    from pyfads.primitives_queries import QIDS, _flag_clusters, _li
-
-    li = _li(spark, SF_DIR)
-    clusters = P.with_info_loss(_flag_clusters(li), P.global_bounds(li, QIDS), QIDS)
-    kw = dict(
-        qid_cols=QIDS,
-        tuple_id_cols=["l_orderkey", "l_linenumber"],
-        tiebreak_cols=["c_returnflag", "c_linestatus"],
-    )
-    cols = ["l_orderkey", "l_linenumber", "c_returnflag", "c_linestatus", "info_loss"]
-    w = (
-        P.best_fitting_cluster(li, clusters, strategy="window", **kw)
-        .select(*cols).toPandas().sort_values(cols).reset_index(drop=True)
-    )
-    m = (
-        P.best_fitting_cluster(li, clusters, strategy="minby", **kw)
-        .select(*cols).toPandas().sort_values(cols).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(w, m)
-    f = (
-        P.best_fitting_cluster(li, clusters, strategy="fold", **kw)
-        .select(*cols).toPandas().sort_values(cols).reset_index(drop=True)
-    )
-    # fold pools duplicate tuple ids with min(struct) instead of a window —
-    # including on the fixture's genuinely duplicated (orderkey, linenumber)s
-    pd.testing.assert_frame_equal(w, f)
