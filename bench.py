@@ -42,6 +42,23 @@ REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "6"))
 MIN_REPS = min(3, REPS)
 
 
+def _git_sha() -> "str | None":
+    """HEAD of the checkout this file sits in, or None outside one."""
+    import subprocess
+
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True,
+            text=True,
+            check=True,
+        )
+    except (OSError, subprocess.CalledProcessError):
+        return None
+    return out.stdout.strip() or None
+
+
 def _converged(reps: "list[float]") -> bool:
     if len(reps) < MIN_REPS:
         return False
@@ -264,6 +281,7 @@ def main() -> None:
         return
     full = dict(summary)
     full["cpus"] = int(CPUS)
+    full["git_sha"] = _git_sha()
     full["queries"] = timings
     full["queries_median"] = medians
     full["queries_reps"] = rep_counts

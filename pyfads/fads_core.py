@@ -21,8 +21,9 @@ fits / infoLoss) with the paper-intended fixes recorded in SURVEY.md §2.5:
    iteration order is an implementation detail).
 
 One :class:`FADSState` runs every FADS path: ``run_fads_pandas`` (batch,
-one ``process`` + ``flush`` per group) and the three streaming drivers (one
-``process`` per micro-batch, state carried between calls).  Each call is
+one ``process`` + ``flush`` per group) and the two streaming drivers,
+``fads_generalize_stream`` and ``ForeachBatchFADS`` (one ``process`` per
+micro-batch, state carried between calls).  Each call is
 vectorized around the sequential per-row decision:
 
 - global min/max bounds (G2) are prefix-accumulated once per call — an

@@ -1294,7 +1294,8 @@ def dedup_semantic_docs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same count from its golden-embeddings parquet — the r8 32-cell
     # pin existed only because the old twin re-evaluated the computed-
     # embedding CTE per centroid and OOM'd past ~78 cells); past 64 cells
-    # this entry exercises the bit-exact Arrow-UDF assignment path
+    # this entry exercises the flat-literal form of the in-plan ranking
+    # (similarity._rank_cells)
     nz = S.drop_zero_norm(embs, DIM)
     # the count exists only to size the codebook, and the trained codebook
     # is already memoized per (fixture, tag) — so the count lives INSIDE

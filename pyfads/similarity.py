@@ -637,8 +637,8 @@ def _cell_assign_udf(cents: np.ndarray, n_top: int, margin: "float | None" = Non
     """Arrow-batched coarse quantizer: per vector, the indices of its
     ``n_top`` nearest (max-dot) centroids.  The (tiny) codebook rides in
     the UDF closure — the FAISS quantizer-broadcast shape.  Shared by
-    :func:`ann_ivf_topk`, :func:`ann_ivfpq_topk` probing and
-    :func:`semantic_dedup`.
+    :func:`ann_ivf_topk` (corpus assignment and query probing) and
+    :func:`ann_ivfpq_topk` (query probing).
 
     ``margin`` makes the probe ADAPTIVE (r9 verdict #5): ranks >= 2 are
     emitted only when the vector actually sits near a cell boundary —
@@ -646,12 +646,12 @@ def _cell_assign_udf(cents: np.ndarray, n_top: int, margin: "float | None" = Non
     so clear-interior vectors stop fanning candidate pairs into their
     second cell.
 
-    Bit-exact with the in-plan fold path (:func:`_assign_cells_inplan`)
-    and the DuckDB oracles: :func:`fold_dots` replays the fold arithmetic,
-    :func:`top_cells` the ``dp DESC, cell`` tiebreak, and
-    :func:`fold_norms` the margin test's norm, so the
-    INPLAN_MAX_CENTROIDS switch at 65 cells changes the physical plan
-    only, never a verdict."""
+    Bit-exact with the in-plan ranking (:func:`_rank_cells`, either
+    literal form) and the DuckDB oracles: :func:`fold_dots` replays the
+    fold arithmetic, :func:`top_cells` the ``dp DESC, cell`` tiebreak,
+    and :func:`fold_norms` the margin test's norm, so choosing the UDF or
+    the in-plan ranking changes the physical plan only, never a
+    verdict."""
     C = np.ascontiguousarray(cents, dtype=np.float64)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
@@ -675,20 +675,6 @@ def _cell_assign_udf(cents: np.ndarray, n_top: int, margin: "float | None" = Non
         )
 
     return assign
-
-
-# In-plan fold-dot assignment embeds one literal centroid column per cell:
-# past ~64 cells the projection carries thousands of literals and hundreds
-# of higher-order expressions — plan bloat and janino pressure.  Larger
-# codebooks take the FLAT-literal in-plan path instead (one opaque Literal
-# + a transform loop, r13; previously the Arrow UDF, whose ArrowEvalPython
-# stage was measured bimodal at local[32] — the r12 dedup_semantic_docs
-# 48 s regression).  The switch is PHYSICAL only: _assign_cells_flat and
-# _cell_assign_udf both replay the fold arithmetic bit-exactly (fold_dots)
-# and the dp-desc/cell-asc tiebreak (top_cells), so all paths — and the
-# DuckDB oracles — agree on every assignment, ties included (round-8
-# advice #1; parity asserted in tests/test_llm_ops.py).
-INPLAN_MAX_CENTROIDS = 64
 
 
 def default_fine_sample(n_fine: int) -> int:
@@ -780,12 +766,8 @@ def train_two_level_centroids(
     )
     w = Window.partitionBy("cell").orderBy("__o", id_col)
     sample = (
-        embeddings.select(
-            F.col(id_col),
-            F.col(vec_col).alias("__v"),
-            F.md5(F.col(id_col).cast("string")).alias("__o"),
-            _two_level_coarse_udf(coarse)(F.col(vec_col)).alias("cell"),
-        )
+        _rank_cells(embeddings, coarse, id_col, vec_col)
+        .withColumn("__o", F.md5(F.col(id_col).cast("string")))
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= fine_sample_per_cell)
         .select("cell", "__o", id_col, "__v")
@@ -797,19 +779,6 @@ def train_two_level_centroids(
     mats = {c: np.asarray(v, dtype=np.float64) for c, v in members.items()}
     fine, fine_coarse = _train_fine_codebooks(mats, coarse, n_fine, seed)
     return coarse, fine, fine_coarse
-
-
-def _two_level_coarse_udf(coarse: np.ndarray):
-    """Coarse-stage-only assignment (used while SAMPLING for fine training
-    — same fold arithmetic as the scoring UDF)."""
-    C = np.ascontiguousarray(coarse, dtype=np.float64)
-
-    @F.pandas_udf(T.IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy())
-        return pd.Series(top_cells(fold_dots(m, C), 1)[:, 0])
-
-    return assign
 
 
 def _two_level_assign_udf(coarse: np.ndarray, fine: np.ndarray, fine_coarse: np.ndarray):
@@ -885,46 +854,6 @@ def adaptive_n_centroids(n_rows: int, target_cell: int = 64, floor: int = 32) ->
     return max(floor, n_rows // target_cell)
 
 
-def _probe_cells_inplan(
-    df: DataFrame,
-    cents: np.ndarray,
-    id_col: str,
-    vec_col: str,
-    n: int,
-    margin: "float | None" = None,
-) -> DataFrame:
-    """Top-``n`` probe cells per vector, in-plan like
-    :func:`_assign_cells_inplan`: ascending array_sort of the (dp, -cell)
-    structs puts the best (highest dp, then lowest cell) LAST, so the last
-    ``n`` elements are exactly the oracle's ``rn <= n`` rows.  Returns
-    ``(id_col, cell)`` exploded — n rows per vector, or fewer with an
-    adaptive ``margin`` (ranks >= 2 kept only when
-    ``dp1 - dp_r < margin * |v|`` — the boundary test the oracle
-    replays; clear-interior vectors probe one cell)."""
-    structs = ", ".join(
-        f"struct({_dot_fold_sql('`__v`', _vec_lit_sql(cents[j]))} AS dp, "
-        f"{-j} AS negcell)"
-        for j in range(len(cents))
-    )
-    arr = f"array_sort(array({structs}))"
-    if margin is None:
-        cells = f"transform(slice({arr}, -{n}, {n}), __t -> CAST(-__t.negcell AS INT))"
-    else:
-        best = f"element_at({arr}, -1)"
-        budget = f"{repr(float(margin))}D * {_norm_fold_sql('`__v`')}"
-        cells = (
-            f"concat(array(CAST(-({best}.negcell) AS INT)), "
-            # ranks n..2, best excluded
-            f"transform(filter(slice({arr}, -{n}, {n - 1}), "
-            f"__t -> ({best}.dp - __t.dp) < {budget}), "
-            "__t -> CAST(-__t.negcell AS INT)))"
-        )
-    return df.select(F.col(id_col), F.col(vec_col).alias("__v")).select(
-        id_col,
-        F.explode(F.expr(cells)).alias("cell"),
-    )
-
-
 def _flat_cb_lit(cents: np.ndarray) -> "F.Column":
     """The whole codebook as ONE flat ``array<double>`` literal — a single
     opaque JVM Literal (one py4j hop, one plan node), sliced per centroid
@@ -944,7 +873,7 @@ def _flat_structs_sql(n_cents: int, dim: int) -> str:
     """SQL text of the per-centroid ``struct(dp, -cell)`` array computed
     against the flat codebook column ``__cb`` and vector column ``__v`` —
     the any-codebook-size twin of the per-cell-literal struct list in
-    :func:`_assign_cells_inplan`/:func:`_probe_cells_inplan`.  The dot is
+    :func:`_rank_cells`.  The dot is
     the same left fold (``aggregate(zip_with(...), 0.0D, +)``) as
     :func:`_dot_fold_sql`, so every dp is bit-identical to both the
     literal path and the numpy :func:`fold_dots` replay (parity asserted
@@ -970,86 +899,80 @@ def _flat_structs_sql(n_cents: int, dim: int) -> str:
     )
 
 
-def _assign_cells_flat(
-    df: DataFrame, cents: np.ndarray, id_col: str, vec_col: str
-) -> DataFrame:
-    """Single-cell assignment against a flat-literal codebook: argmax over
-    the fold dots, tie -> lowest cell (max ``negcell``), exactly the
-    :func:`_assign_cells_inplan` semantics at any codebook size.  Returns
-    ``(id_col, __v, cell)``."""
-    cents = np.asarray(cents, dtype=np.float64)
-    cell = F.expr(
-        f"CAST(-(array_max({_flat_structs_sql(len(cents), cents.shape[1])})"
-        ".negcell) AS INT)"
-    )
-    return df.select(
-        F.col(id_col), F.col(vec_col).alias("__v"), _flat_cb_lit(cents).alias("__cb")
-    ).select(id_col, "__v", cell.alias("cell"))
+# In-plan fold-dot ranking embeds one literal centroid column per cell:
+# past ~64 cells the projection carries thousands of literals and hundreds
+# of higher-order expressions — plan bloat and janino pressure.  Larger
+# codebooks take the FLAT-literal form instead (one opaque Literal + a
+# transform loop, r13; previously the Arrow UDF, whose ArrowEvalPython
+# stage was measured bimodal at local[32] — the r12 dedup_semantic_docs
+# 48 s regression).  Below the threshold the per-cell literals stay: the
+# flat form forced everywhere measured slower on the 32-cell family
+# (dedup_semantic_groups 7.1 -> 8.6 s median, sf0.1, local[4]).  The
+# switch is PHYSICAL only: both forms — and _cell_assign_udf and the
+# DuckDB oracles — run the same fold arithmetic (fold_dots) and the
+# dp-desc/cell-asc tiebreak (top_cells), so they agree on every
+# assignment, ties included (round-8 advice #1; parity asserted in
+# tests/test_llm_ops.py).  Read ONLY by _rank_cells.
+INPLAN_MAX_CENTROIDS = 64
 
 
-def _flat_cells_sql(
-    n_cents: int, dim: int, n: int, margin: "float | None" = None
-) -> str:
-    """SQL text of the top-``n`` probe-cells ARRAY over ``__v``/``__cb``
-    columns — same ascending array_sort of (dp, -cell) structs and same
-    adaptive ``margin`` test as :func:`_probe_cells_inplan`, so the cell
-    SET per vector is identical to both the literal path and
-    :func:`_cell_assign_udf`.  Callers embed it in their own select (with
-    any passthrough columns) and explode."""
-    arr = f"array_sort({_flat_structs_sql(n_cents, dim)})"
-    if margin is None:
-        return f"transform(slice({arr}, -{n}, {n}), __t -> CAST(-__t.negcell AS INT))"
-    best = f"element_at({arr}, -1)"
-    budget = f"{repr(float(margin))}D * {_norm_fold_sql('`__v`')}"
-    return (
-        f"concat(array(CAST(-({best}.negcell) AS INT)), "
-        # ranks n..2, best excluded
-        f"transform(filter(slice({arr}, -{n}, {n - 1}), "
-        f"__t -> ({best}.dp - __t.dp) < {budget}), "
-        "__t -> CAST(-__t.negcell AS INT)))"
-    )
-
-
-def _probe_cells_flat(
+def _rank_cells(
     df: DataFrame,
     cents: np.ndarray,
     id_col: str,
     vec_col: str,
-    n: int,
+    n: int = 1,
     margin: "float | None" = None,
 ) -> DataFrame:
-    """Top-``n`` probe cells per vector against a flat-literal codebook —
-    the any-size twin of :func:`_probe_cells_inplan`.  Returns
-    ``(id_col, cell)`` exploded."""
+    """The in-plan coarse quantizer of a flat codebook — every in-plan
+    cell ranking (assignment, multi-probe, prototypicality scoring,
+    two-level sampling) goes through here.  Each vector's cells rank by
+    the raw fold dot as ``struct(dp, -cell)`` values, so struct order is
+    the oracle's ``ORDER BY dp DESC, cell`` exactly (raw un-normalized
+    dot: the argmax is scale-invariant, and parity holds by construction
+    rather than by "BLAS rounds like the SQL fold", code-review r8 #8).
+    Map-only: no Arrow hop, no per-row normalization.
+
+    Returns ``(id_col, __v, cell, __dp)``: the best cell (tie -> lowest)
+    and its dp.  ``n > 1`` adds ``__cells``, the best cell followed by
+    ranks 2..n — with an adaptive ``margin`` only the ranks within
+    ``dp1 - dp_r < margin * |v|`` of the best (the boundary test the
+    oracle replays; clear-interior vectors probe one cell).
+
+    The struct array is built once per row: ``n == 1`` takes its
+    ``array_max`` (no sort); ``n > 1`` binds the ascending ``array_sort``
+    (best LAST), the best struct and the norm budget in their own
+    projection columns, so the slice/filter lambdas read columns instead
+    of re-sorting the whole codebook per probe element (ADVICE r13)."""
     cents = np.asarray(cents, dtype=np.float64)
-    cells = _flat_cells_sql(len(cents), cents.shape[1], n, margin)
-    return df.select(
-        F.col(id_col), F.col(vec_col).alias("__v"), _flat_cb_lit(cents).alias("__cb")
-    ).select(
-        id_col,
-        F.explode(F.expr(cells)).alias("cell"),
+    cols = [F.col(id_col), F.col(vec_col).alias("__v")]
+    if len(cents) <= INPLAN_MAX_CENTROIDS:
+        structs = ", ".join(
+            f"struct({_dot_fold_sql('`__v`', _vec_lit_sql(c))} AS dp, {-j} AS negcell)"
+            for j, c in enumerate(cents)
+        )
+        arr = f"array({structs})"
+    else:
+        arr = _flat_structs_sql(len(cents), cents.shape[1])
+        cols.append(_flat_cb_lit(cents).alias("__cb"))
+    best = F.col("__best")
+    cell = (-best["negcell"]).cast("int")
+    out = [id_col, "__v", cell.alias("cell"), best["dp"].alias("__dp")]
+    ranked = df.select(*cols)
+    if n <= 1:
+        return ranked.withColumn("__best", F.expr(f"array_max({arr})")).select(*out)
+    ranked = ranked.select(id_col, "__v", F.expr(f"array_sort({arr})").alias("__ranks"))
+    k = min(n, len(cents))
+    rest = f"slice(__ranks, -{k}, {k - 1})"  # ranks k..2, best excluded
+    if margin is not None:
+        budget = f"{repr(float(margin))}D * {_norm_fold_sql('`__v`')}"
+        ranked = ranked.withColumn("__budget", F.expr(budget))
+        rest = f"filter({rest}, __t -> (__best.dp - __t.dp) < __budget)"
+    cells = F.concat(
+        F.array(cell), F.expr(f"transform({rest}, __t -> CAST(-__t.negcell AS INT))")
     )
-
-
-def _assign_cells_inplan(
-    df: DataFrame, cents: np.ndarray, id_col: str, vec_col: str
-) -> DataFrame:
-    """Cell assignment IN THE PLAN, not in a numpy UDF: argmax over the
-    fold dots against centroid literals, tie -> lowest cell, via one
-    array_max over (dp, -cell) structs — EXACTLY the computation the
-    oracle's celldot/row_number CTEs run (raw un-normalized dot: argmax
-    is scale-invariant), so assignment parity is by construction rather
-    than by "BLAS rounds like the SQL fold" (code-review r8 #8).  Also
-    map-only: no Arrow hop, no per-row normalization.  Returns
-    ``(id_col, __v, cell)``."""
-    structs = ", ".join(
-        f"struct({_dot_fold_sql('`__v`', _vec_lit_sql(cents[j]))} AS dp, "
-        f"{-j} AS negcell)"
-        for j in range(len(cents))
-    )
-    cell = F.expr(f"CAST(-(array_max(array({structs})).negcell) AS INT)")
-    return df.select(F.col(id_col), F.col(vec_col).alias("__v")).select(
-        id_col, "__v", cell.alias("cell")
+    return ranked.withColumn("__best", F.element_at("__ranks", -1)).select(
+        *out, cells.alias("__cells")
     )
 
 
@@ -1233,9 +1156,8 @@ def _assign_cells(
     df: DataFrame, cents: "np.ndarray | tuple", id_col: str, vec_col: str
 ) -> DataFrame:
     """Single-cell assignment, any codebook shape — returns ``(id_col,
-    __v, cell)``.  Flat arrays take the hybrid path (per-cell-literal
-    in-plan fold argmax <= 64 cells, flat-literal in-plan argmax above —
-    bit-identical assignments either way); a ``(coarse, fine,
+    __v, cell)`` (plus ``__dp`` for a flat codebook).  A flat array is
+    ranked in-plan by :func:`_rank_cells`; a ``(coarse, fine,
     fine_coarse)`` tuple takes the hierarchical two-stage UDF, so every
     gate (incremental, served, streaming) accepts two-level codebooks."""
     if isinstance(cents, tuple):
@@ -1247,9 +1169,7 @@ def _assign_cells(
                 "cell"
             ),
         )
-    if len(cents) <= INPLAN_MAX_CENTROIDS:
-        return _assign_cells_inplan(df, cents, id_col, vec_col)
-    return _assign_cells_flat(df, cents, id_col, vec_col)
+    return _rank_cells(df, cents, id_col, vec_col)
 
 
 def _write_cent_table(spark, path: str, cents: np.ndarray) -> None:
@@ -1550,8 +1470,9 @@ def semantic_dedup(
     the cosine to the FINE centroid.
 
     Scale shape: the codebook is trained on a bounded md5-ordered sample
-    (:func:`train_ivf_centroids`) and broadcast; cell assignment is one
-    Arrow-batched UDF pass; the only wide exchange is the within-cell
+    (:func:`train_ivf_centroids`) and broadcast; cell assignment (and,
+    for ``n_assign > 1``, the probe ranking) is one map-only in-plan pass
+    (:func:`_rank_cells`); the only wide exchange is the within-cell
     self-join on the int cell id — O(sum c_i^2) pair work, NEVER corpus
     all-pairs.  At 100 TB, size ``n_centroids`` so the expected cell is
     bounded (SemDeDup used 50k clusters for LAION-scale — two-level
@@ -1594,7 +1515,15 @@ def semantic_dedup(
             "cell int, cvec array<double>",
         )
     )
-    assigned = _assign_cells(embeddings, codebook, id_col, vec_col)
+    probe_cols = []
+    if n_assign > 1:
+        # multi-probe ranks each vector ONCE: the probe-cell array rides the
+        # checkpointed withp below next to the primary cell (its first
+        # element)
+        assigned = _rank_cells(embeddings, cents, id_col, vec_col, n_assign, probe_margin)
+        probe_cols = ["__cells"]
+    else:
+        assigned = _assign_cells(embeddings, codebook, id_col, vec_col)
     # priority = cosine to the own-cell centroid; centroids are unit-norm
     # by construction, so cos = dot / |v|.  The row's norm is computed
     # ONCE here and carried through the pair join (the quadratic stage)
@@ -1616,6 +1545,7 @@ def semantic_dedup(
             "__v",
             _norm_fold("__v").alias("__n"),
             (_dot_fold("__v", "cvec") / _norm_fold("__v")).alias("centroid_cos"),
+            *probe_cols,
         )
         .localCheckpoint(eager=False)
     )
@@ -1669,19 +1599,11 @@ def semantic_dedup(
         # rank-r cell (r >= 2) only when dp1 - dp_r < margin * |v| — near
         # an actual boundary — cutting candidate volume for the bulk of
         # clear-interior vectors while keeping the boundary-pair recall
-        # the margin was sized for (oracle replays the same test).
-        if len(cents) <= INPLAN_MAX_CENTROIDS:
-            probe = _probe_cells_inplan(
-                embeddings, cents, id_col, vec_col, n_assign, probe_margin
-            )
-        else:
-            probe = _probe_cells_flat(
-                embeddings, cents, id_col, vec_col, n_assign, probe_margin
-            )
+        # the margin was sized for (oracle replays the same test).  The
+        # probe frame explodes withp's checkpointed probe-cell array, so
+        # the cap check and both self-join sides read cached rows.
+        probe = withp.select(id_col, F.explode("__cells").alias("cell"))
         pkey = "cell"
-        # tiny (id, cell) rows read three times (cap check + both self-join
-        # sides) — materialize once instead of re-running the probe fold
-        probe = probe.localCheckpoint(eager=False)
         if max_cell is not None and _cells_over_cap(probe, max_cell):
             # same cap on the probe buckets: each (row, probed-cell) entry
             # salts by id order within the cell, bounding the candidate
@@ -2206,7 +2128,9 @@ def ann_ivfpq_topk(
 
     The ADC expression is built from JVM-side array ops over a literal
     codebook (no Python in the scoring path); only cell assignment and PQ
-    encoding are Arrow-batched UDFs.  Every float is combined in the same
+    encoding are Arrow-batched UDFs — the cells through the shared
+    fold-dot quantizer (:func:`fold_dots` / :func:`top_cells`, queries
+    via :func:`_cell_assign_udf`).  Every float is combined in the same
     left-associated order as the DuckDB oracle (pyfads.golden) — scores are
     bit-identical."""
     embeddings = drop_zero_norm(embeddings, dim, vec_col)
@@ -2228,24 +2152,19 @@ def ann_ivfpq_topk(
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def cell_and_codes(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy()).astype(np.float64)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        cell = np.argmax(m @ cents.T, axis=1).astype(np.int32)
+        raw = np.vstack(vecs.to_numpy()).astype(np.float64)
+        m = raw / np.maximum(np.linalg.norm(raw, axis=1, keepdims=True), 1e-12)
         out = np.empty((len(m), 1 + m_sub), dtype=np.int32)
-        out[:, 0] = cell
+        # the corpus cell is the same fold-dot argmax as every other
+        # quantizer (raw dots, ties -> lowest cell: the oracle's ``dp
+        # DESC, cell``); the PQ codes below keep their BLAS arithmetic
+        out[:, 0] = top_cells(fold_dots(raw, cents), 1)[:, 0]
         for j in range(m_sub):
             sub = m[:, j * dsub : (j + 1) * dsub]
             # argmin ||v-c||^2 == argmax (v.c - 0.5||c||^2); np.argmax takes
             # the first max — matches the oracle's (score DESC, k ASC) rank
             out[:, 1 + j] = np.argmax(sub @ cb[j].T - half_cn2[j], axis=1)
         return pd.Series(list(out))
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe_cells(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy()).astype(np.float64)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        top = np.argsort(-(m @ cents.T), axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(top))
 
     enc = embeddings.select(
         F.col(id_col).alias("c_id"),
@@ -2257,7 +2176,7 @@ def ann_ivfpq_topk(
     )
     qcells = queries.select(
         F.col(id_col).alias("q_id"),
-        F.explode(probe_cells(F.col(vec_col))).alias("cell"),
+        F.explode(_cell_assign_udf(cents, n_probe)(F.col(vec_col))).alias("cell"),
     )
     # carry the PQ codes THROUGH the candidate join instead of joining the
     # encoded corpus a second time afterwards: codes are functionally
@@ -2755,15 +2674,15 @@ def prototypicality_prune(
     column, flip it downstream.)
 
     Score: ``proto_cos = dp(v, c_assigned) / |v|`` with spherical-k-means
-    (unit-norm) centroids — dp is the same in-plan fold the assignment
-    argmax uses (:func:`_assign_cells_inplan`), so score and assignment
-    are one projection and the DuckDB twin replays both from centroid
+    (unit-norm) centroids — dp is the best cell's fold dot from the
+    one in-plan ranking (:func:`_rank_cells`), so score and assignment
+    are one pass and the DuckDB twin replays both from centroid
     literals.  Keep rule is INTEGER cross-multiplied:
     ``rank * 100 > prune_pct * n_cell`` over the per-cell
     ``(proto_cos DESC, id)`` ranking — no float percentile.
 
     Scale shape: bounded-sample codebook training; scoring is map-only
-    (centroid literals ride the plan); the only exchange is ONE window
+    (the codebook rides the plan as literals); the only exchange is ONE window
     partitioned by cell id.  Hot cells cost O(cell) sort work, not
     O(cell^2) — windows, unlike self-joins, need no salt cap.  Returns
     ``(id_col, cell, proto_cos, rank, n_cell, keep)`` for every non-zero
@@ -2774,16 +2693,8 @@ def prototypicality_prune(
         if centroids is not None
         else train_ivf_centroids(emb, dim, n_centroids, seed, id_col, vec_col)
     )
-    structs = ", ".join(
-        f"struct({_dot_fold_sql('`__v`', _vec_lit_sql(cents[j]))} AS dp, "
-        f"{-j} AS negcell)"
-        for j in range(len(cents))
-    )
-    best = f"array_max(array({structs}))"
-    scored = emb.select(F.col(id_col), F.col(vec_col).alias("__v")).select(
-        F.col(id_col),
-        F.expr(f"CAST(-(({best}).negcell) AS INT)").alias("cell"),
-        F.expr(f"({best}).dp / {_norm_fold_sql('`__v`')}").alias("proto_cos"),
+    scored = _rank_cells(emb, cents, id_col, vec_col).select(
+        F.col(id_col), "cell", (F.col("__dp") / _norm_fold("__v")).alias("proto_cos")
     )
     wo = Window.partitionBy("cell").orderBy(F.desc("proto_cos"), id_col)
     wn = Window.partitionBy("cell")

@@ -68,20 +68,24 @@ def test_norm_bitwise(vecs):
             assert got[i] == ref, (i, dim_switch)
 
 
-def test_assign_cells_inplan_matches_python_argmax(vecs, spark):
+def test_assign_cells_inplan_matches_python_argmax(vecs, spark, monkeypatch):
+    """The in-plan ranking's cell and best-cell dp equal an in-order Python
+    fold argmax (ties -> lowest cell) in both literal forms."""
     df, rows = vecs
     rng = np.random.default_rng(11)
     cents = rng.standard_normal((5, 8))
-    out = {
-        r["id"]: r["cell"]
-        for r in S._assign_cells_inplan(
-            df.select("id", F.col("a").alias("embedding")), cents, "id", "embedding"
-        ).collect()
-    }
-    for i, a, _ in rows:
-        dots = [_py_dot(a, c) for c in cents]
-        best = max(range(5), key=lambda j: (dots[j], -j))
-        assert out[i] == best, i
+    for threshold in (64, 0):  # per-cell literals, then the flat literal
+        monkeypatch.setattr(S, "INPLAN_MAX_CENTROIDS", threshold)
+        out = {
+            r["id"]: (r["cell"], r["__dp"])
+            for r in S._rank_cells(
+                df.select("id", F.col("a").alias("embedding")), cents, "id", "embedding"
+            ).collect()
+        }
+        for i, a, _ in rows:
+            dots = [_py_dot(a, c) for c in cents]
+            best = max(range(5), key=lambda j: (dots[j], -j))
+            assert out[i] == (best, dots[best]), (i, threshold)
 
 
 def test_vec_lit_sql_roundtrip(spark):

@@ -414,10 +414,10 @@ def test_semantic_dedup_multiprobe_catches_boundary_pairs(spark):
     interior = spark.createDataFrame(
         [(9, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
     )
-    one = S._probe_cells_inplan(interior, cents, "vec_id", "embedding", 2, 0.05)
-    assert one.count() == 1  # second probe suppressed away from boundaries
-    both = S._probe_cells_inplan(df, cents, "vec_id", "embedding", 2, 0.05)
-    assert both.count() == 4  # boundary pair still probes two cells each
+    one = _probe_set(interior, cents, 2, 0.05)
+    assert len(one) == 1  # second probe suppressed away from boundaries
+    both = _probe_set(df, cents, 2, 0.05)
+    assert len(both) == 4  # boundary pair still probes two cells each
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="n_assign"):
@@ -2390,10 +2390,43 @@ def test_fold_dots_bitwise_matches_column_fold(spark):
         assert spark_dots[r["vec_id"]] == list(got[i])  # exact ==, no approx
 
 
-def test_udf_assignment_parity_above_inplan_limit(spark):
-    """The >64-cell Arrow-UDF assignment path (the one every real-scale run
-    takes) must agree VERDICT-FOR-VERDICT with the in-plan fold path and
-    with a brute-force numpy fold replay — round-8 verdict #3."""
+def _literal_form(monkeypatch, literal: bool) -> None:
+    """Force :func:`S._rank_cells` onto the per-cell-literal form (threshold
+    above any codebook) or the flat-literal form (threshold 0)."""
+    monkeypatch.setattr(S, "INPLAN_MAX_CENTROIDS", 10**9 if literal else 0)
+
+
+def _assigned(df, cents):
+    return {
+        r["vec_id"]: r["cell"]
+        for r in S._rank_cells(df, cents, "vec_id", "embedding").collect()
+    }
+
+
+def _probe_set(df, cents, n, margin=None):
+    return {
+        (r["vec_id"], c)
+        for r in S._rank_cells(df, cents, "vec_id", "embedding", n, margin).collect()
+        for c in r["__cells"]
+    }
+
+
+def _udf_probe_set(df, cents, n, margin=None):
+    return {
+        (r["vec_id"], r["cell"])
+        for r in df.select(
+            "vec_id",
+            F.explode(S._cell_assign_udf(cents, n, margin)(F.col("embedding"))).alias(
+                "cell"
+            ),
+        ).collect()
+    }
+
+
+def test_udf_assignment_parity_above_inplan_limit(spark, monkeypatch):
+    """The Arrow-UDF quantizer (the IVF path) must agree VERDICT-FOR-VERDICT
+    with the in-plan ranking in BOTH literal forms on a >64-cell codebook,
+    and with a brute-force numpy fold replay — round-8 verdict #3."""
     import numpy as np
 
     n_cells = 80
@@ -2402,10 +2435,6 @@ def test_udf_assignment_parity_above_inplan_limit(spark):
     cents = S.train_ivf_centroids(embs, dim=8, n_centroids=n_cells, iters=5)
     assert len(cents) == n_cells
 
-    inplan = {
-        r["vec_id"]: r["cell"]
-        for r in S._assign_cells_inplan(embs, cents, "vec_id", "embedding").collect()
-    }
     udf = {
         r["vec_id"]: r["cell"]
         for r in embs.select(
@@ -2415,86 +2444,48 @@ def test_udf_assignment_parity_above_inplan_limit(spark):
             ).alias("cell"),
         ).collect()
     }
-    assert udf == inplan
-
     rows = embs.collect()
     m = np.array([r["embedding"] for r in rows], dtype=np.float64)
     brute = S.top_cells(S.fold_dots(m, cents), 1)[:, 0]
-    assert {r["vec_id"]: int(c) for r, c in zip(rows, brute)} == inplan
-
-    # multi-probe (n_top=2) parity: UDF top-2 == in-plan probe top-2
-    probe_inplan = {
-        (r["vec_id"], r["cell"])
-        for r in S._probe_cells_inplan(embs, cents, "vec_id", "embedding", 2).collect()
-    }
-    probe_udf = {
-        (r["vec_id"], r["cell"])
-        for r in embs.select(
-            "vec_id",
-            F.explode(S._cell_assign_udf(cents, 2)(F.col("embedding"))).alias("cell"),
-        ).collect()
-    }
-    assert probe_udf == probe_inplan
+    assert {r["vec_id"]: int(c) for r, c in zip(rows, brute)} == udf
+    probe_udf = _udf_probe_set(embs, cents, 2)
+    for literal in (True, False):
+        _literal_form(monkeypatch, literal)
+        assert _assigned(embs, cents) == udf
+        # multi-probe (n_top=2) parity: UDF top-2 == in-plan probe top-2
+        assert _probe_set(embs, cents, 2) == probe_udf
 
 
-def test_flat_assignment_parity_above_inplan_limit(spark):
-    """The >64-cell FLAT-literal in-plan assignment (r13: replaces the
-    Arrow-UDF path, whose ArrowEvalPython stage was measured bimodal at
-    local[32] — the r12 dedup_semantic_docs 48 s regression) must agree
-    verdict-for-verdict with the per-cell-literal in-plan path, the UDF
-    path, and a brute-force numpy fold replay."""
-    import numpy as np
-
+def test_flat_assignment_parity_above_inplan_limit(spark, monkeypatch):
+    """The >64-cell FLAT-literal form (r13: replaces the Arrow-UDF path,
+    whose ArrowEvalPython stage was measured bimodal at local[32] — the r12
+    dedup_semantic_docs 48 s regression) must agree with the
+    per-cell-literal form on the same codebook — cells, best-cell dp bits,
+    top-2 and adaptive-margin probe sets — and with the UDF margin test."""
     n_cells = 80
     assert n_cells > S.INPLAN_MAX_CENTROIDS
     embs = _synth_embs(spark, 600, dim=8)
     cents = S.train_ivf_centroids(embs, dim=8, n_centroids=n_cells, iters=5)
     assert len(cents) == n_cells
 
-    flat = {
-        r["vec_id"]: r["cell"]
-        for r in S._assign_cells_flat(embs, cents, "vec_id", "embedding").collect()
-    }
-    inplan = {
-        r["vec_id"]: r["cell"]
-        for r in S._assign_cells_inplan(embs, cents, "vec_id", "embedding").collect()
-    }
-    assert flat == inplan
+    def ranked(n, margin=None):
+        df = S._rank_cells(embs, cents, "vec_id", "embedding", n, margin)
+        return sorted(
+            (r["vec_id"], r["cell"], r["__dp"], tuple(r["__cells"] or ()))
+            for r in df.select(
+                "vec_id",
+                "cell",
+                "__dp",
+                (F.col("__cells") if n > 1 else F.lit(None)).alias("__cells"),
+            ).collect()
+        )
 
-    rows = embs.collect()
-    m = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    brute = S.top_cells(S.fold_dots(m, cents), 1)[:, 0]
-    assert {r["vec_id"]: int(c) for r, c in zip(rows, brute)} == flat
-
-    # multi-probe (n_top=2) parity: flat probe == per-cell-literal probe
-    probe_flat = {
-        (r["vec_id"], r["cell"])
-        for r in S._probe_cells_flat(embs, cents, "vec_id", "embedding", 2).collect()
-    }
-    probe_inplan = {
-        (r["vec_id"], r["cell"])
-        for r in S._probe_cells_inplan(embs, cents, "vec_id", "embedding", 2).collect()
-    }
-    assert probe_flat == probe_inplan
-
-    # adaptive-margin probe parity: flat margin test == UDF margin test
-    margin = 0.05
-    probe_flat_m = {
-        (r["vec_id"], r["cell"])
-        for r in S._probe_cells_flat(
-            embs, cents, "vec_id", "embedding", 2, margin
-        ).collect()
-    }
-    probe_udf_m = {
-        (r["vec_id"], r["cell"])
-        for r in embs.select(
-            "vec_id",
-            F.explode(
-                S._cell_assign_udf(cents, 2, margin)(F.col("embedding"))
-            ).alias("cell"),
-        ).collect()
-    }
-    assert probe_flat_m == probe_udf_m
+    cases = [(1, None), (2, None), (2, 0.05)]
+    flat = [ranked(n, margin) for n, margin in cases]  # 80 cells: flat form
+    _literal_form(monkeypatch, True)
+    assert [ranked(n, margin) for n, margin in cases] == flat
+    # adaptive-margin probe parity: in-plan margin test == UDF margin test
+    assert _probe_set(embs, cents, 2, 0.05) == _udf_probe_set(embs, cents, 2, 0.05)
 
 
 def test_flat_structs_sql_rejects_empty_codebook():
@@ -2502,11 +2493,11 @@ def test_flat_structs_sql_rejects_empty_codebook():
         S._flat_structs_sql(0, 8)
 
 
-def test_flat_assignment_tie_breaks_to_lowest_cell(spark):
-    """Exact ties (duplicated centroids) must break to the LOWEST cell on
-    the flat-literal path too: array_max over (dp, -cell) structs picks
-    the max dp with the max negcell = lowest cell, matching the oracle's
-    ORDER BY dp DESC, cell."""
+def test_flat_assignment_tie_breaks_to_lowest_cell(spark, monkeypatch):
+    """Exact ties (duplicated centroids) must break to the LOWEST cell in
+    both literal forms of the in-plan ranking: array_max over (dp, -cell)
+    structs picks the max dp with the max negcell = lowest cell, matching
+    the oracle's ORDER BY dp DESC, cell."""
     import numpy as np
 
     c = np.array(
@@ -2516,17 +2507,18 @@ def test_flat_assignment_tie_breaks_to_lowest_cell(spark):
         [(1, [0.6, 0.8, 0.0]), (2, [0.0, 2.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
-    out = {
-        r["vec_id"]: r["cell"]
-        for r in S._assign_cells_flat(df, c, "vec_id", "embedding").collect()
-    }
-    assert out == {1: 0, 2: 1}
-    # probe: the top-3 cell SET must match the UDF's stable-argsort top-3
-    # (dp DESC, cell ASC -> vec 1: dps [1.0, 0.8, 1.0, 0.8] -> {0, 2, 1})
-    probe_flat = {}
-    for r in S._probe_cells_flat(df, c, "vec_id", "embedding", 3).collect():
-        probe_flat.setdefault(r["vec_id"], set()).add(r["cell"])
-    assert probe_flat == {1: {0, 1, 2}, 2: {0, 1, 3}}
+    for literal in (True, False):
+        _literal_form(monkeypatch, literal)
+        assert _assigned(df, c) == {1: 0, 2: 1}
+        # probe: the top-3 cell SET must match the UDF's stable-argsort
+        # top-3 (dp DESC, cell ASC -> vec 1: dps [1.0, 0.8, 1.0, 0.8] ->
+        # {0, 2, 1}), the best cell first
+        probe = {
+            r["vec_id"]: r["__cells"]
+            for r in S._rank_cells(df, c, "vec_id", "embedding", 3).collect()
+        }
+        assert {k: set(v) for k, v in probe.items()} == {1: {0, 1, 2}, 2: {0, 1, 3}}
+        assert probe[1][0] == 0 and probe[2][0] == 1
 
 
 def test_udf_assignment_tie_breaks_to_lowest_cell(spark):
@@ -3127,32 +3119,84 @@ def test_semantic_store_partition_prune(spark, tmp_path_factory):
     assert os.path.isdir(store + "/corpus/cell=1")
 
 
-def test_adaptive_probe_udf_matches_inplan(spark):
+def test_adaptive_probe_udf_matches_inplan(spark, monkeypatch):
     """The adaptive-probe margin test (dp1 - dp2 < margin * |v|) agrees
-    probe-for-probe between the in-plan path (<= 64 cells) and the
-    Arrow-UDF path (the real-scale one) — same fold dots, same fold
-    norms, same tiebreak."""
+    probe-for-probe between the in-plan ranking (both literal forms) and
+    the Arrow-UDF quantizer — same fold dots, same fold norms, same
+    tiebreak."""
     embs = _synth_embs(spark, 400, dim=8)
     cents = S.train_ivf_centroids(embs, dim=8, n_centroids=16, iters=5)
     for margin in (0.02, 0.1):
-        inplan = {
-            (r["vec_id"], r["cell"])
-            for r in S._probe_cells_inplan(
-                embs, cents, "vec_id", "embedding", 2, margin
-            ).collect()
-        }
-        udf = {
-            (r["vec_id"], r["cell"])
-            for r in embs.select(
-                "vec_id",
-                F.explode(
-                    S._cell_assign_udf(cents, 2, margin)(F.col("embedding"))
-                ).alias("cell"),
-            ).collect()
-        }
-        assert udf == inplan
+        udf = _udf_probe_set(embs, cents, 2, margin)
         # the margin actually bites: strictly between n and 2n probes
-        assert 400 < len(inplan) < 800
+        assert 400 < len(udf) < 800
+        for literal in (True, False):
+            _literal_form(monkeypatch, literal)
+            assert _probe_set(embs, cents, 2, margin) == udf
+
+
+def test_semantic_dedup_multiprobe_ranks_once(spark, monkeypatch):
+    """Multi-probe SemDeDup ranks every vector ONCE: one _rank_cells call
+    yields both the primary cell and the probe cells (no second corpus
+    fold for the probe frame), and the margin probe's plan sorts the
+    codebook array once per row — the sorted array, the best struct and
+    the norm budget are bound in their own projection columns instead of
+    being re-evaluated inside the filter lambda."""
+    embs = _synth_embs(spark, 200, dim=8)
+    cents = S.train_ivf_centroids(embs, dim=8, n_centroids=16, iters=5)
+    real = S._rank_cells
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(args[4:])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(S, "_rank_cells", spy)
+    out = S.semantic_dedup(
+        embs, 8, threshold=0.9, centroids=cents, n_assign=2, probe_margin=0.05
+    )
+    assert out.count() == 200
+    assert calls == [(2, 0.05)]
+    monkeypatch.setattr(S, "_rank_cells", real)
+    for literal in (True, False):
+        _literal_form(monkeypatch, literal)
+        probe = S._rank_cells(embs, cents, "vec_id", "embedding", 2, 0.05)
+        plan = probe._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("array_sort(") == 1, plan
+        assert plan.count("SQRT(") == 1, plan  # the norm budget, once
+        single = S._rank_cells(embs, cents, "vec_id", "embedding")
+        plan = single._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("array_sort(") == 0 and plan.count("array_max(") == 1
+
+
+def test_ivfpq_cells_tie_break_to_lowest_cell(spark):
+    """IVF-PQ's corpus cell and query probe cells break exact ties
+    (duplicated centroids) to the LOWEST cell, like every other quantizer
+    and the oracle's ``dp DESC, cell``: with each centroid duplicated 20
+    times, a query probing ONE cell must land in the very cell its
+    corpus neighbours were assigned to, or it finds nothing."""
+    import numpy as np
+
+    cents = np.tile(np.array([[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]), (20, 1))
+    cb = np.array([[[1.0, 0.0], [0.0, 1.0]], [[1.0, 0.0], [0.0, 1.0]]])
+    corpus = spark.createDataFrame(
+        [(i, [1.0, 0.05 * i, 0.0, 0.0]) for i in range(1, 7)]
+        + [(10 + i, [0.05 * i, 1.0, 0.0, 0.0]) for i in range(1, 7)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(100, [1.0, 0.02, 0.0, 0.0]), (101, [0.02, 1.0, 0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    for n_probe in (1, 3):
+        out = S.ann_ivfpq_topk(
+            corpus, queries, 4, k=10, n_probe=n_probe, m_sub=2, ksub=2,
+            centroids=cents, pq_codebooks=cb,
+        ).collect()
+        got = {}
+        for r in out:
+            got.setdefault(r["q_id"], set()).add(r["neighbor_id"])
+        assert got == {100: set(range(1, 7)), 101: set(range(11, 17))}, n_probe
 
 
 def test_url_canonicalize_collapses_surface_forms(spark):
