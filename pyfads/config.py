@@ -32,6 +32,9 @@ class FADSConfig:
     - ``pid_col``: person/record id column, passed through (the reference's
       PID-uniqueness check in knn is disabled in shipped code,
       Generalizer.java:212-216; default ``distinct_pids=False`` keeps parity).
+      The streaming drivers (``fads_generalize_stream``,
+      ``ForeachBatchFADS``) need a globally unique ``pid_col`` and raise on
+      a duplicate; batch FADS does not.
     - ``distinct_pids``: opt-in intended semantics of the reference's
       commented-out uniqueness check (Generalizer.java:205-216): the k-1
       nearest neighbours must carry pairwise-distinct ``pid_col`` values;

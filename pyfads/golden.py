@@ -229,7 +229,7 @@ def taxi_fixture_lines(sf_dir: str) -> list[tuple]:
     passengerCnt,taxiId,driverId (NYCTaxiRideSource.java:204-244).  One
     line per event: rideId = driverId = event_id (a unique pid AND a
     unique passthrough join key), taxiId = user_id, the ride clock is the
-    event's arrival second (so parse_taxi_lines under a UTC session
+    event's arrival second (so parse_taxi_lines, which parses UTC,
     recovers startTime = sec*1000 exactly — the replayable arrival
     clock), endTime = start + a content-derived duration.  A slice of
     lines are END events (parse swaps the time pair back) and a slice

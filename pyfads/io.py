@@ -67,7 +67,7 @@ def epoch_ms(df: DataFrame, col: str):
 
     - ``timestamp_ntz``: tz-independent ``timestampdiff`` against the epoch
       literal — matches DuckDB ``epoch_ms`` on the same naive value without
-      depending on ``spark.sql.session.timeZone``.
+      depending on the session time zone.
     - ``timestamp`` (LTZ): ``unix_millis``.
     - ``bigint``: legacy nanos-as-long parquet reads; integer div (float
       division would lose precision above 2^53).
@@ -117,7 +117,8 @@ def parse_taxi_lines(
     rideId, START|END, time, time, lon, lat, lon, lat, passengerCnt, taxiId,
     driverId; START events put (time1, time2) into (startTime, endTime), END
     events swap them; empty lon/lat parse as 0.0 (:231-234); times are
-    ``yyyy-MM-dd HH:mm:ss`` UTC strings → epoch millis (:219-225).
+    ``yyyy-MM-dd HH:mm:ss`` UTC strings → epoch millis (:219-225), whatever
+    the session time zone.
     Pure built-in functions — stays inside whole-stage codegen.
 
     ``permissive=False`` (default) is reference parity: a malformed
@@ -139,15 +140,19 @@ def parse_taxi_lines(
     else:
         c = {name: tok.getItem(i) for i, name in enumerate(TAXI_CSV_TOKEN_ORDER)}
     is_start = c["eventKind"] == F.lit("START")
+    # the times are UTC: parse them with an explicit offset so the epoch
+    # does not depend on the session time zone
+    fmt = "yyyy-MM-dd HH:mm:ssXXX"
+    utc = lambda s: F.concat(s, F.lit("+00:00"))  # noqa: E731
     if permissive:
         to_ms = lambda s: F.unix_millis(  # noqa: E731
-            F.try_to_timestamp(s, F.lit("yyyy-MM-dd HH:mm:ss"))
+            F.try_to_timestamp(utc(s), F.lit(fmt))
         )
         lng = lambda s: s.try_cast("long")  # noqa: E731
         sht = lambda s: s.try_cast("short")  # noqa: E731
     else:
         to_ms = lambda s: F.unix_millis(  # noqa: E731
-            F.to_timestamp(s, "yyyy-MM-dd HH:mm:ss")
+            F.to_timestamp(utc(s), fmt)
         )
         lng = lambda s: s.cast("long")  # noqa: E731
         sht = lambda s: s.cast("short")  # noqa: E731

@@ -275,43 +275,35 @@ def fads_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(out)
 
 
-_TAXI_JOB_DIRS: dict[tuple, str] = {}
-_TAXI_JOB_ROWS: dict[tuple, list] = {}
+# fixture fingerprint -> (gz fixture dir, fixture row count)
+_TAXI_JOB: dict[tuple, tuple[str, int]] = {}
 
 
 @query("taxi_job_composed", oracle=_golden.taxi_job_composed_oracle)
 def taxi_job_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPOSED reference job under the driver gate (r11 verdict item
-    3): gz nycTaxiRides CSV -> line parse with START/END dispatch (P2) ->
-    arrival enrichment (P4) -> throughput listener (P5) -> streaming
-    stateful FADS (P6, G1-G14 inside) -> parquet sink (P7), wired as ONE
-    Structured Streaming query — the full
-    TransactionGeneralizationJob.java:36-79 chain (pyfads.taxi_job is the
-    CLI form; tests/test_fads_stream.py asserts it row-for-row).  Fixture:
-    CSV synthesized deterministically from the events table
-    (pyfads.golden.taxi_fixture_lines), split into three gz files on
-    arrival-SECOND value boundaries (equal arrivals never straddle a
-    micro-batch).  Oracle: the independent pure-Python golden over the
-    same derivation.  The ride clock parses under an explicit UTC session
-    timezone so the entry is ambient-TZ-proof (restored afterwards)."""
+    3): :func:`pyfads.taxi_job.run_job`, the one P1->P7 composition
+    (gz nycTaxiRides CSV -> line parse -> arrival enrichment -> throughput
+    listener -> streaming stateful FADS -> parquet sink, one Structured
+    Streaming query), run with a 2 s flush until the sink holds every
+    fixture row.  Fixture: CSV synthesized deterministically from the
+    events table (pyfads.golden.taxi_fixture_lines), split into three gz
+    files on arrival-SECOND value boundaries (equal arrivals never
+    straddle a micro-batch).  Oracle: the independent pure-Python golden
+    over the same derivation."""
     import gzip
     import os
+    import shutil
     import tempfile
 
-    from pyfads import FADSConfig
-    from pyfads.fads_stream import fads_generalize_stream
-    from pyfads.io import parse_taxi_lines
-    from pyfads.metrics import ThroughputListener
-    from pyfads.schema import fads_output_schema
-    from pyfads.streamrun import _chunk_key, _scratch_dir, run_to_completion
+    from pyfads.streamrun import _chunk_key, _scratch_dir
+    from pyfads.taxi_job import run_job
 
     key = _chunk_key(sf_dir, "events")
     # the fixture derivation is a full DuckDB scan + python sort — pay it
     # once per fixture fingerprint, not per bench rep (code-review r12)
-    if key not in _TAXI_JOB_ROWS:
-        _TAXI_JOB_ROWS[key] = _golden.taxi_fixture_lines(sf_dir)
-    rows = _TAXI_JOB_ROWS[key]
-    if key not in _TAXI_JOB_DIRS:
+    if key not in _TAXI_JOB:
+        rows = _golden.taxi_fixture_lines(sf_dir)
         d = _scratch_dir("pyfads_taxijob_")
         secs = sorted({r[0] for r in rows})
         cuts = (secs[len(secs) // 3], secs[(2 * len(secs)) // 3])
@@ -331,69 +323,19 @@ def taxi_job_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fh.write("\n".join(ch) + "\n")
             t = 1_700_000_000 + i * 60  # mtime-ordered => arrival-ordered
             os.utime(p, (t, t))
-        _TAXI_JOB_DIRS[key] = d
+        _TAXI_JOB[key] = (d, len(rows))
+    d, n = _TAXI_JOB[key]
     # previous reps' sink/checkpoint dirs are dead weight once their query
     # stopped — drop them so a long bench process doesn't grow disk
-    import shutil as _shutil
-
-    for stale in os.listdir(_TAXI_JOB_DIRS[key]):
+    for stale in os.listdir(d):
         if stale.startswith("run_"):
-            _shutil.rmtree(os.path.join(_TAXI_JOB_DIRS[key], stale), ignore_errors=True)
-    run_dir = tempfile.mkdtemp(dir=_TAXI_JOB_DIRS[key], prefix="run_")
-    out_dir, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
-
-    cfg = FADSConfig(
-        k=10,
-        buffer_rows=30,
-        reuse_ms=60_000,
-        qid_cols=("rideId", "taxiId", "endTime"),
-        pid_col="rideId",
-        arrival_col="arrival_ms",
+            shutil.rmtree(os.path.join(d, stale), ignore_errors=True)
+    run_dir = tempfile.mkdtemp(dir=d, prefix="run_")
+    out, _ = run_job(
+        spark, f"{d}/in", f"{run_dir}/out", f"{run_dir}/ckpt",
+        flush_after_ms=2_000, expect_rows=n,
     )
-    tz_old = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    listener = ThroughputListener("TaxiJobGate")
-    spark.streams.addListener(listener)
-    try:
-        raw = (
-            spark.readStream.option("maxFilesPerTrigger", 1)
-            .text(f"{_TAXI_JOB_DIRS[key]}/in")
-        )
-        parsed = parse_taxi_lines(raw)  # P2
-        enriched = parsed.withColumn("arrival_ms", F.col("startTime"))  # P4
-        released = fads_generalize_stream(enriched, cfg, flush_after_ms=2_000)
-        out_schema = fads_output_schema(enriched.schema, cfg)
-        from pyfads.io import stream_shuffle_scope
-
-        # single-key parity stream: one state group, so one state
-        # partition (see _run_fads_stream)
-        with stream_shuffle_scope(spark, n_keys=1):
-            q = (
-                released.writeStream.format("parquet")  # P7
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .start()
-            )
-
-            def _count() -> int:
-                try:
-                    return spark.read.schema(out_schema).parquet(out_dir).count()
-                except Exception:
-                    return 0
-
-            n = len(rows)
-            run_to_completion(q, until=lambda: _count() >= n)
-        got = _count()
-        if got < n:
-            raise TimeoutError(
-                f"taxi_job_composed: sink holds {got}/{n} rows at the 240s "
-                "deadline — the stream stalled, not an operator value bug"
-            )
-    finally:
-        spark.streams.removeListener(listener)
-        spark.conf.set("spark.sql.session.timeZone", tz_old)
-    return spark.read.schema(out_schema).parquet(out_dir).select(
+    return out.select(
         "driverId",
         "rideId_lo",
         "rideId_hi",

@@ -561,8 +561,7 @@ def test_end_to_end_taxi_job_gz_to_parquet(spark, tmp_path):
     import gzip
 
     from pyfads.io import read_taxi_csv
-    from pyfads.metrics import ThroughputListener
-    from pyfads.schema import fads_output_schema
+    from pyfads.taxi_job import TAXI_CFG as cfg, run_job
 
     # P1 fixture: nycTaxiRides split over 3 gz files, mtime-ordered so the
     # file source replays them as 3 ordered micro-batches
@@ -575,55 +574,14 @@ def test_end_to_end_taxi_job_gz_to_parquet(spark, tmp_path):
             fh.write("\n".join(lines[lo : lo + 40]) + "\n")
         os.utime(p, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
 
-    # reference job parameters: Generalizer(10, 30, 60000, keys={0,1,5},
-    # pidKey=0) over the 11-field tuple -> QIDs (rideId, taxiId, endTime),
-    # pid rideId (which is itself a QID, as in the reference)
-    cfg = FADSConfig(
-        k=10,
-        buffer_rows=30,
-        reuse_ms=60_000,
-        qid_cols=("rideId", "taxiId", "endTime"),
-        pid_col="rideId",
-        arrival_col="arrival_ms",
-    )
-
-    from pyfads.io import parse_taxi_lines
-
-    raw = (
-        spark.readStream.option("maxFilesPerTrigger", 1).text(str(src_dir))
-    )  # P1: throttling is the source's concern in Spark (maxFilesPerTrigger)
-    parsed = parse_taxi_lines(raw)  # P2
-    enriched = parsed.withColumn(
-        "arrival_ms", F.col("startTime")
-    )  # P4: event time as the deterministic replay clock
-    listener = ThroughputListener("TaxiJob")  # P5
-    spark.streams.addListener(listener)
-    released = fads_generalize_stream(enriched, cfg, flush_after_ms=3_600_000)  # P6
-    out_dir, ckpt = str(tmp_path / "out_parquet"), str(tmp_path / "ckpt")
-    q = (
-        released.writeStream.format("parquet")  # P7
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    out_schema = fads_output_schema(enriched.schema, cfg)
+    # the reference job's parameters (TAXI_CFG): pid rideId is itself a QID,
+    # as in the reference; a 1 h flush keeps the tail buffered
     expected_n = len(lines) - cfg.buffer_rows
-    try:
-        # listener progress events are delivered asynchronously — under CPU
-        # contention the final micro-batch's event can lag the sink rows, so
-        # wait for it too BEFORE stop()/removeListener (observed: 80/120 rows
-        # counted when stopping immediately)
-        run_to_completion(
-            q,
-            until=lambda: (
-                spark.read.schema(out_schema).parquet(out_dir).count() >= expected_n
-                and listener.rows_total >= len(lines)
-            ),
-        )
-        got = spark.read.schema(out_schema).parquet(out_dir).collect()
-    finally:
-        spark.streams.removeListener(listener)
+    out, listener = run_job(
+        spark, str(src_dir), str(tmp_path / "out_parquet"), str(tmp_path / "ckpt"),
+        flush_after_ms=3_600_000, expect_rows=expected_n,
+    )
+    got = out.collect()
 
     # P5: the logger observed the stream's input rows flowing through
     assert listener.rows_total >= len(lines)

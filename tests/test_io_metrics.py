@@ -115,3 +115,38 @@ def test_parse_taxi_lines_permissive_drops_poison_lines(spark):
     assert rows[0].startTime == 1583020800000 and rows[0].passengerCnt == 2
     with _pt.raises(Exception):
         parse_taxi_lines(df).collect()  # strict: poison line kills the job
+
+
+def test_parse_taxi_lines_is_utc_under_any_session_zone(spark):
+    """The ride clock is UTC (NYCTaxiRideSource.java:57-58, 219-225): the
+    parsed epochs must not move with the session time zone, in either
+    mode, a time that falls in New York's DST gap included."""
+    from datetime import datetime, timezone
+
+    def utc_ms(t):
+        d = datetime.strptime(t, "%Y-%m-%d %H:%M:%S").replace(tzinfo=timezone.utc)
+        return int(d.timestamp()) * 1000
+
+    t0, t1, gap = "2013-01-01 00:00:00", "2013-01-01 00:05:00", "2013-03-10 02:30:00"
+    df = spark.createDataFrame(
+        [
+            (f"1,START,{t0},{t1},-73.9,40.7,-73.8,40.8,2,7,9",),
+            (f"2,END,{t1},{t0},-73.9,40.7,-73.8,40.8,2,7,9",),
+            (f"3,START,{gap},{t1},-73.9,40.7,-73.8,40.8,2,7,9",),
+        ],
+        "value string",
+    )
+    expected = {
+        1: (utc_ms(t0), utc_ms(t1)),
+        2: (utc_ms(t0), utc_ms(t1)),
+        3: (utc_ms(gap), utc_ms(t1)),
+    }
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        for permissive in (False, True):
+            rows = parse_taxi_lines(df, permissive=permissive).collect()
+            got = {r.rideId: (r.startTime, r.endTime) for r in rows}
+            assert got == expected, permissive
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)

@@ -9,20 +9,21 @@
   the pending store on rideId alone violates the uniqueness contract; the
   synthesized ``rideId#eventKind`` key must let the composed job run on
   such input, and the bare rideId key must fail loudly (not hang).
+- the CLI itself, run as ``python -m pyfads.taxi_job`` in a non-UTC host
+  zone.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import gzip
 import os
-import time as _t
+import time
 
 import pytest
-from pyspark.sql import functions as F
 
-from pyfads.config import FADSConfig
 from pyfads.streamrun import run_to_completion
-from pyfads.taxi_job import AUTO_PID_COL, input_drained, with_auto_pid
+from pyfads.taxi_job import AUTO_PID_COL, TAXI_CFG, input_drained, run_job
 from tests.test_streamrun import StubQuery
 
 
@@ -57,9 +58,9 @@ def test_drain_returns_on_clean_external_stop():
             {"active": False},
         ]
     )
-    t0 = _t.time()
+    t0 = time.monotonic()
     _drain(q)
-    assert _t.time() - t0 < 5  # returned, did not spin
+    assert time.monotonic() - t0 < 5  # returned, did not spin
 
 
 def test_drain_returns_after_three_zero_input_batches():
@@ -113,75 +114,64 @@ def _write_gz(tmp_path, lines):
     return src_dir
 
 
-def _run_stream(spark, tmp_path, parsed_transform, pid_col, timeout_s=180):
-    """Compose the P2->P6->P7 chain over the paired fixture; return
-    (rows_released, query_exception)."""
-    from pyfads.fads_stream import fads_generalize_stream
-    from pyfads.io import parse_taxi_lines
-    from pyfads.schema import fads_output_schema
-
+def _run_stream(spark, tmp_path, pid_col):
+    """Run the reference job over the paired fixture; return
+    (rows_released, rows_expected)."""
     lines = _paired_taxi_lines(60)
     src_dir = _write_gz(tmp_path, lines)
-    cfg = FADSConfig(
-        k=10,
-        buffer_rows=30,
-        reuse_ms=60_000,
-        qid_cols=("rideId", "taxiId", "endTime"),
-        pid_col=pid_col,
-        arrival_col="arrival_ms",
-    )
-    raw = spark.readStream.text(str(src_dir))
-    parsed = parsed_transform(parse_taxi_lines(raw))
-    enriched = parsed.withColumn("arrival_ms", F.col("startTime"))
-    released = fads_generalize_stream(enriched, cfg, flush_after_ms=3_600_000)
-    out_dir = str(tmp_path / "out_parquet")
-    ckpt = str(tmp_path / "ckpt")
-    q = (
-        released.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    out_schema = fads_output_schema(enriched.schema, cfg)
+    cfg = dataclasses.replace(TAXI_CFG, pid_col=pid_col)
     expected_n = len(lines) - cfg.buffer_rows
-    exc = None
-    try:
-        deadline = _t.time() + timeout_s
-        while _t.time() < deadline:
-            if not q.isActive:
-                exc = q.exception()
-                break
-            try:
-                n = spark.read.schema(out_schema).parquet(out_dir).count()
-            except Exception:
-                n = 0
-            if n >= expected_n:
-                break
-            _t.sleep(2)
-        try:
-            got_n = spark.read.schema(out_schema).parquet(out_dir).count()
-        except Exception:
-            got_n = 0
-    finally:
-        q.stop()
-    return got_n, exc, expected_n
+    out, _ = run_job(
+        spark, str(src_dir), str(tmp_path / "out_parquet"), str(tmp_path / "ckpt"),
+        cfg, flush_after_ms=3_600_000, expect_rows=expected_n,
+    )
+    return out.count(), expected_n
 
 
 def test_auto_pid_runs_on_real_start_end_pairs(spark, tmp_path):
-    got_n, exc, expected_n = _run_stream(
-        spark, tmp_path, with_auto_pid, AUTO_PID_COL
-    )
-    assert exc is None, f"query failed: {exc}"
+    got_n, expected_n = _run_stream(spark, tmp_path, AUTO_PID_COL)
     assert got_n == expected_n
 
 
 def test_bare_rideid_pid_fails_loudly_on_start_end_pairs(spark, tmp_path):
-    got_n, exc, _ = _run_stream(
-        spark, tmp_path, lambda df: df, "rideId", timeout_s=120
+    # duplicate rideId (START+END pair) must fail the uniqueness check, and
+    # the query's own exception must surface instead of a hang
+    with pytest.raises(Exception, match="(?i)unique"):
+        _run_stream(spark, tmp_path, "rideId")
+
+
+def test_cli_parses_utc_and_prints_sink_count(tmp_path):
+    """``python -m pyfads.taxi_job`` end to end in a host zone that is not
+    UTC: the ride clock must still parse as UTC (NYCTaxiRideSource.java
+    parses UTC), and the printed count must be the sink's."""
+    import re
+    import subprocess
+    import sys
+    from datetime import datetime, timezone
+
+    import pyarrow.parquet as pq
+
+    lines = _paired_taxi_lines(60)
+    src_dir = _write_gz(tmp_path, lines)
+    out_dir = tmp_path / "out"
+    env = {**os.environ, "TZ": "America/New_York"}
+    res = subprocess.run(
+        [sys.executable, "-m", "pyfads.taxi_job", str(src_dir), str(out_dir), "--cpus", "2"],
+        env=env, capture_output=True, text=True, timeout=180,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
-    assert exc is not None, (
-        "duplicate rideId (START+END pair) must fail the uniqueness check, "
-        f"but the query released {got_n} rows without error"
-    )
-    assert "unique" in str(exc).lower()
+    assert res.returncode == 0, res.stderr[-2000:]
+    printed = int(re.search(r"released (\d+) generalized rows", res.stdout).group(1))
+    got = pq.read_table(
+        [str(p) for p in out_dir.glob("*.parquet")], columns=[AUTO_PID_COL, "arrival_ms"]
+    ).to_pylist()
+    assert printed == len(got)
+    assert len(lines) - TAXI_CFG.buffer_rows <= printed <= len(lines)
+    # START and END lines of a ride both carry the ride's UTC start second
+    start_ms = {}
+    for ln in lines:
+        ride, kind, t1, t2 = ln.split(",")[:4]
+        t = t1 if kind == "START" else t2
+        utc = datetime.strptime(t, "%Y-%m-%d %H:%M:%S").replace(tzinfo=timezone.utc)
+        start_ms[f"{ride}#{kind}"] = int(utc.timestamp()) * 1000
+    assert all(r["arrival_ms"] == start_ms[r[AUTO_PID_COL]] for r in got)
