@@ -24,18 +24,23 @@ One :class:`FADSState` runs every FADS path: ``run_fads_pandas`` (batch,
 one ``process`` + ``flush`` per group) and the two streaming drivers,
 ``fads_generalize_stream`` and ``ForeachBatchFADS`` (one ``process`` per
 micro-batch, state carried between calls).  Each call is
-vectorized around the sequential per-row decision:
+vectorized around the sequential per-release decision:
 
-- global min/max bounds (G2) are prefix-accumulated once per call — an
-  O(1) lookup per row;
-- the buffer is a list of row *positions*; per release the QID block is
-  one fancy-index gather;
-- clusters live in one preallocated array table per call — ``(cap, d)``
-  lo / hi / width blocks, ``cap`` = carried clusters + rows // k + 1, since
-  each new cluster consumes k buffered rows — appended by row assignment,
+- global min/max bounds (G2), their range and its zero guard are
+  prefix-accumulated once per call — an O(1) lookup per release;
+- the loop is release-driven: the rows up to the next buffer overflow are
+  appended at once, then TTL expiry runs once at the overflow row (rows of
+  one call arrive in nondecreasing order, so this equals expiring at every
+  row) and the oldest row is released;
+- the buffer is an array of row *positions*; per release the QID block is
+  one fancy-index gather and the neighbours leave it through one mask;
+- clusters live in one preallocated per-dimension table per call — ``(d,
+  cap)`` lo / hi / width rows, ``cap`` = carried clusters + rows // k + 1,
+  since each new cluster consumes k buffered rows — appended by column,
   with a head pointer for TTL expiry (creation times are nondecreasing);
-  fits/infoLoss/argmin run vectorized over the live ``[head:m]`` view
-  (first minimum == first-created wins);
+  fits is 2·d contiguous comparisons over the live ``[head:m]`` columns,
+  and only the fitting clusters are ranked by infoLoss (first minimum ==
+  first-created wins);
 - releases record a cluster index or a bounds-snapshot index, so the
   released intervals are one gather at the end of the call.
 
@@ -136,89 +141,105 @@ class FADSState:
         return self._run(none, q, none, none, q, True)
 
     def _run(self, row_ids, qids, arrivals, pids, legacy, drain: bool) -> ReleasedBatch:
-        cfg = self.cfg
-        B, k1, reuse = cfg.buffer_rows, cfg.k - 1, cfg.reuse_ms
+        cfg, d = self.cfg, self.d
+        B, k, k1, reuse = cfg.buffer_rows, cfg.k, cfg.k - 1, cfg.reuse_ms
         n = len(qids)
-        # G2 running global bounds: row t = after the first t new rows
+        # G2 running global bounds: row t = after the first t new rows; the
+        # range, its zero guard and whether every dimension passes it
         glo_acc = np.minimum.accumulate(np.vstack([self.glo, qids]), axis=0)
         ghi_acc = np.maximum.accumulate(np.vstack([self.ghi, qids]), axis=0)
+        gr_acc = ghi_acc - glo_acc
+        pos_acc = gr_acc > 0
+        all_pos = pos_acc.all(axis=1).tolist()
         # row positions index the carried rows followed by the new ones
         c = len(self.buffer)
         cr, cq, ca, cp, cl = zip(*self.buffer) if c else ((),) * 5
         row_ids, qids, arrivals = _carried(cr, row_ids), _carried(cq, qids), _carried(ca, arrivals)
         pids, legacy = _carried(cp, pids), _carried(cl, legacy)
 
-        # the cluster table: carried clusters, then room for every cluster
-        # this call can create (each consumes k buffered rows); the width
-        # hi - lo is stored once per cluster
+        # the cluster table, one (d, cap) row per dimension: carried
+        # clusters, then room for every cluster this call can create (each
+        # consumes k buffered rows); the width hi - lo is stored once
         m = len(self.clusters)
-        cap = m + (c + n) // cfg.k + 1
-        cl_lo, cl_hi, cl_wid = (np.empty((cap, self.d)) for _ in range(3))
-        cl_lo[:m], cl_hi[:m] = self.clusters.lo, self.clusters.hi
-        cl_wid[:m] = cl_hi[:m] - cl_lo[:m]
+        cap = m + (c + n) // k + 1
+        cl_lo, cl_hi, cl_wid = (np.empty((d, cap)) for _ in range(3))
+        cl_lo[:, :m], cl_hi[:, :m] = self.clusters.lo.T, self.clusters.hi.T
+        cl_wid[:, :m] = cl_hi[:, :m] - cl_lo[:, :m]
         born = self.clusters.created.tolist()  # plain ints for the TTL test
         head = 0  # first live cluster
-        buf = list(range(c))  # buffered row positions, arrival order (G1)
         rel_pos: list[int] = []
         # per released row: a cluster index, or -1 - t for a suppression
         # snapshot of bounds row t
         rel_box: list[int] = []
-        t = 0
-        glo, ghi = glo_acc[0], ghi_acc[0]
 
-        def best_fitting(q):
-            """G7+G8+G9 over the live clusters, vectorized: the index of the
-            fitting cluster with least infoLoss (Generalizer.java:230-243;
-            fits: Cluster.java:55-62, strict), or -1."""
+        def best_fitting(q, t: int):
+            """G7+G8+G9: (index, infoLoss) of the live fitting cluster with
+            least infoLoss (Generalizer.java:230-243; fits: Cluster.java:55-62,
+            strict), or (-1, None).  Only fitting clusters are ranked; their
+            infoLoss sums the per-dimension terms in dimension order (a zero
+            or NaN global range adds 0), as numpy's ``mean`` over d <= 8
+            terms does."""
             if head == m:
-                return -1
-            fits = np.all(q > cl_lo[head:m], axis=1) & np.all(q < cl_hi[head:m], axis=1)
-            if not fits.any():
-                return -1
-            grange = ghi - glo
-            diffs = cl_wid[head:m]
-            ils = np.divide(diffs, grange, out=np.zeros_like(diffs), where=grange > 0).mean(axis=1)
-            ils[~fits] = np.inf
-            return head + int(np.argmin(ils))  # first min == first-created
+                return -1, None
+            fits = np.ones(m - head, dtype=bool)
+            for j, v in enumerate(q.tolist()):
+                fits &= cl_lo[j, head:m] < v
+                fits &= cl_hi[j, head:m] > v
+            idx = np.flatnonzero(fits)
+            if not len(idx):
+                return -1, None
+            idx += head
+            ils = np.zeros(len(idx))
+            for j, g in enumerate(gr_acc[t].tolist()):
+                if g > 0:
+                    ils += cl_wid[j, idx] / g
+            ils /= d
+            b = int(ils.argmin())  # first min == first-created
+            return int(idx[b]), ils[b]
 
-        def info_loss(diff):
-            """G8 (Cluster.java:79-85) of a box of width ``diff``, with the
+        def info_loss(wid, gr):
+            """G8 (Cluster.java:79-85) of a box of widths ``wid``, with the
             zero-global-range guard."""
-            grange = ghi - glo
-            return float(np.divide(diff, grange, out=np.zeros_like(diff), where=grange > 0).mean())
+            s = 0.0
+            for w, g in zip(wid.tolist(), gr.tolist()):
+                if g > 0:
+                    s += w / g
+            return s / d
 
-        def release_without_cluster(pivot, q):
+        def release_without_cluster(pivot, q, t: int):
             """Reuse the best fitting old cluster, else suppress with a
             snapshot of the global bounds (G11) — the shared fallback of
             Generalizer.java:140-149 and :177-188."""
-            ci = best_fitting(q)
+            ci = best_fitting(q, t)[0]
             rel_pos.append(pivot)
             rel_box.append(ci if ci >= 0 else -1 - t)
 
-        def release_oldest(now: int) -> None:
-            """G12 release decision (Generalizer.java:136-189)."""
+        def release_oldest(buf, t: int, now: int):
+            """G12 release decision (Generalizer.java:136-189) at bounds row
+            ``t``; returns the rows still buffered."""
             nonlocal m
-            pivot = buf.pop(0)
+            pivot, rest = int(buf[0]), buf[1:]
             q = qids[pivot]
-            if len(buf) < k1:
+            if len(rest) < k1:
                 # cannot form a new cluster: reuse best old cluster or suppress
-                release_without_cluster(pivot, q)
-                return
+                release_without_cluster(pivot, q, t)
+                return rest
 
-            bidx = np.asarray(buf, dtype=np.int64)
-            buf_q = qids[bidx]
+            buf_q, gr = qids[rest], gr_acc[t]
             if cfg.legacy_distance:
                 # shipped-bug parity (Generalizer.java:356): (abs(delta)/hi)-lo
                 # over the raw legacy fields, no zero guard; NaN/Inf flow
                 # through the stable argsort (NaN ordered last)
                 with np.errstate(invalid="ignore", divide="ignore"):
-                    per_dim = np.abs(legacy[bidx] - legacy[pivot]) / ghi - glo
+                    per_dim = np.abs(legacy[rest] - legacy[pivot]) / ghi_acc[t] - glo_acc[t]
                 dists = per_dim.mean(axis=1)
             else:
                 # G5 intended: k-1 nearest by mean over dims of abs(delta)/(ghi-glo)
-                grange = ghi - glo
                 ad = np.abs(buf_q - q)
-                dists = np.divide(ad, grange, out=np.zeros_like(ad), where=grange > 0).mean(axis=1)
+                if all_pos[t]:
+                    dists = np.add.reduce(ad / gr, axis=1) / d  # == .mean(axis=1)
+                else:
+                    dists = np.divide(ad, gr, out=np.zeros_like(ad), where=pos_acc[t]).mean(axis=1)
             if cfg.distinct_pids:
                 # Intended PID-uniqueness filter (Generalizer.java:205-216, the
                 # commented-out check): walk the stable distance order, greedily
@@ -228,10 +249,10 @@ class FADSState:
                 # If fewer than k-1 unique-PID neighbours exist, knn() returns
                 # null and the caller reuses an old cluster / suppresses; the
                 # buffer is untouched (Generalizer.java:177-188).
-                bpids = pids[bidx]
+                bpids = pids[rest]
                 chosen: list[int] = []
                 seen: set = set()
-                for j in np.argsort(dists, kind="stable"):
+                for j in dists.argsort(kind="stable"):
                     pid = bpids[j]
                     if pid in seen:
                         continue
@@ -240,75 +261,72 @@ class FADSState:
                     if len(chosen) == k1:
                         break
                 if len(chosen) < k1:
-                    release_without_cluster(pivot, q)
-                    return
-                order = np.asarray(chosen)
+                    release_without_cluster(pivot, q, t)
+                    return rest
+                order = chosen
             else:
-                order = np.argsort(dists, kind="stable")[:k1]
+                order = dists.argsort(kind="stable")[:k1]
 
             # G6: cluster box over the k-1 *neighbours only* (the pivot is
             # generalized with the neighbours' box even if it lies outside —
             # shipped reference behavior, Generalizer.java:155,173)
             nb_q = buf_q[order]
-            knn_lo = nb_q.min(axis=0)
-            knn_hi = nb_q.max(axis=0)
+            knn_lo, knn_hi = np.minimum.reduce(nb_q), np.maximum.reduce(nb_q)
             knn_wid = knn_hi - knn_lo
 
-            ci = best_fitting(q)
-            if ci >= 0 and info_loss(cl_wid[ci]) < info_loss(knn_wid):
+            ci, il = best_fitting(q, t)
+            if ci >= 0 and il < info_loss(knn_wid, gr):
                 # reuse old cluster; neighbours stay buffered (Generalizer.java:162-165)
                 rel_pos.append(pivot)
                 rel_box.append(ci)
-                return
+                return rest
 
-            # release pivot + neighbours with the new cluster, cache it
-            # (Generalizer.java:166-176)
-            ci = m
-            nb_set = {int(j) for j in order}
-            kept: list[int] = []
-            for p, ri in enumerate(buf):
-                if p in nb_set:
-                    rel_pos.append(ri)
-                    rel_box.append(ci)
-                else:
-                    kept.append(ri)
-            buf[:] = kept
+            # release pivot + neighbours (in buffer order) with the new
+            # cluster, cache it (Generalizer.java:166-176)
+            nb = np.zeros(len(rest), dtype=bool)
+            nb[order] = True
+            rel_pos.extend(rest[nb].tolist())
             rel_pos.append(pivot)
-            rel_box.append(ci)
-            cl_lo[m], cl_hi[m], cl_wid[m] = knn_lo, knn_hi, knn_wid
+            rel_box.extend([m] * k)
+            cl_lo[:, m], cl_hi[:, m], cl_wid[:, m] = knn_lo, knn_hi, knn_wid
             born.append(now)
             m += 1
+            return rest[~nb]
 
-        now = self.last_arrival
+        # release-driven: append the rows up to the next buffer overflow at
+        # once, then expire (G3 TTL, Generalizer.java:117-120) and release.
+        # Arrivals within a call are nondecreasing, so expiring once at the
+        # overflow row equals expiring at every row before it.
+        pos = np.arange(c + n)
+        buf, nxt, t, now = pos[:c], c, 0, self.last_arrival
         arr = arrivals.tolist()
-        for t in range(1, n + 1):
-            i = c + t - 1
-            now = arr[i]
-            buf.append(i)
-            glo, ghi = glo_acc[t], ghi_acc[t]
-            # G3 TTL expiry (Generalizer.java:117-120)
+        while nxt < c + n:
+            step = min(B + 1 - len(buf), c + n - nxt)
+            buf = np.concatenate((buf, pos[nxt : nxt + step]))
+            nxt += step
+            t, now = nxt - c, arr[nxt - 1]
             while head < m and born[head] + reuse < now:
                 head += 1
             if len(buf) > B:
-                release_oldest(now)
+                buf = release_oldest(buf, t, now)
         if drain:
             # G14 end-of-stream flush: bounds frozen at the last row, no expiry
-            while buf:
-                release_oldest(now)
+            while len(buf):
+                buf = release_oldest(buf, t, now)
 
         # gather the released intervals: cluster boxes, then bounds snapshots
         box = np.asarray(rel_box, dtype=np.int64)
         idx = np.where(box >= 0, box, m - 1 - box)
-        lo_tab = np.concatenate([cl_lo[:m], glo_acc])
-        hi_tab = np.concatenate([cl_hi[:m], ghi_acc])
+        lo_tab = np.concatenate([cl_lo[:, :m].T, glo_acc])
+        hi_tab = np.concatenate([cl_hi[:, :m].T, ghi_acc])
         out = ReleasedBatch(row_ids[np.asarray(rel_pos, dtype=np.int64)], lo_tab[idx], hi_tab[idx])
 
         # write back: bounds, the kept rows, the live clusters (copied out of
-        # the call's table, so the table's spare capacity is freed)
+        # the call's table as (m, d) rows, so its spare capacity is freed)
         self.glo, self.ghi = glo_acc[-1].copy(), ghi_acc[-1].copy()
         self.last_arrival = now
         self.buffer = list(zip(row_ids[buf], qids[buf], arrivals[buf], pids[buf], legacy[buf]))
         self.clusters = _Clusters(
-            cl_lo[head:m].copy(), cl_hi[head:m].copy(), np.array(born[head:], dtype=np.int64)
+            cl_lo[:, head:m].T.copy(), cl_hi[:, head:m].T.copy(), np.array(born[head:], dtype=np.int64)
         )
         return out

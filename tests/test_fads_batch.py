@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -460,6 +462,121 @@ def test_busy_cluster_table_matches_oracle():
     assert np.array_equal(chunked.row_ids[order], np.arange(n))
     np.testing.assert_array_equal(chunked.lo[order], exp_lo)
     np.testing.assert_array_equal(chunked.hi[order], exp_hi)
+
+
+def _edge_case(name: str):
+    """(qids, arrivals, cfg) of one engine edge case: 600 rows ~100 ms
+    apart on small integer grids, so boxes contain later rows strictly and
+    many clusters tie on infoLoss."""
+    rng = np.random.default_rng(3)
+    n = 600
+    arrivals = np.floor(np.cumsum(rng.exponential(100.0, n))).astype(np.int64)
+    grid = rng.integers(0, 40, (n, 4)).astype(float)
+    d, kw = 3, {}
+    if name == "constant_col":  # zero global range for the whole run
+        grid[:, 0] = 7.0
+    elif name == "range_opens_mid_call":  # range 0 -> > 0 at row 50
+        grid[:50, 0] = 3.0
+    elif name in ("d1", "d4"):
+        d = int(name[1])
+    elif name == "duplicate_rows":  # exact duplicates: tied distances and infoLoss
+        grid = rng.integers(0, 8, (60, 4)).astype(float)[rng.integers(0, 60, n)]
+    elif name == "reuse0":
+        kw = {"reuse_ms": 0}
+    elif name == "ttl_mid_call":  # clusters expire within one call
+        kw = {"reuse_ms": 5_000}
+    cols = ("a", "b", "c", "e")[:d]
+    cfg = FADSConfig(k=5, buffer_rows=15, qid_cols=cols, pid_col="p", arrival_col="t", **kw)
+    return grid[:, :d].copy(), arrivals, cfg
+
+
+def _oracle_bounds(qids, arrivals, cfg):
+    n = len(qids)
+    expected = fads_oracle(list(zip(range(n), map(tuple, qids.tolist()), arrivals.tolist())), cfg)
+    return (np.array([expected[i][0] for i in range(n)]),
+            np.array([expected[i][1] for i in range(n)]))
+
+
+def _released_by_row(parts) -> ReleasedBatch:
+    """Concatenated releases, sorted by row id."""
+    out = ReleasedBatch(*map(np.concatenate, zip(*parts)))
+    order = np.argsort(out.row_ids)
+    return ReleasedBatch(out.row_ids[order], out.lo[order], out.hi[order])
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["constant_col", "range_opens_mid_call", "d1", "d4", "duplicate_rows", "reuse0",
+     "ttl_mid_call"],
+)
+def test_engine_edge_cases_equal_oracle_exactly(case):
+    """One-shot and 7-chunk ``FADSState`` runs equal the oracle bit for bit
+    on zero and opening global ranges, one and four QIDs, exact duplicate
+    rows (first-created cluster wins a tie) and clusters that expire mid-call."""
+    qids, arrivals, cfg = _edge_case(case)
+    exp_lo, exp_hi = _oracle_bounds(qids, arrivals, cfg)
+    for n_chunks in (1, 7):
+        state = FADSState(cfg)
+        parts = [
+            state.process(idx, qids[idx], arrivals[idx])
+            for idx in np.array_split(np.arange(len(qids)), n_chunks)
+        ]
+        got = _released_by_row([*parts, state.flush()])
+        np.testing.assert_array_equal(got.row_ids, np.arange(len(qids)))
+        np.testing.assert_array_equal(got.lo, exp_lo)
+        np.testing.assert_array_equal(got.hi, exp_hi)
+
+
+def test_late_batch_processed_like_the_oracle():
+    """A batch whose arrivals lie below the previous batch's last arrival
+    (out of G1 order) is processed as the oracle processes the same row
+    sequence: nothing is raised, and a cluster expires only once the clock
+    passes its creation time + reuse_ms again."""
+    qids, arrivals, cfg = _edge_case("ttl_mid_call")
+    late = arrivals[300:] - arrivals[300]  # restarts at 0, below batch 1's clock
+    arrivals = np.concatenate([arrivals[:300], late])
+    exp_lo, exp_hi = _oracle_bounds(qids, arrivals, cfg)
+    state = FADSState(cfg)
+    parts = [state.process(idx, qids[idx], arrivals[idx]) for idx in (np.arange(300), np.arange(300, 600))]
+    got = _released_by_row([*parts, state.flush()])
+    np.testing.assert_array_equal(got.lo, exp_lo)
+    np.testing.assert_array_equal(got.hi, exp_hi)
+
+
+def _busy_pdf(n: int = 4000) -> pd.DataFrame:
+    """The reference job's arrival density: 1,000 rows/s, no expiry."""
+    rng = np.random.default_rng(5)
+    arrival = np.floor(np.cumsum(rng.exponential(1.0, n))).astype(np.int64)
+    return pd.DataFrame(
+        {
+            "event_id": np.arange(n),
+            "user_id": rng.integers(0, 1500, n).astype(float),
+            "value": rng.exponential(50.0, n).round(2),
+            "ts_millis": arrival.astype(float),
+            "arrival_ms": arrival,
+        }
+    )
+
+
+def test_engine_prints_nothing_and_bounds_stay_finite(capfd):
+    """The engine writes nothing to stdout (a benchmark's result line is the
+    last stdout line of its process) and every released bound is finite, so
+    a width metric over them is strict JSON."""
+    pdf, cfg = _busy_pdf(), FADSConfig()
+    out = run_fads_pandas(pdf, cfg)
+    qids, arrivals, pids, _ = _frame_inputs(pdf, cfg)
+    state = FADSState(cfg)
+    parts = [
+        state.process(idx, qids[idx], arrivals[idx], pids[idx])
+        for idx in np.array_split(np.arange(len(pdf)), 2)
+    ]
+    chunked = _released_by_row([*parts, state.flush()])
+    assert capfd.readouterr().out == ""
+    batch = (out[[f"{q}_lo" for q in cfg.qid_cols]].to_numpy(),
+             out[[f"{q}_hi" for q in cfg.qid_cols]].to_numpy())
+    for lo, hi in (batch, (chunked.lo, chunked.hi)):
+        assert np.isfinite(lo).all() and np.isfinite(hi).all()
+        json.dumps({"mean_width": float(np.mean(hi - lo))}, allow_nan=False)
 
 
 @pytest.mark.parametrize(
