@@ -722,15 +722,16 @@ _KNN_EVAL_K = 10
 
 
 def _knn_label_sql() -> str:
-    from pyfads.llm_queries import DIM, _dot_sql, _norm_sql
+    from pyfads.golden import _dot_sql, _norm_sql
+    from pyfads.llm_queries import DIM
 
     return f"""
-WITH e AS (SELECT * FROM embeddings e0 WHERE {_norm_sql('e0', DIM)} > 0),
+WITH e AS (SELECT * FROM embeddings e0 WHERE {_norm_sql('e0.embedding', DIM)} > 0),
 q AS (SELECT * FROM e WHERE vec_id < {_KNN_EVAL_Q}),
 pairs AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id, c.label AS n_label,
-         ({_dot_sql('q', 'c', DIM)})
-           / ({_norm_sql('q', DIM)} * {_norm_sql('c', DIM)}) AS cosine
+         ({_dot_sql('q.embedding', 'c.embedding', DIM)})
+           / ({_norm_sql('q.embedding', DIM)} * {_norm_sql('c.embedding', DIM)}) AS cosine
   FROM q JOIN e c ON q.vec_id <> c.vec_id
 ),
 nn AS (

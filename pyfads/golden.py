@@ -324,46 +324,36 @@ def taxi_job_composed_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
-def _fold_dot(vec_expr: str, lit_list: str, dim: int) -> str:
-    """list_reduce left fold of vec[i]::DOUBLE * literal[i] — same
-    left-associated sum as numpy's sequential order up to BLAS reassociation
-    (sign-stable: |dot| ~ O(sqrt(dim)) for the Gaussian fixtures, rounding
-    differences ~1e-13)."""
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {dim + 1}),"
-        f" i -> {vec_expr}[i]::DOUBLE * ({lit_list})[i])), (acc, x) -> acc + x)"
-    )
+def _fold_sql(terms: str) -> str:
+    """DuckDB left fold ``0.0 + t1 + t2 + ...`` over the list expression
+    ``terms``.  list_prepend(0.0) seeds it like Spark's
+    ``aggregate(..., 0.0D, +)`` and list_reduce adds in list order, so the
+    sum is bit-identical to the Spark fold (proven by ann_cosine_dim1024)
+    and to numpy's similarity.fold_dots replay; unlike a ``+`` chain it
+    stays under DuckDB's max_expression_depth at any length."""
+    return f"list_reduce(list_prepend(0.0::DOUBLE, {terms}), (acc, x) -> acc + x)"
 
 
-# DuckDB twins of similarity.dot_expr/norm_expr: explicit chain below the
-# codegen-cliff dimension, list_reduce left fold above (list_prepend(0.0)
-# makes the fold 0.0 + t1 + t2 + ... — bit-identical to Spark's
-# F.aggregate(zip_with(...), 0.0, +), proven by ann_cosine_dim1024).
+# Spark's dot_expr/norm_expr write the explicit chain up to this dimension
+# (the codegen cliff) and fold above it.
 _CHAIN_MAX_DIM = 128
 
 
-def _chain_dot_sql(a: str, b: str, dim: int) -> str:
-    if dim > _CHAIN_MAX_DIM:
-        return (
-            f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {dim + 1}),"
-            f" i -> {a}.embedding[i]::DOUBLE * {b}.embedding[i]::DOUBLE)), (acc, x) -> acc + x)"
+def _dot_sql(a: str, b: str, dim: int, fold: bool = False) -> str:
+    """Left-associated dot of the list expressions ``a`` and ``b`` over
+    elements 1..dim, each widened to DOUBLE before the multiply — the twin
+    of similarity.dot_expr (chain up to _CHAIN_MAX_DIM, fold above), or
+    with ``fold=True`` of similarity._dot_fold, which folds at every dim."""
+    if fold or dim > _CHAIN_MAX_DIM:
+        return _fold_sql(
+            f"list_transform(range(1, {dim + 1}), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)"
         )
-    return " + ".join(
-        f"{a}.embedding[{i}]::DOUBLE * {b}.embedding[{i}]::DOUBLE" for i in range(1, dim + 1)
-    )
+    return " + ".join(f"{a}[{i}]::DOUBLE * {b}[{i}]::DOUBLE" for i in range(1, dim + 1))
 
 
-def _chain_norm_sql(a: str, dim: int) -> str:
-    if dim > _CHAIN_MAX_DIM:
-        sq = (
-            f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {dim + 1}),"
-            f" i -> {a}.embedding[i]::DOUBLE * {a}.embedding[i]::DOUBLE)), (acc, x) -> acc + x)"
-        )
-    else:
-        sq = " + ".join(
-            f"{a}.embedding[{i}]::DOUBLE * {a}.embedding[{i}]::DOUBLE" for i in range(1, dim + 1)
-        )
-    return f"sqrt({sq})"
+def _norm_sql(a: str, dim: int, fold: bool = False) -> str:
+    """L2 norm of the list expression ``a``, in :func:`_dot_sql`'s form."""
+    return f"sqrt({_dot_sql(a, a, dim, fold)})"
 
 
 def _embeddings_cte(tile: int) -> str:
@@ -379,9 +369,9 @@ def _cosine_rerank_sql(dim: int, k: int) -> str:
     """Shared tail: candidate (q_id, neighbor_id) pairs -> exact cosine ->
     per-query row_number top-k.  Expects CTEs `e` (zero-norm-filtered
     embeddings) and `cand`."""
-    dot = _chain_dot_sql("a", "b", dim)
-    na = _chain_norm_sql("a", dim)
-    nb = _chain_norm_sql("b", dim)
+    dot = _dot_sql("a.embedding", "b.embedding", dim)
+    na = _norm_sql("a.embedding", dim)
+    nb = _norm_sql("b.embedding", dim)
     return f"""
 pairs AS (
   SELECT cand.q_id, cand.neighbor_id,
@@ -422,8 +412,8 @@ def ann_lsh_topk_oracle(
         for t in range(n_tables)
         for j in range(n_planes)
     )
-    norm = _chain_norm_sql("e0", dim)
-    dot = _fold_dot("e.embedding", "p.pvec", dim)
+    norm = _norm_sql("e0.embedding", dim)
+    dot = _dot_sql("e.embedding", "p.pvec", dim, fold=True)
     return f"""
 WITH planes(table_idx, plane_idx, pvec) AS (VALUES
   {vals}
@@ -463,15 +453,6 @@ def _embeddings_count(sf_dir: str) -> int:
     return int(n)
 
 
-def _documents_count(sf_dir: str) -> int:
-    import duckdb
-
-    con = duckdb.connect()
-    n = con.sql(f"SELECT count(*) FROM '{_table_path(sf_dir, 'documents')}'").fetchone()[0]
-    con.close()
-    return int(n)
-
-
 def _ivf_centroids(sf_dir: str, n_centroids: int, seed: int, tile: int = 1, sample_rows: "int | None" = None):
     """Replicates similarity.train_ivf_centroids outside Spark: same
     md5-ordered bounded sample (same default_codebook_sample sizing), same
@@ -503,8 +484,8 @@ def _ivf_centroids(sf_dir: str, n_centroids: int, seed: int, tile: int = 1, samp
 def _ann_ivf_cached(sf_dir: str, dim: int, k: int, n_centroids: int, n_probe: int, seed: int, n_queries: int, tile: int) -> str:
     cents = _ivf_centroids(sf_dir, n_centroids, seed, tile)
     vals = ",\n  ".join(f"({j}, {_vec_lit(cents[j])})" for j in range(len(cents)))
-    norm = _chain_norm_sql("e0", dim)
-    dot = _fold_dot("e.embedding", "c.cvec", dim)
+    norm = _norm_sql("e0.embedding", dim)
+    dot = _dot_sql("e.embedding", "c.cvec", dim, fold=True)
     return f"""
 WITH cents(cell, cvec) AS (VALUES
   {vals}
@@ -553,8 +534,8 @@ def _ann_ivf_filtered_cached(
     arithmetic, same rerank tail."""
     cents = _ivf_centroids(sf_dir, n_centroids, seed, 1)
     vals = ",\n  ".join(f"({j}, {_vec_lit(cents[j])})" for j in range(len(cents)))
-    norm = _chain_norm_sql("e0", dim)
-    dot = _fold_dot("e.embedding", "c.cvec", dim)
+    norm = _norm_sql("e0.embedding", dim)
+    dot = _dot_sql("e.embedding", "c.cvec", dim, fold=True)
     return f"""
 WITH cents(cell, cvec) AS (VALUES
   {vals}
@@ -679,26 +660,6 @@ def mmr_rerank_oracle(
     return _mmr_rerank_cached(oracle_sf_dir(), dim, k, pool, float(lam), n_queries)
 
 
-def _sem_fdot(a: str, b: str, dim: int) -> str:
-    """DuckDB left-fold dot — Spark forces the FOLD path for every
-    semantic-dedup expression (five 64-dim chains in one stage overflow
-    janino's 64KB method limit — see similarity.semantic_dedup); fold ==
-    chain bitwise (left-associated, seed 0.0 + t1 == t1), but the twin
-    folds anyway so equivalence is by construction, not by the doc
-    claim."""
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {dim + 1}),"
-        f" i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)), (acc, x) -> acc + x)"
-    )
-
-
-def _sem_fnorm(a: str) -> str:
-    return (
-        f"sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform({a},"
-        f" x -> x::DOUBLE * x::DOUBLE)), (acc, x) -> acc + x))"
-    )
-
-
 def _salt_key_sql(max_cell: int) -> str:
     """The DuckDB replay of similarity._salt_cells' sub-cell key: the
     id-ordered row_number split is deterministic, so both engines derive
@@ -726,8 +687,8 @@ def _semantic_tail(
     similarity._salt_cells' hot-cell cap on the pair join key;
     ``probe_margin`` replays the adaptive-probe boundary test
     (rank >= 2 probes kept only when dp1 - dp_r < margin * |v|)."""
-    pair_dot = _sem_fdot("ea.embedding", "eb.embedding", dim)
-    na, nb = (_sem_fnorm(f"{t}.embedding") for t in ("ea", "eb"))
+    pair_dot = _dot_sql("ea.embedding", "eb.embedding", dim, fold=True)
+    na, nb = (_norm_sql(f"{t}.embedding", dim, fold=True) for t in ("ea", "eb"))
     verify = (
         f"(pa.centroid_cos < pb.centroid_cos\n"
         f"        OR (pa.centroid_cos = pb.centroid_cos AND pa.vec_id < pb.vec_id))\n"
@@ -782,7 +743,7 @@ probe0 AS (
   JOIN ranked r1 ON r1.vec_id = r.vec_id AND r1.rn = 1
   JOIN e ON e.vec_id = r.vec_id
   WHERE r.rn >= 2 AND r.rn <= {n_assign}
-    AND (r1.dp - r.dp) < '{probe_margin!r}'::DOUBLE * ({_sem_fnorm("e.embedding")})
+    AND (r1.dp - r.dp) < '{probe_margin!r}'::DOUBLE * ({_norm_sql("e.embedding", dim, fold=True)})
 )"""
         if max_cell is not None:
             probe_sql = f"""{probe0_sql},
@@ -839,17 +800,16 @@ def _semantic_dedup_sql(
     replays the fold-dot argmax; centroid_cos and the pair cosine replay
     Spark's fold expressions term for term (:func:`_semantic_tail`)."""
     vals = ",\n  ".join(f"({j}, {_dvec_lit(cents[j])})" for j in range(len(cents)))
-    norm0 = _chain_norm_sql("e0", dim)
-    assign_dot = _fold_dot("e.embedding", "c.cvec", dim)
-    pchain = _sem_fdot("e.embedding", "c.cvec", dim)
-    ne = _sem_fnorm("e.embedding")
+    norm0 = _norm_sql("e0.embedding", dim)
+    dot = _dot_sql("e.embedding", "c.cvec", dim, fold=True)
+    ne = _norm_sql("e.embedding", dim, fold=True)
     return f"""
 WITH cents(cell, cvec) AS (VALUES
   {vals}
 ),
 e AS (SELECT vec_id, embedding FROM {src} e0 WHERE {norm0} > 0),
 celldot AS (
-  SELECT e.vec_id, c.cell, ({assign_dot}) AS dp
+  SELECT e.vec_id, c.cell, ({dot}) AS dp
   FROM e CROSS JOIN cents c
 ),
 assigned AS (
@@ -860,7 +820,7 @@ assigned AS (
   WHERE rn = 1
 ),
 withp AS (
-  SELECT a.vec_id, a.cell, ({pchain}) / ({ne}) AS centroid_cos
+  SELECT a.vec_id, a.cell, ({dot}) / ({ne}) AS centroid_cos
   FROM assigned a JOIN e ON e.vec_id = a.vec_id JOIN cents c ON c.cell = a.cell
 ),
 {_semantic_tail(dim, threshold, n_assign, max_cell, probe_margin)}"""
@@ -879,11 +839,10 @@ def _semantic_dedup_two_level_sql(
     fvals = ",\n  ".join(
         f"({j}, {int(fine_coarse[j])}, {_dvec_lit(fine[j])})" for j in range(len(fine))
     )
-    norm0 = _chain_norm_sql("e0", dim)
-    cdot = _fold_dot("e.embedding", "c.cvec", dim)
-    fdot = _fold_dot("e.embedding", "f.fvec", dim)
-    pchain = _sem_fdot("e.embedding", "f.fvec", dim)
-    ne = _sem_fnorm("e.embedding")
+    norm0 = _norm_sql("e0.embedding", dim)
+    cdot = _dot_sql("e.embedding", "c.cvec", dim, fold=True)
+    fdot = _dot_sql("e.embedding", "f.fvec", dim, fold=True)
+    ne = _norm_sql("e.embedding", dim, fold=True)
     return f"""
 WITH ccents(ccell, cvec) AS (VALUES
   {cvals}
@@ -916,7 +875,7 @@ assigned AS (
   WHERE rn = 1
 ),
 withp AS (
-  SELECT a.vec_id, a.cell, ({pchain}) / ({ne}) AS centroid_cos
+  SELECT a.vec_id, a.cell, ({fdot}) / ({ne}) AS centroid_cos
   FROM assigned a JOIN e ON e.vec_id = a.vec_id JOIN fcents f ON f.fid = a.cell
 ),
 {_semantic_tail(dim, threshold, 1)}"""
@@ -991,10 +950,10 @@ def _semantic_components_cached(
   FROM embeddings WHERE vec_id < {plant_n}
 )"""
     vals = ",\n  ".join(f"({j}, {_dvec_lit(cents[j])})" for j in range(len(cents)))
-    norm0 = _chain_norm_sql("e0", dim)
-    assign_dot = _fold_dot("e.embedding", "c.cvec", dim)
-    pair_dot = _sem_fdot("ea.embedding", "eb.embedding", dim)
-    na, nb = (_sem_fnorm(f"{t}.embedding") for t in ("ea", "eb"))
+    norm0 = _norm_sql("e0.embedding", dim)
+    assign_dot = _dot_sql("e.embedding", "c.cvec", dim, fold=True)
+    pair_dot = _dot_sql("ea.embedding", "eb.embedding", dim, fold=True)
+    na, nb = (_norm_sql(f"{t}.embedding", dim, fold=True) for t in ("ea", "eb"))
     return f"""
 WITH RECURSIVE cents(cell, cvec) AS (VALUES
   {vals}
@@ -1286,37 +1245,24 @@ def _ann_ivfpq_cached(
     # bit-exact ADC comparison.  '<repr>'::DOUBLE goes through strtod, which
     # is correctly rounded.  (cents feed only rank decisions, so they
     # tolerate the decimal path.)
-    def dvec(v) -> str:
-        return "[" + ", ".join(f"'{_lit(x)}'::DOUBLE" for x in v) + "]"
-
     sub_vals = ",\n  ".join(
-        f"({j + 1}, {kk}, {dvec(cb[j, kk])}, '{_lit(half_cn2[j, kk])}'::DOUBLE)"
+        f"({j + 1}, {kk}, {_dvec_lit(cb[j, kk])}, '{_lit(half_cn2[j, kk])}'::DOUBLE)"
         for j in range(m_sub)
         for kk in range(ksub)
     )
-    norm = _chain_norm_sql("e0", dim)
-    if dim > _CHAIN_MAX_DIM:
-        # fold form past the chain cutoff — matches Spark's norm_expr fold
-        # (left-associated 0.0 + t1 + ... — bit-identical, see _fold_dot)
-        norm_e = (
-            f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {dim + 1}),"
-            f" i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)), (acc, x) -> acc + x)"
-        )
-    else:
-        norm_e = " + ".join(
-            f"e.embedding[{i}]::DOUBLE * e.embedding[{i}]::DOUBLE" for i in range(1, dim + 1)
-        )
-    celldot = _fold_dot("e.embedding", "c.cvec", dim)
+    norm = _norm_sql("e0.embedding", dim)
+    # squared norm in Spark's norm_expr form (chain, or fold past the cutoff)
+    norm_e = _dot_sql("e.embedding", "e.embedding", dim)
+    celldot = _dot_sql("e.embedding", "c.cvec", dim, fold=True)
+
     # fold-dot of the normalized subvector j against a sub-centroid list —
     # 0.0 + t1 + ... left fold, identical to Spark's aggregate(zip_with)
-    subdot = (
-        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {dsub + 1}),"
-        f" i -> en.nv[(s.j - 1) * {dsub} + i] * s.cvec[i])), (acc, x) -> acc + x)"
-    )
-    qterm = (
-        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {dsub + 1}),"
-        f" i -> q.nv[(s.j - 1) * {dsub} + i] * s.cvec[i])), (acc, x) -> acc + x)"
-    )
+    def subdot(v: str) -> str:
+        return _fold_sql(
+            f"list_transform(range(1, {dsub + 1}),"
+            f" i -> {v}.nv[(s.j - 1) * {dsub} + i] * s.cvec[i])"
+        )
+
     return f"""
 WITH cents(cell, cvec) AS (VALUES
   {cent_vals}
@@ -1342,7 +1288,7 @@ cellrank AS (
 ccells AS (SELECT vec_id AS c_id, cell FROM cellrank WHERE rn <= 1),
 qcells AS (SELECT vec_id AS q_id, cell FROM cellrank WHERE rn <= {n_probe} AND vec_id < {n_queries}),
 subscore AS (
-  SELECT en.vec_id, s.j, s.k, ({subdot}) - s.half_cn2 AS score
+  SELECT en.vec_id, s.j, s.k, ({subdot("en")}) - s.half_cn2 AS score
   FROM en CROSS JOIN subcb s
 ),
 coderank AS (
@@ -1360,7 +1306,7 @@ cand AS (
   WHERE q_id <> c_id
 ),
 terms AS (
-  SELECT cand.q_id, cand.neighbor_id, s.j, ({qterm}) AS t
+  SELECT cand.q_id, cand.neighbor_id, s.j, ({subdot("q")}) AS t
   FROM cand
   JOIN en q ON q.vec_id = cand.q_id
   JOIN codes c ON c.vec_id = cand.neighbor_id
@@ -1368,8 +1314,7 @@ terms AS (
 ),
 adc AS (
   SELECT q_id, neighbor_id,
-         list_reduce(list_prepend(0.0::DOUBLE, list(t ORDER BY j)),
-                     (acc, x) -> acc + x) AS adc
+         {_fold_sql("list(t ORDER BY j)")} AS adc
   FROM terms GROUP BY q_id, neighbor_id
 )
 {_ivfpq_tail(dim, k, refine)}
@@ -1389,9 +1334,9 @@ FROM (
   FROM adc
 )
 WHERE rank <= {k}"""
-    dot = _chain_dot_sql("a", "b", dim)
-    na = _chain_norm_sql("a", dim)
-    nb = _chain_norm_sql("b", dim)
+    dot = _dot_sql("a.embedding", "b.embedding", dim)
+    na = _norm_sql("a.embedding", dim)
+    nb = _norm_sql("b.embedding", dim)
     return f""", shortlist AS (
   SELECT q_id, neighbor_id FROM (
     SELECT *, row_number() OVER (PARTITION BY q_id
@@ -1468,10 +1413,7 @@ def embedding_pca_oracle(dim: int = 64, out_dim: int = 8) -> str:
         # list_reduce left fold as the wide-dim oracles (order-guaranteed,
         # expression-depth-safe).
         cs = "[" + ", ".join(f"CAST('{comps[i, j]!r}' AS DOUBLE)" for i in range(dim)) + "]"
-        outs.append(
-            f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {dim + 1}),"
-            f" i -> embedding[i]::DOUBLE * ({cs})[i])), (acc, x) -> acc + x) AS y{j}"
-        )
+        outs.append(f"{_dot_sql('embedding', f'({cs})', dim, fold=True)} AS y{j}")
     return f"SELECT vec_id, {', '.join(outs)} FROM embeddings"
 
 
@@ -1492,14 +1434,11 @@ def ann_pca_lsh_topk_oracle(
 
     comps = _pca_components_cached(oracle_sf_dir(), out_dim)
     planes = _hyperplanes(out_dim, n_planes, n_tables, seed)
-    norm = _chain_norm_sql("e0", dim)
+    norm = _norm_sql("e0.embedding", dim)
     proj_cols = []
     for j in range(out_dim):
         cs = "[" + ", ".join(f"CAST('{comps[i, j]!r}' AS DOUBLE)" for i in range(dim)) + "]"
-        proj_cols.append(
-            f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {dim + 1}),"
-            f" i -> embedding[i]::DOUBLE * ({cs})[i])), (acc, x) -> acc + x) AS y{j}"
-        )
+        proj_cols.append(f"{_dot_sql('embedding', f'({cs})', dim, fold=True)} AS y{j}")
     # one bucket expression per table: left-assoc 8-term plane dot, CASE bit
     buckets = []
     for t in range(n_tables):
@@ -1623,39 +1562,24 @@ def _semantic_incremental_sql(
     assign cells via the fold-dot argmax against the same strtod centroid
     literals; a batch row's n_corpus_dups counts same-cell corpus vectors
     at fold-cosine >= threshold."""
-
-    def dvec(v) -> str:
-        return "[" + ", ".join(f"'{_lit(x)}'::DOUBLE" for x in v) + "]"
-
-    vals = ",\n  ".join(f"({j}, {dvec(cents[j])})" for j in range(len(cents)))
-    norm0 = _chain_norm_sql("e0", dim)
-
-    def fdot(a: str, b: str) -> str:
-        return (
-            f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {dim + 1}),"
-            f" i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)), (acc, x) -> acc + x)"
-        )
-
-    def fnorm(a: str) -> str:
-        return (
-            f"sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform({a},"
-            f" x -> x::DOUBLE * x::DOUBLE)), (acc, x) -> acc + x))"
-        )
+    vals = ",\n  ".join(f"({j}, {_dvec_lit(cents[j])})" for j in range(len(cents)))
+    norm0 = _norm_sql("e0.embedding", dim)
 
     def assign(side: str) -> str:
         return f"""(
   SELECT vec_id, cell FROM (
     SELECT e.vec_id, c.cell,
            row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_fold_dot("e.embedding", "c.cvec", dim)} DESC,
+                              ORDER BY {_dot_sql("e.embedding", "c.cvec", dim, fold=True)} DESC,
                                        c.cell) AS rn
     FROM {side} e CROSS JOIN cents c)
   WHERE rn = 1
 )"""
 
     cos = (
-        f"({fdot('eb.embedding', 'ec.embedding')})"
-        f" / (({fnorm('eb.embedding')}) * ({fnorm('ec.embedding')}))"
+        f"({_dot_sql('eb.embedding', 'ec.embedding', dim, fold=True)})"
+        f" / (({_norm_sql('eb.embedding', dim, fold=True)})"
+        f" * ({_norm_sql('ec.embedding', dim, fold=True)}))"
     )
     return f"""
 WITH cents(cell, cvec) AS (VALUES
@@ -1744,8 +1668,8 @@ def semantic_refresh_store_oracle(
     )
     cents = _ivf_centroids(sf, n_centroids, seed)
     vals = ",\n  ".join(f"({j}, {_dvec_lit(cents[j])})" for j in range(len(cents)))
-    norm0 = _chain_norm_sql("e0", dim)
-    assign_dot = _fold_dot("e.embedding", "c.cvec", dim)
+    norm0 = _norm_sql("e0.embedding", dim)
+    assign_dot = _dot_sql("e.embedding", "c.cvec", dim, fold=True)
     return f"""
 SELECT vec_id, cell FROM (
   WITH cents(cell, cvec) AS (VALUES
@@ -1874,9 +1798,9 @@ def _proto_prune_cached(
     # as DECIMAL and converts one ulp off for some values (the queries.py
     # float-literal parity rule), which only rank-consuming twins tolerate
     vals = ",\n  ".join(f"({j}, {_dvec_lit(cents[j])})" for j in range(len(cents)))
-    norm = _chain_norm_sql("e0", dim)
-    dot = _fold_dot("e.embedding", "c.cvec", dim)
-    fnorm = _sem_fnorm("e.embedding")
+    norm = _norm_sql("e0.embedding", dim)
+    dot = _dot_sql("e.embedding", "c.cvec", dim, fold=True)
+    fnorm = _norm_sql("e.embedding", dim, fold=True)
     return f"""
 WITH cents(cell, cvec) AS (VALUES
   {vals}
@@ -1921,8 +1845,8 @@ def _cell_purity_cached(sf_dir: str, dim: int, n_centroids: int, seed: int) -> s
     (count DESC, label ASC) tie, integer basis-point purity."""
     cents = _ivf_centroids(sf_dir, n_centroids, seed)
     vals = ",\n  ".join(f"({j}, {_vec_lit(cents[j])})" for j in range(len(cents)))
-    norm = _chain_norm_sql("e0", dim)
-    dot = _fold_dot("e.embedding", "c.cvec", dim)
+    norm = _norm_sql("e0.embedding", dim)
+    dot = _dot_sql("e.embedding", "c.cvec", dim, fold=True)
     return f"""
 WITH cents(cell, cvec) AS (VALUES
   {vals}

@@ -25,6 +25,7 @@ from pyfads import dedup as D
 from pyfads import multimodal as M
 from pyfads import similarity as S
 from pyfads import text as X
+from pyfads.golden import _dot_sql, _norm_sql
 from pyfads.io import read_table, spread
 from pyfads.queries import query
 from pyfads.streamrun import _chunk_key, _scratch_dir, chunked_source, run_to_completion
@@ -669,31 +670,16 @@ def dedup_simhash_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_QUERIES = 8  # bounded query set for the brute-force baseline
 
 
-def _dot_sql(a: str, b: str, dim: int = DIM) -> str:
-    return " + ".join(
-        f"{a}.embedding[{i}]::DOUBLE * {b}.embedding[{i}]::DOUBLE"
-        for i in range(1, dim + 1)
-    )
-
-
-def _norm_sql(a: str, dim: int = DIM) -> str:
-    sq = " + ".join(
-        f"{a}.embedding[{i}]::DOUBLE * {a}.embedding[{i}]::DOUBLE"
-        for i in range(1, dim + 1)
-    )
-    return f"sqrt({sq})"
-
-
 def _cosine_body_sql(dim: int) -> str:
     """Brute-force cosine top-10 body over the leading ``dim`` embedding
     coordinates — dim=DIM is the full baseline, a smaller dim is the
     Matryoshka prefix (embedding[1..dim] IS the slice)."""
     return f"""
-WITH e AS (SELECT * FROM embeddings e0 WHERE {_norm_sql('e0', dim)} > 0),
+WITH e AS (SELECT * FROM embeddings e0 WHERE {_norm_sql('e0.embedding', dim)} > 0),
 q AS (SELECT * FROM e WHERE vec_id < {_N_QUERIES}),
 pairs AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ({_dot_sql('q', 'c', dim)}) / ({_norm_sql('q', dim)} * {_norm_sql('c', dim)}) AS cosine
+         ({_dot_sql('q.embedding', 'c.embedding', dim)}) / ({_norm_sql('q.embedding', dim)} * {_norm_sql('c.embedding', dim)}) AS cosine
   FROM q JOIN e c ON q.vec_id <> c.vec_id
 )
 SELECT q_id, neighbor_id, cosine, rank
@@ -723,11 +709,11 @@ _MATRYOSHKA_SQL = _cosine_body_sql(_MRL_DIM)
 _MRL_SHORTLIST = 40  # 4x over-retrieval before the exact refine
 
 _MATRYOSHKA_REFINED_SQL = f"""
-WITH e AS (SELECT * FROM embeddings e0 WHERE {_norm_sql('e0', _MRL_DIM)} > 0),
+WITH e AS (SELECT * FROM embeddings e0 WHERE {_norm_sql('e0.embedding', _MRL_DIM)} > 0),
 q AS (SELECT * FROM e WHERE vec_id < {_N_QUERIES}),
 ppairs AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ({_dot_sql('q', 'c', _MRL_DIM)}) / ({_norm_sql('q', _MRL_DIM)} * {_norm_sql('c', _MRL_DIM)}) AS pcos
+         ({_dot_sql('q.embedding', 'c.embedding', _MRL_DIM)}) / ({_norm_sql('q.embedding', _MRL_DIM)} * {_norm_sql('c.embedding', _MRL_DIM)}) AS pcos
   FROM q JOIN e c ON q.vec_id <> c.vec_id
 ),
 short AS (
@@ -738,7 +724,7 @@ short AS (
 ),
 re AS (
   SELECT s.q_id, s.neighbor_id,
-         ({_dot_sql('a', 'b', DIM)}) / ({_norm_sql('a', DIM)} * {_norm_sql('b', DIM)}) AS cosine
+         ({_dot_sql('a.embedding', 'b.embedding', DIM)}) / ({_norm_sql('a.embedding', DIM)} * {_norm_sql('b.embedding', DIM)}) AS cosine
   FROM short s
   JOIN embeddings a ON a.vec_id = s.q_id
   JOIN embeddings b ON b.vec_id = s.neighbor_id
@@ -879,9 +865,9 @@ def _near_dup_sql(threshold: float = 0.9) -> str:
     Matches the Spark LSH result iff LSH recall is 1 on qualifying pairs —
     guaranteed for the planted scaled copies (identical sign bits) and
     vacuous otherwise (random Gaussians never reach cosine 0.9)."""
-    dot = " + ".join(f"a.embedding[{i}]::DOUBLE * b.embedding[{i}]::DOUBLE" for i in range(1, DIM + 1))
-    na = "sqrt(" + " + ".join(f"a.embedding[{i}]::DOUBLE * a.embedding[{i}]::DOUBLE" for i in range(1, DIM + 1)) + ")"
-    nb = "sqrt(" + " + ".join(f"b.embedding[{i}]::DOUBLE * b.embedding[{i}]::DOUBLE" for i in range(1, DIM + 1)) + ")"
+    dot = _dot_sql("a.embedding", "b.embedding", DIM)
+    na = _norm_sql("a.embedding", DIM)
+    nb = _norm_sql("b.embedding", DIM)
     return f"""
 WITH base AS (SELECT vec_id, embedding FROM embeddings),
 planted AS (
@@ -1409,7 +1395,7 @@ def ann_lsh_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _NORMS_SQL = f"""
-SELECT vec_id, {_norm_sql('embeddings')} AS l2_norm FROM embeddings
+SELECT vec_id, {_norm_sql('embeddings.embedding', DIM)} AS l2_norm FROM embeddings
 """
 
 
@@ -1642,33 +1628,15 @@ _DIM_WIDE = 1024
 _TILE = _DIM_WIDE // DIM  # deterministic widening: tile the 64-dim fixture
 
 
-def _wide_dot_sql(a: str, b: str) -> str:
-    # list_reduce over a 0.0-seeded list IS the left fold — bit-identical to
-    # Spark's F.aggregate and safely under DuckDB's expression-depth cap
-    # (a 1024-term `+` chain exceeds max_expression_depth=1000)
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {_DIM_WIDE + 1}),"
-        f" i -> {a}.emb[i]::DOUBLE * {b}.emb[i]::DOUBLE)), (acc, x) -> acc + x)"
-    )
-
-
-def _wide_norm_sql(a: str) -> str:
-    sq = (
-        f"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, {_DIM_WIDE + 1}),"
-        f" i -> {a}.emb[i]::DOUBLE * {a}.emb[i]::DOUBLE)), (acc, x) -> acc + x)"
-    )
-    return f"sqrt({sq})"
-
-
 _COSINE_WIDE_SQL = f"""
 WITH t AS (
   SELECT vec_id, {" || ".join(["embedding"] * _TILE)} AS emb FROM embeddings
 ),
-e AS (SELECT * FROM t e0 WHERE {_wide_norm_sql('e0')} > 0),
+e AS (SELECT * FROM t e0 WHERE {_norm_sql('e0.emb', _DIM_WIDE)} > 0),
 q AS (SELECT * FROM e WHERE vec_id < {_N_QUERIES}),
 pairs AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         ({_wide_dot_sql('q', 'c')}) / ({_wide_norm_sql('q')} * {_wide_norm_sql('c')}) AS cosine
+         ({_dot_sql('q.emb', 'c.emb', _DIM_WIDE)}) / ({_norm_sql('q.emb', _DIM_WIDE)} * {_norm_sql('c.emb', _DIM_WIDE)}) AS cosine
   FROM q JOIN e c ON q.vec_id <> c.vec_id
 )
 SELECT q_id, neighbor_id, cosine, rank
@@ -2803,11 +2771,11 @@ def _near_dup_wide_sql(threshold: float = 0.9) -> str:
     fixtures): fold-form dot/norm (bit-identical to Spark's aggregate
     fold), planted scaled copies recovered with guaranteed LSH recall
     (scaling preserves sign bits exactly)."""
-    from pyfads.golden import _chain_dot_sql, _chain_norm_sql, _embeddings_cte
+    from pyfads.golden import _embeddings_cte
 
-    dot = _chain_dot_sql("a", "b", _DIM_WIDE)
-    na = _chain_norm_sql("a", _DIM_WIDE)
-    nb = _chain_norm_sql("b", _DIM_WIDE)
+    dot = _dot_sql("a.embedding", "b.embedding", _DIM_WIDE)
+    na = _norm_sql("a.embedding", _DIM_WIDE)
+    nb = _norm_sql("b.embedding", _DIM_WIDE)
     return f"""
 WITH base AS (SELECT vec_id, embedding FROM {_embeddings_cte(_TILE)}),
 planted AS (
@@ -3245,12 +3213,12 @@ def dedup_substring_cdc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _HARD_NEG_SQL = f"""
-WITH e AS (SELECT * FROM embeddings e0 WHERE {_norm_sql('e0')} > 0),
+WITH e AS (SELECT * FROM embeddings e0 WHERE {_norm_sql('e0.embedding', DIM)} > 0),
 q AS (SELECT * FROM e WHERE vec_id < {_N_QUERIES}),
 pairs AS (
   SELECT q.vec_id AS q_id, CAST(q.label AS BIGINT) AS q_label,
          c.vec_id AS neighbor_id, CAST(c.label AS BIGINT) AS neighbor_label,
-         ({_dot_sql('q', 'c')}) / ({_norm_sql('q')} * {_norm_sql('c')}) AS cosine
+         ({_dot_sql('q.embedding', 'c.embedding', DIM)}) / ({_norm_sql('q.embedding', DIM)} * {_norm_sql('c.embedding', DIM)}) AS cosine
   FROM q JOIN e c ON q.vec_id <> c.vec_id AND q.label <> c.label
 )
 SELECT q_id, q_label, neighbor_id, neighbor_label, cosine, rank
@@ -3510,12 +3478,12 @@ _HARD_NEG_WIDE_SQL = f"""
 WITH t AS (
   SELECT vec_id, label, {" || ".join(["embedding"] * _TILE)} AS emb FROM embeddings
 ),
-e AS (SELECT * FROM t e0 WHERE {_wide_norm_sql('e0')} > 0),
+e AS (SELECT * FROM t e0 WHERE {_norm_sql('e0.emb', _DIM_WIDE)} > 0),
 q AS (SELECT * FROM e WHERE vec_id < {_N_QUERIES}),
 pairs AS (
   SELECT q.vec_id AS q_id, CAST(q.label AS BIGINT) AS q_label,
          c.vec_id AS neighbor_id, CAST(c.label AS BIGINT) AS neighbor_label,
-         ({_wide_dot_sql('q', 'c')}) / ({_wide_norm_sql('q')} * {_wide_norm_sql('c')}) AS cosine
+         ({_dot_sql('q.emb', 'c.emb', _DIM_WIDE)}) / ({_norm_sql('q.emb', _DIM_WIDE)} * {_norm_sql('c.emb', _DIM_WIDE)}) AS cosine
   FROM q JOIN e c ON q.vec_id <> c.vec_id AND q.label <> c.label
 )
 SELECT q_id, q_label, neighbor_id, neighbor_label, cosine, rank
@@ -4228,8 +4196,8 @@ WHERE rank <= 10
 """
 
 _SQ8_TOPK_SQL = (
-    _SQ8_TOPK_SQL_TMPL.replace("__NORM0__", _norm_sql("e0", DIM))
-    .replace("__NORM__", _norm_sql("e", DIM))
+    _SQ8_TOPK_SQL_TMPL.replace("__NORM0__", _norm_sql("e0.embedding", DIM))
+    .replace("__NORM__", _norm_sql("e.embedding", DIM))
     .replace("__NQ__", str(_N_QUERIES))
 )
 

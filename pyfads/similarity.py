@@ -783,27 +783,31 @@ def train_two_level_centroids(
 
 def _two_level_assign_udf(coarse: np.ndarray, fine: np.ndarray, fine_coarse: np.ndarray):
     """Hierarchical Arrow-batched quantizer: coarse fold-dot argmax, then
-    fold-dot argmax among the fine centroids OF that coarse cell; the
-    returned global cell id is the fine centroid's index.  Ties break to
-    the lowest cell at both stages (np.argmax takes the first max and the
-    per-cell fine indices are ascending) — exactly the oracle's ``dp DESC,
-    cell`` / ``dp DESC, fid`` row_numbers."""
+    fold-dot argmax among the fine centroids OF that coarse cell.  Returns
+    ``struct<cell int, dp double>``: the fine centroid's index (the global
+    cell id) and the fold dot it won with, like :func:`_rank_cells`'
+    ``__dp``.  Ties break to the lowest cell at both stages (np.argmax
+    takes the first max and the per-cell fine indices are ascending) —
+    exactly the oracle's ``dp DESC, cell`` / ``dp DESC, fid`` row_numbers."""
     C = np.ascontiguousarray(coarse, dtype=np.float64)
     Fm = np.ascontiguousarray(fine, dtype=np.float64)
     fc = np.asarray(fine_coarse, dtype=np.int64)
     groups = [np.where(fc == c)[0] for c in range(len(C))]
 
-    @F.pandas_udf(T.IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
+    @F.pandas_udf("cell int, dp double")
+    def assign(vecs: pd.Series) -> pd.DataFrame:
         m = np.vstack(vecs.to_numpy()).astype(np.float64)
         ca = top_cells(fold_dots(m, C), 1)[:, 0]
         out = np.empty(len(m), dtype=np.int32)
+        dp = np.empty(len(m), dtype=np.float64)
         for c in np.unique(ca):
             rows = np.where(ca == c)[0]
             idx = groups[c]
             fd = fold_dots(m[rows], Fm[idx])
-            out[rows] = idx[np.argmax(fd, axis=1)].astype(np.int32)
-        return pd.Series(out)
+            best = np.argmax(fd, axis=1)
+            out[rows] = idx[best].astype(np.int32)
+            dp[rows] = fd[np.arange(len(rows)), best]
+        return pd.DataFrame({"cell": out, "dp": dp})
 
     return assign
 
@@ -1156,19 +1160,19 @@ def _assign_cells(
     df: DataFrame, cents: "np.ndarray | tuple", id_col: str, vec_col: str
 ) -> DataFrame:
     """Single-cell assignment, any codebook shape — returns ``(id_col,
-    __v, cell)`` (plus ``__dp`` for a flat codebook).  A flat array is
-    ranked in-plan by :func:`_rank_cells`; a ``(coarse, fine,
-    fine_coarse)`` tuple takes the hierarchical two-stage UDF, so every
-    gate (incremental, served, streaming) accepts two-level codebooks."""
+    __v, cell, __dp)``, where ``__dp`` is the fold dot of ``__v`` with its
+    own cell's centroid (the fine centroid for a two-level codebook).  A
+    flat array is ranked in-plan by :func:`_rank_cells`; a ``(coarse,
+    fine, fine_coarse)`` tuple takes the hierarchical two-stage UDF, so
+    every gate (incremental, served, streaming) accepts two-level
+    codebooks."""
     if isinstance(cents, tuple):
-        coarse, fine, fine_coarse = cents
+        a = F.col("__a")
         return df.select(
             F.col(id_col),
             F.col(vec_col).alias("__v"),
-            _two_level_assign_udf(coarse, fine, fine_coarse)(F.col(vec_col)).alias(
-                "cell"
-            ),
-        )
+            _two_level_assign_udf(*cents)(F.col(vec_col)).alias("__a"),
+        ).select(id_col, "__v", a["cell"].alias("cell"), a["dp"].alias("__dp"))
     return _rank_cells(df, cents, id_col, vec_col)
 
 
@@ -1476,15 +1480,21 @@ def semantic_dedup(
     self-join on the int cell id — O(sum c_i^2) pair work, NEVER corpus
     all-pairs.  At 100 TB, size ``n_centroids`` so the expected cell is
     bounded (SemDeDup used 50k clusters for LAION-scale — two-level
-    n_coarse=4096 x n_fine=16 here); the centroid_cos
-    priority and the pair cosine are FOLD-form arithmetic (same
-    left-associated double sum as the chain, one higher-order expression
-    each): five 64-dim chains in one stage overflow janino's 64KB method
-    limit and drop the whole stage to interpreted projection (measured
-    20.6s -> fold fixed it), so this operator forces the fold path at
-    every dim; the DuckDB oracle folds identically.
+    n_coarse=4096 x n_fine=16 here).  The centroid_cos priority is the
+    assignment's own fold dot ``__dp`` over the row's fold norm, so the
+    codebook is never joined back.  Every dot and norm here is FOLD-form
+    arithmetic (same left-associated double sum as the chain, one
+    higher-order expression each): five 64-dim chains in one stage
+    overflow janino's 64KB method limit and drop the whole stage to
+    interpreted projection (measured 20.6s -> fold fixed it), so this
+    operator forces the fold path at every dim; the DuckDB oracle folds
+    identically.
     """
-    embeddings = drop_zero_norm(embeddings, dim, vec_col)
+    # drop_zero_norm's fold twin: its 64-term chain predicate, whole-stage
+    # compiled over the float->double cast a union with double vectors
+    # adds, re-casts the array once per term (sf0.1 dedup_semantic: 2.1 s
+    # for the filter alone vs 0.2 s folded)
+    embeddings = embeddings.filter(_norm_fold(vec_col) > 0)
     if two_level and centroids is None:
         centroids = train_two_level_centroids(
             embeddings, dim, n_centroids, n_fine, seed, id_col, vec_col
@@ -1499,22 +1509,11 @@ def semantic_dedup(
             "semantic_dedup: probe_margin gates the rank >= 2 probes — "
             "it requires n_assign >= 2"
         )
-    hierarchical = isinstance(cents, tuple)
-    codebook = cents  # full shape (tuple or flat) for _assign_cells
-    if hierarchical:
-        if n_assign > 1:
-            raise ValueError(
-                "multi-probe (n_assign > 1) is not supported with a "
-                "two-level codebook — probe the flat codebook instead"
-            )
-        cents = np.asarray(cents[1])  # cell id = fine index; priority vs fine
-    spark = embeddings.sparkSession
-    cents_df = F.broadcast(
-        spark.createDataFrame(
-            [(j, [float(x) for x in cents[j]]) for j in range(len(cents))],
-            "cell int, cvec array<double>",
+    if isinstance(cents, tuple) and n_assign > 1:
+        raise ValueError(
+            "multi-probe (n_assign > 1) is not supported with a "
+            "two-level codebook — probe the flat codebook instead"
         )
-    )
     probe_cols = []
     if n_assign > 1:
         # multi-probe ranks each vector ONCE: the probe-cell array rides the
@@ -1523,28 +1522,29 @@ def semantic_dedup(
         assigned = _rank_cells(embeddings, cents, id_col, vec_col, n_assign, probe_margin)
         probe_cols = ["__cells"]
     else:
-        assigned = _assign_cells(embeddings, codebook, id_col, vec_col)
+        assigned = _assign_cells(embeddings, cents, id_col, vec_col)
     # priority = cosine to the own-cell centroid; centroids are unit-norm
-    # by construction, so cos = dot / |v|.  The row's norm is computed
-    # ONCE here and carried through the pair join (the quadratic stage)
-    # instead of re-folded per candidate pair (code-review r8 #6) —
-    # bit-identical doubles, one-third the per-pair arithmetic.
+    # by construction, so cos = dp / |v| with dp the fold dot the
+    # assignment ranked by.  The row's norm is computed ONCE here and
+    # carried through the pair join (the quadratic stage) instead of
+    # re-folded per candidate pair — bit-identical doubles, one-third the
+    # per-pair arithmetic.
     # localCheckpoint (the embedding_near_dup_pairs pattern above): the
-    # scan + cell-assignment fold + norm/centroid folds run ONCE and only
-    # the materialized (id, vec, cell, 2 doubles) rows are re-read by the
+    # scan + cell-assignment fold + norm fold run ONCE and only the
+    # materialized (id, vec, cell, 2 doubles) rows are re-read by the
     # hot-cell cap check, BOTH self-join sides, and the final left join —
     # r11's eager `_cells_over_cap` over the un-checkpointed frame
     # re-evaluated the whole assignment subtree per action (~1.8x on the
     # dedup_semantic family in the r11 driver capture).  eager=False: the
     # cap check (or the first real job) materializes it.
     withp = (
-        assigned.join(cents_df, "cell")
+        assigned.withColumn("__n", _norm_fold("__v"))
         .select(
             id_col,
             "cell",
             "__v",
-            _norm_fold("__v").alias("__n"),
-            (_dot_fold("__v", "cvec") / _norm_fold("__v")).alias("centroid_cos"),
+            "__n",
+            (F.col("__dp") / F.col("__n")).alias("centroid_cos"),
             *probe_cols,
         )
         .localCheckpoint(eager=False)
@@ -1562,9 +1562,8 @@ def semantic_dedup(
     if (
         max_cell is not None
         and n_assign <= 1
-        # check the CHECKPOINTED frame (withp has the same rows/cells as
-        # assigned — an inner join to the complete 1-row-per-cell broadcast
-        # codebook), so the count pass reads cached blocks, not the plan
+        # check the CHECKPOINTED frame, so the count pass reads cached
+        # blocks, not the plan
         and _cells_over_cap(withp, max_cell)
     ):
         withp = _salt_cells(withp, id_col, max_cell)

@@ -485,6 +485,11 @@ def _edge_case(name: str):
         kw = {"reuse_ms": 0}
     elif name == "ttl_mid_call":  # clusters expire within one call
         kw = {"reuse_ms": 5_000}
+    elif name == "ttl_boundary":
+        # the first cluster is created at row 15's arrival and is the reuse
+        # choice of the release at row 80's arrival, which lands exactly on
+        # created + reuse_ms: the cluster is still live there (strict TTL)
+        kw = {"reuse_ms": int(arrivals[80] - arrivals[15])}
     cols = ("a", "b", "c", "e")[:d]
     cfg = FADSConfig(k=5, buffer_rows=15, qid_cols=cols, pid_col="p", arrival_col="t", **kw)
     return grid[:, :d].copy(), arrivals, cfg
@@ -507,12 +512,13 @@ def _released_by_row(parts) -> ReleasedBatch:
 @pytest.mark.parametrize(
     "case",
     ["constant_col", "range_opens_mid_call", "d1", "d4", "duplicate_rows", "reuse0",
-     "ttl_mid_call"],
+     "ttl_mid_call", "ttl_boundary"],
 )
 def test_engine_edge_cases_equal_oracle_exactly(case):
     """One-shot and 7-chunk ``FADSState`` runs equal the oracle bit for bit
     on zero and opening global ranges, one and four QIDs, exact duplicate
-    rows (first-created cluster wins a tie) and clusters that expire mid-call."""
+    rows (first-created cluster wins a tie), clusters that expire mid-call
+    and a reuse that arrives exactly at its cluster's expiry time."""
     qids, arrivals, cfg = _edge_case(case)
     exp_lo, exp_hi = _oracle_bounds(qids, arrivals, cfg)
     for n_chunks in (1, 7):

@@ -3169,6 +3169,53 @@ def test_semantic_dedup_multiprobe_ranks_once(spark, monkeypatch):
         assert plan.count("array_sort(") == 0 and plan.count("array_max(") == 1
 
 
+def test_semantic_dedup_priority_reads_assignment_dp(spark, monkeypatch):
+    """SemDeDup's keeper priority is the assignment's own fold dot over the
+    row's fold norm: semantic_dedup folds no second dot of ``__v``
+    against a joined codebook, yet ``centroid_cos`` stays bit-equal to the
+    numpy replay ``fold_dots(v, cents[cell]) / fold_norms(v)`` — for a
+    flat codebook in both literal forms, and for a two-level codebook
+    against the fine centroid, whose struct UDF is evaluated once."""
+    import numpy as np
+
+    embs = _synth_embs(spark, 400, dim=8).select(
+        "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
+    )
+    rows = embs.collect()
+    ids = [r["vec_id"] for r in rows]
+    m = np.array([r["embedding"] for r in rows], dtype=np.float32)
+    real = S._dot_fold
+    calls = []
+
+    def spy(*args):
+        calls.append(args[0])
+        return real(*args)
+
+    monkeypatch.setattr(S, "_dot_fold", spy)
+
+    def check(cb, cents):
+        calls.clear()
+        out = {
+            r["vec_id"]: (r["cell"], r["centroid_cos"])
+            for r in S.semantic_dedup(embs, 8, centroids=cb).collect()
+        }
+        assert "__v" not in calls, calls
+        cells = np.array([out[i][0] for i in ids])
+        want = S.fold_dots(m, cents)[np.arange(len(m)), cells] / S.fold_norms(m)
+        assert [out[i][1] for i in ids] == want.tolist()
+
+    cents = S.train_ivf_centroids(embs, dim=8, n_centroids=16, iters=5)
+    for literal in (True, False):
+        _literal_form(monkeypatch, literal)
+        check(cents, cents)
+    cb = S.train_two_level_centroids(embs, 8, n_coarse=4, n_fine=4, seed=7)
+    check(cb, cb[1])
+    assigned = S._assign_cells(embs, cb, "vec_id", "embedding")
+    plan = assigned.select("cell", F.col("__dp") / S._norm_fold("__v"))
+    plan = plan._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_ivfpq_cells_tie_break_to_lowest_cell(spark):
     """IVF-PQ's corpus cell and query probe cells break exact ties
     (duplicated centroids) to the LOWEST cell, like every other quantizer
